@@ -89,9 +89,8 @@ object Bench {
     // reference bottleneck ~100 ms/chunk => ~10 chunks/s/worker) and
     // steady-state hybrid-search latency over cached index frames
     // (reference: <100 ms with both legs + fusion).
-    val (chunksPerSec, hybridMs, hybridIvfMs, hybridHnswMs, hybridPqMs,
-         hybridMaxsimMs, chunkMs, embedMs, writeMs, keywordLegMs,
-         vectorLegMs) = {
+    val (chunksPerSec, hybridMs, hybridMaxsimMs, chunkMs, embedMs, writeMs,
+         keywordLegMs, vectorLegMs) = {
       val embedder = servingEmbedder
       val docs = servingDocs
       val cfg = servingCfg
@@ -197,67 +196,16 @@ object Bench {
       val vectorMs = medianMs(index, req.copy(mode = "semantic"))
       System.err.println(
         f"[hybrid] legs: keyword=${keywordMs}%.1f ms vector=${vectorMs}%.1f ms (single-leg mode, same index/definition)")
-      // IVF-pruned serving leg (flag in servingIndex): the vector scan job
-      // schedules only probed cell partitions. At sf0.1 latency is
-      // task-overhead-bound (any job costs ~30 ms), so the telemetry also
-      // reports SCAN VOLUME — the quantity pruning actually divides, and
-      // the lever that matters when cells are GB-sized at corpus scale.
-      val nLists = math.max(8, math.min(100, (nChunks / 500).toInt))
-      val nProbes = math.max(2, nLists / 4)
-      val ivfIndex = graft.search.HybridSearch.servingIndex(
-        chunks.toDF(), vectors, ivfLists = nLists, ivfProbes = nProbes)
-      graft.search.HybridSearch.search(ivfIndex, req, embedder) // warm
-      val ivfMs = medianMs(ivfIndex)
-      // HNSW-walked serving leg composed with the same IVF routing: the
-      // probed cells are walked, not scanned (the reference's published
-      // scale-up serving path, ref docs/deployment.md:985-996)
-      val hnswIndex = graft.search.HybridSearch.servingIndex(
-        chunks.toDF(), vectors, ivfLists = nLists, ivfProbes = nProbes,
-        hnswM = 16)
-      graft.search.HybridSearch.search(hnswIndex, req, embedder) // warm
-      val hnswMs = medianMs(hnswIndex)
-      // PQ-ADC serving leg with the same IVF routing: probed cells scan
-      // m-byte codes (32x smaller than the float rows) and only the
-      // refine budget reaches the exact re-rank — the memory-bound shape
-      val pqIndex = graft.search.HybridSearch.servingIndex(
-        chunks.toDF(), vectors, ivfLists = nLists, ivfProbes = nProbes,
-        pqM = 8, pqRefine = 64)
-      graft.search.HybridSearch.search(pqIndex, req, embedder) // warm
-      val pqMs = medianMs(pqIndex)
       // MaxSim rerank tier riding the brute layout (SearchRequest
       // maxsimTokens — the late-interaction serving slot): the delta vs
       // bruteMs is the tier's driver-side token-scoring cost
-      val msReq = req.copy(maxsimTokens = Some(8))
-      (1 to 3).foreach(_ => graft.search.HybridSearch.search(index, msReq, embedder)) // warm
-      val maxsimMs = {
-        val ts = (1 to 11).map { _ =>
-          val s0 = System.nanoTime()
-          graft.search.HybridSearch.search(index, msReq, embedder)
-          (System.nanoTime() - s0) / 1e6
-        }.sorted
-        ts(ts.length / 2)
-      }
-      val scannedRows = ivfIndex.serving.flatMap(_.ivf).map { iv =>
-        val probedParts = iv.centroids.map { case (lid, c) =>
-          (lid, graft.embed.VectorOps.cosine(c, embedder.embed(req.query)))
-        }.sortBy { case (lid, s) => (-s, lid) }.take(iv.nProbes)
-          .map { case (lid, _) => iv.partitionOf(lid) }.toSet
-        org.apache.spark.rdd.PartitionPruningRDD
-          .create(iv.rows, probedParts.contains).count()
-      }.getOrElse(nChunks)
+      val maxsimMs = medianMs(index, req.copy(maxsimTokens = Some(8)))
       System.err.println(
-        f"[hybrid] brute=${bruteMs}%.1f ms (scans $nChunks rows) " +
-          f"ivf(nLists=$nLists,probes=$nProbes)=${ivfMs}%.1f ms " +
-          f"(scans $scannedRows rows, ${100.0 * scannedRows / nChunks}%.0f%%) " +
-          f"hnsw(m=16,same routing)=${hnswMs}%.1f ms " +
-          f"pq(m=8,refine=64,same routing)=${pqMs}%.1f ms")
-      hnswIndex.serving.foreach(_.unpersist())
-      pqIndex.serving.foreach(_.unpersist())
+        f"[hybrid] brute=${bruteMs}%.1f ms (scans $nChunks rows) maxsim=${maxsimMs}%.1f ms")
       spark.conf.set("spark.sql.adaptive.enabled", savedAqe)
       spark.conf.set("spark.sql.shuffle.partitions", savedParts)
-      (nChunks / math.max(ingestSec, 1e-9), bruteMs, ivfMs, hnswMs, pqMs,
-        maxsimMs, phaseChunkMs, phaseEmbedMs, phaseWriteMs, keywordMs,
-        vectorMs)
+      (nChunks / math.max(ingestSec, 1e-9), bruteMs, maxsimMs, phaseChunkMs,
+        phaseEmbedMs, phaseWriteMs, keywordMs, vectorMs)
     }
     releaseStorage() // serving-index frames must not skew the streaming run
 
@@ -499,7 +447,7 @@ object Bench {
       "\"" + k + "\":" + f"{\"wall\":[$lo%.3f,$hi%.3f],\"cpu\":$c%.3f}"
     }.mkString("{", ",", "}")
     val passCount = if (passC.isDefined) 3 else 2
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","cpu_total":${"%.1f".format(totalCpu)},"passes":$passCount,"queries":$qs,"cpu":$cpuJson,"per_query":$perQuery,"drift":$drift,"errors":$errors,"sf":"$sfDir","ingest_chunks_per_s":${"%.1f".format(chunksPerSec)},"ingest_phase_ms":{"chunk":${"%.0f".format(chunkMs)},"embed":${"%.0f".format(embedMs)},"write":${"%.0f".format(writeMs)}},"hybrid_query_ms":${"%.1f".format(hybridMs)},"keyword_query_ms":${"%.1f".format(keywordLegMs)},"vector_query_ms":${"%.1f".format(vectorLegMs)},"hybrid_query_ms_ivf":${"%.1f".format(hybridIvfMs)},"hybrid_query_ms_hnsw":${"%.1f".format(hybridHnswMs)},"hybrid_query_ms_pq":${"%.1f".format(hybridPqMs)},"hybrid_query_ms_maxsim":${"%.1f".format(hybridMaxsimMs)},"hybrid_query_ms_postbattery":${"%.1f".format(hybridPostBatteryMs)},"upload_to_searchable_s":${"%.2f".format(uploadToSearchableS)},"reindex_to_searchable_s":${"%.2f".format(reindexToSearchableS)}}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","cpu_total":${"%.1f".format(totalCpu)},"passes":$passCount,"queries":$qs,"cpu":$cpuJson,"per_query":$perQuery,"drift":$drift,"errors":$errors,"sf":"$sfDir","ingest_chunks_per_s":${"%.1f".format(chunksPerSec)},"ingest_phase_ms":{"chunk":${"%.0f".format(chunkMs)},"embed":${"%.0f".format(embedMs)},"write":${"%.0f".format(writeMs)}},"hybrid_query_ms":${"%.1f".format(hybridMs)},"keyword_query_ms":${"%.1f".format(keywordLegMs)},"vector_query_ms":${"%.1f".format(vectorLegMs)},"hybrid_query_ms_maxsim":${"%.1f".format(hybridMaxsimMs)},"hybrid_query_ms_postbattery":${"%.1f".format(hybridPostBatteryMs)},"upload_to_searchable_s":${"%.2f".format(uploadToSearchableS)},"reindex_to_searchable_s":${"%.2f".format(reindexToSearchableS)}}"""
     println(line)
     // the driver's artifact keeps only the LAST 2000 chars of stdout, which
     // on drift-heavy runs truncates the per-query maps away — persist the
@@ -518,7 +466,7 @@ object Bench {
     // least the totals. The full line (with every per-query entry,
     // unchanged) still prints first AND lands in BENCH_FULL.json; nothing
     // is removed or renamed, this is purely an additional summary line.
-    val compact = s"""{"metric":"total","value":$total,"unit":"sec","cpu_total":${"%.1f".format(totalCpu)},"passes":$passCount,"n_queries":${results.size},"errors":$errors,"sf":"$sfDir","ingest_chunks_per_s":${"%.1f".format(chunksPerSec)},"hybrid_query_ms":${"%.1f".format(hybridMs)},"keyword_query_ms":${"%.1f".format(keywordLegMs)},"vector_query_ms":${"%.1f".format(vectorLegMs)},"hybrid_query_ms_ivf":${"%.1f".format(hybridIvfMs)},"hybrid_query_ms_hnsw":${"%.1f".format(hybridHnswMs)},"hybrid_query_ms_pq":${"%.1f".format(hybridPqMs)},"hybrid_query_ms_maxsim":${"%.1f".format(hybridMaxsimMs)},"hybrid_query_ms_postbattery":${"%.1f".format(hybridPostBatteryMs)},"upload_to_searchable_s":${"%.2f".format(uploadToSearchableS)},"reindex_to_searchable_s":${"%.2f".format(reindexToSearchableS)},"full_line":"BENCH_FULL.json"}"""
+    val compact = s"""{"metric":"total","value":$total,"unit":"sec","cpu_total":${"%.1f".format(totalCpu)},"passes":$passCount,"n_queries":${results.size},"errors":$errors,"sf":"$sfDir","ingest_chunks_per_s":${"%.1f".format(chunksPerSec)},"hybrid_query_ms":${"%.1f".format(hybridMs)},"keyword_query_ms":${"%.1f".format(keywordLegMs)},"vector_query_ms":${"%.1f".format(vectorLegMs)},"hybrid_query_ms_maxsim":${"%.1f".format(hybridMaxsimMs)},"hybrid_query_ms_postbattery":${"%.1f".format(hybridPostBatteryMs)},"upload_to_searchable_s":${"%.2f".format(uploadToSearchableS)},"reindex_to_searchable_s":${"%.2f".format(reindexToSearchableS)},"full_line":"BENCH_FULL.json"}"""
     println(compact)
     spark.stop()
   }

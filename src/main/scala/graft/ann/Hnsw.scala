@@ -12,7 +12,7 @@ package graft.ann
   * Against IVF (`ann/Ivf`): IVF prunes WHICH partitions scan, HNSW
   * replaces the intra-partition linear scan with a logarithmic graph
   * walk — the two compose (route to probed cells, walk the cell's
-  * graph), which is how the serving tier reaches graph-index latency at
+  * graph), which is how a partitioned index reaches graph-index latency at
   * high dimensionality without a global (unpartitionable) graph.
   *
   * Determinism: levels come from a hash of the point id (not RNG), so
@@ -96,60 +96,21 @@ object Hnsw {
     val maxLevel = levels.max
     val adj = Array.fill(maxLevel + 1, n)(
       new scala.collection.mutable.ArrayBuffer[Int](2 * m + 1))
-    insertLoop(ids, vecs, levels, adj, entry0 = -1, entryLevel0 = -1,
-      startIdx = 0, m, efConstruction)
+    insertLoop(ids, vecs, levels, adj, m, efConstruction)
   }
 
-  /** Incrementally insert `points` into an existing graph — the streaming
-    * upsert path: a micro-batch's new vectors extend the partition's
-    * graph with the SAME paper insertion procedure instead of a full
-    * rebuild (O(batch·ef·m) vs O(n·ef·m) distance evaluations). Ids
-    * already present are SKIPPED, so replayed batches are idempotent —
-    * the same at-least-once contract the rest of the ingest path keeps.
-    * New nodes draw levels from the grown corpus's level cap; existing
-    * nodes keep theirs (the paper's graphs are insertion-order-dependent
-    * anyway — determinism here means: same base graph + same batch =
-    * same result, which holds because batches insert in sorted-id order).
-    */
-  def insertAll(g: Graph, points: Seq[(Long, Array[Float])], m: Int = 16,
-      efConstruction: Int = 100): Graph = {
-    val existing = g.ids.toSet
-    val fresh = points.filterNot(p => existing.contains(p._1)).sortBy(_._1).toArray
-    if (fresh.isEmpty) return g
-    val nOld = g.size
-    val n = nOld + fresh.length
-    val ids = g.ids ++ fresh.map(_._1)
-    val vecs = g.vecs ++ fresh.map(p => normalize(p._2))
-    val maxPossible = math.max(1, (math.log(n.toDouble) / math.log(2.0)).toInt)
-    val newLevels = fresh.map(p => levelOf(p._1, maxPossible))
-    val levels = g.levels ++ newLevels
-    val maxLevel = math.max(g.maxLevel, newLevels.max)
-    val adj = Array.fill(maxLevel + 1, n)(
-      new scala.collection.mutable.ArrayBuffer[Int](2 * m + 1))
-    var l = 0
-    while (l < g.layers.length) {
-      var i = 0
-      while (i < nOld) { adj(l)(i) ++= g.layers(l)(i); i += 1 }
-      l += 1
-    }
-    insertLoop(ids, vecs, levels, adj, entry0 = g.entry, entryLevel0 = g.maxLevel,
-      startIdx = nOld, m, efConstruction)
-  }
-
-  /** The paper's insertion procedure over mutable adjacency, shared by
-    * [[build]] (startIdx 0, empty graph) and [[insertAll]] (startIdx =
-    * existing size, adjacency pre-seeded from the base graph). */
+  /** The paper's insertion procedure over mutable adjacency: points
+    * insert in array order into an initially empty graph. */
   private def insertLoop(ids: Array[Long], vecs: Array[Array[Float]],
       levels: Array[Int],
       adj: Array[Array[scala.collection.mutable.ArrayBuffer[Int]]],
-      entry0: Int, entryLevel0: Int, startIdx: Int,
       m: Int, efConstruction: Int): Graph = {
     val n = ids.length
     val maxLevel = adj.length - 1
     val m0 = 2 * m
 
-    var entry = entry0
-    var entryLevel = entryLevel0
+    var entry = -1
+    var entryLevel = -1
 
     // beam search used during construction, over current adjacency
     def searchLayer(q: Array[Float], ep: Int, ef: Int, layer: Int): Array[Int] = {
@@ -229,7 +190,7 @@ object Hnsw {
       }
     }
 
-    var idx = startIdx
+    var idx = 0
     while (idx < n) {
       val l = levels(idx)
       if (entry < 0) { entry = idx; entryLevel = l }

@@ -101,42 +101,12 @@ object Ivf {
     best
   }
 
-  /** Scalar twin of the build-time assignment for SERVING-SIDE routing of
-    * late-arriving vectors (cache upserts): L2-normalize, then the same
-    * ‖c‖² − 2x·c nearest-cell compare with lowest-id ties — a vector
-    * upserted later lands in exactly the cell the batch assignment would
-    * have chosen under the same centroids. */
-  def assignTo(centroids: Array[(Int, Array[Float])], emb: Array[Float]): Int = {
-    var n2 = 0.0
-    var i = 0
-    while (i < emb.length) { n2 += emb(i).toDouble * emb(i); i += 1 }
-    val nrm = math.sqrt(n2)
-    var best = Int.MaxValue
-    var bestScore = Double.MaxValue
-    centroids.sortBy(_._1).foreach { case (lid, c) =>
-      var dot = 0.0; var cn2 = 0.0
-      var j = 0
-      val m = math.min(c.length, emb.length)
-      while (j < m) {
-        val cj = c(j).toDouble
-        dot += cj * (if (nrm == 0.0) emb(j).toDouble else emb(j) / nrm)
-        cn2 += cj * cj
-        j += 1
-      }
-      // include the tail of c's own norm when dims mismatch (defensive)
-      while (j < c.length) { cn2 += c(j).toDouble * c(j); j += 1 }
-      val score = cn2 - 2.0 * dot
-      if (score < bestScore) { bestScore = score; best = lid }
-    }
-    best
-  }
-
   /** Default list count for a corpus of `rows` vectors: cells target
     * `rowsPerCell` members, clamped to [1, maxLists] — the reference's
     * `lists = clamp(rows/1000, 1, 100)` (VectorColumnManager.cs:98)
     * generalized: its cap of 100 fits a single-node Postgres; here the
     * cap defaults to 4096 (the k-means++ init-pool bound) so the
-    * nLists ∝ corpus contract the serving docs promise holds through
+    * nLists ∝ corpus contract holds through
     * far larger corpora before cell size starts growing linearly
     * (disclosed: past ~4M rows at the default, probe cost grows with
     * the corpus again — raise maxLists with the fleet size). */

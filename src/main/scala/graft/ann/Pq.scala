@@ -179,8 +179,7 @@ object Pq {
   }
 
   /** Scalar encoder — one vector to its m-byte code (nearest centroid per
-    * subspace, ties to the lowest code). The serving tier and streaming
-    * upserts use this directly; [[encode]] wraps it in a UDF. */
+    * subspace, ties to the lowest code); [[encode]] wraps it in a UDF. */
   def encodeOne(model: PqModel, emb: Array[Float]): Array[Byte] = {
     val v = l2norm(emb.map(_.toDouble))
     val code = new Array[Byte](model.m)

@@ -34,44 +34,6 @@ final case class ChunkingConfig(
     windowSize: Int = 3,          // sentence-window ±N
     prependHeaderPath: Boolean = true)
 
-/** A stored chunk row in the index warehouse (ref ChunkEntity.cs:5-21;
-  * container_id denormalized for partition pruning, architecture.md:270). */
-final case class ChunkRow(
-    chunk_id: String,
-    document_id: String,
-    container_id: String,
-    content: String,
-    chunk_index: Int,
-    token_count: Int,
-    start_offset: Int,
-    end_offset: Int,
-    metadata: Map[String, String],
-    tokens_simple: Seq[String],   // materialized tsvector analog ("simple")
-    tokens_english: Seq[String])  // Porter-stemmed ("english" config)
-
-/** A stored embedding row (ref ChunkVectorEntity.cs:8-22). */
-final case class ChunkVectorRow(
-    chunk_id: String,
-    document_id: String,
-    container_id: String,
-    embedding: Array[Float],
-    model_id: String,
-    content_hash: String,
-    dimensions: Int)
-
-/** Document ledger row (ref DocumentEntity.cs:5-24). */
-final case class DocumentRow(
-    document_id: String,
-    container_id: String,
-    file_name: String,
-    path: String,
-    content_hash: String,
-    size_bytes: Long,
-    chunk_count: Int,
-    generation: Int,
-    status: String, // Pending | Processing | Ready | Failed
-    indexed_with: Map[String, String]) // settings stamp for reindex detection
-
 /** One search hit (ref SearchModels.cs:15-20 SearchHit). */
 final case class SearchHit(
     chunk_id: String,

@@ -328,9 +328,9 @@ final case class ServingTokRow(
 object HybridSearch {
 
   /** Byte bound on each driver-resident serving copy (raw content chars
-    * for the keyword copy, 4 bytes/dim for the brute-vector copy) —
-    * enforced at build AND re-checked on every upsert, because the row
-    * cap alone would let 64k pathologically wide chunks OOM the driver. */
+    * for the keyword copy, 4 bytes/dim for the vector copy) — enforced
+    * at build, because the row cap alone would let 64k pathologically
+    * wide chunks OOM the driver. */
   val DriverCacheMaxBytes: Long = 256L << 20
 
   /** Pre-materialized row caches for the interactive serving path. The
@@ -344,130 +344,25 @@ object HybridSearch {
     * for RDDs: genuinely imperative per-partition serving logic, while every
     * analytical/oracled query stays on the DataFrame API.
     */
-  /** IVF layout for the serving vector leg (SURVEY §4.2's scale path,
-    * wired into serving per the r4 verdict stretch item): rows are
-    * HashPartitioner'd on their k-means cell id, centroids are held on
-    * the driver (list-count-sized), and a query runs its scan job ONLY on
-    * the partitions holding the nProbes closest cells
-    * (`PartitionPruningRDD` — unprobed partitions are never scheduled).
-    * Latency then scales with probed fraction, not corpus size: the same
-    * property that makes IVF the 100 TB shape for the warehouse scan
-    * (`ann/Ivf` cell-directory pruning), applied to the cached tier.
-    * Approximate by construction — probing every cell equals brute force
-    * (pinned by HybridSearchE2ESpec). */
-  final case class IvfServing(
-      centroids: Array[(Int, Array[Float])],
-      rows: org.apache.spark.rdd.RDD[ServingVecRow],
-      nParts: Int,
-      nProbes: Int,
-      /** Mean assignment distance (1 − cos to the assigned centroid)
-        * measured at FIT time — the baseline [[HybridSearch.servingDrift]]
-        * compares against to decide when frozen centroids have drifted
-        * enough to warrant a re-fit. */
-      fitMeanDist: Double = 0.0) {
-    /** Mirror of HashPartitioner.getPartition for Int keys. */
-    def partitionOf(listId: Int): Int =
-      ((listId.hashCode % nParts) + nParts) % nParts
-  }
-
-  /** One partition's HNSW graph plus the serving rows it indexes (graph
-    * node ids are indices into `rows`). */
-  final case class HnswPart(graph: graft.ann.Hnsw.Graph, rows: Array[ServingVecRow])
-
-  /** Graph-index layout for the serving vector leg (the reference's
-    * published scale-up serving path is an HNSW index,
-    * ref docs/deployment.md:985-996): partition-local small-world graphs
-    * ([[graft.ann.Hnsw]]) replace the intra-partition linear scan with a
-    * logarithmic walk, and COMPOSE with IVF routing — when `centroids` is
-    * non-empty the rows are cell-partitioned and a query walks only the
-    * probed cells' graphs (PartitionPruningRDD), so latency follows
-    * probes × log(cell), not corpus size. The walk yields a candidate
-    * set; candidates are re-scored with the exact serving-leg cosine, so
-    * every returned score is bit-identical to the brute leg and only
-    * RECALL is approximate (walk beam + skipped cells). At `ef` ≥ cell
-    * size the walk visits the whole connected graph and results equal
-    * the brute leg exactly (pinned in HybridSearchE2ESpec).
-    */
-  final case class HnswServing(
-      centroids: Array[(Int, Array[Float])],
-      parts: org.apache.spark.rdd.RDD[HnswPart],
-      nParts: Int,
-      nProbes: Int,
-      ef: Int,
-      m: Int = 16) {
-    def partitionOf(listId: Int): Int =
-      ((listId.hashCode % nParts) + nParts) % nParts
-  }
-
-  /** One partition's PQ codes plus the serving rows they quantize
-    * (codes(i) encodes rows(i).embedding). */
-  final case class PqPart(codes: Array[Array[Byte]], rows: Array[ServingVecRow])
-
-  /** Product-quantization layout for the serving vector leg
-    * ([[graft.ann.Pq]], Jégou et al. 2011): each cached row carries an
-    * m-byte code, and a query's partition scan becomes m table lookups
-    * per row (ADC) instead of a d-dim cosine — the MEMORY-BOUND serving
-    * shape (the code array is 32× smaller than the float32 embeddings,
-    * so the hot scan fits cache tiers the raw vectors overflow).
-    * Composes with IVF routing exactly like [[HnswServing]]: when
-    * `centroids` is non-empty only probed cells' partitions are
-    * scheduled. The ADC pass selects `refine` candidates per partition;
-    * candidates are re-scored with the exact serving-leg cosine, so
-    * every returned score is bit-identical to the brute leg and only
-    * RECALL is approximate (code distortion + skipped cells). At
-    * `refine` ≥ cell size every row survives to the exact re-rank and
-    * results equal the brute leg exactly (pinned in
-    * HybridSearchE2ESpec). */
-  final case class PqServing(
-      centroids: Array[(Int, Array[Float])],
-      model: graft.ann.Pq.PqModel,
-      parts: org.apache.spark.rdd.RDD[PqPart],
-      nParts: Int,
-      nProbes: Int,
-      refine: Int) {
-    def partitionOf(listId: Int): Int =
-      ((listId.hashCode % nParts) + nParts) % nParts
-  }
-
   final case class ServingCache(
       vecRows: org.apache.spark.rdd.RDD[ServingVecRow],
       tokRows: org.apache.spark.rdd.RDD[ServingTokRow],
-      ivf: Option[IvfServing] = None,
-      hnsw: Option[HnswServing] = None,
-      pq: Option[PqServing] = None,
       /** Driver-resident copy of `tokRows`, present ONLY while the corpus
-        * fits [[tokLocalCap]] (the autocut ≤100-row pattern at cache
-        * scale): the keyword leg then answers as a driver loop — zero
-        * Spark jobs, shedding the ~30 ms local-mode job floor that
+        * fits the build's row and byte caps (the autocut ≤100-row pattern
+        * at cache scale): the keyword leg then answers as a driver loop —
+        * zero Spark jobs, shedding the ~30 ms local-mode job floor that
         * dominated the leg's latency (BASELINE's < 20 ms row is a
         * Postgres GIN point lookup; the fair comparison is compute, not
-        * scheduler overhead). Above the cap this is None and the
+        * scheduler overhead). Above the caps this is None and the
         * distributed RDD leg serves — the 100 TB path is unchanged. */
       tokLocal: Option[IndexedSeq[ServingTokRow]] = None,
-      tokLocalCap: Int = 0,
-      /** Driver-resident copy of `vecRows` for the BRUTE vector leg —
-        * same contract as [[tokLocal]] (present only under the caps,
-        * and only when no ANN layout was built: IVF/HNSW/PQ already
-        * shed the full-scan cost their own way). The brute leg then
+      /** Driver-resident copy of `vecRows` — same contract as
+        * [[tokLocal]] (present only under the caps). The vector leg then
         * answers as the sliced driver scan, zero Spark jobs. */
-      vecLocal: Option[IndexedSeq[ServingVecRow]] = None,
-      /** Cumulative raw-content chars behind [[tokLocal]] and embedding
-        * bytes (4/dim) behind [[vecLocal]] — carried so upserts re-check
-        * the SAME 256 MB byte guards the build enforces: a stream of
-        * wide-chunk micro-batches that stays under the row cap must not
-        * grow the driver copies past the build-time bound. */
-      tokLocalBytes: Long = 0L,
-      vecLocalBytes: Long = 0L,
-      /** The byte bound both copies were built under — carried so
-        * upserts enforce the SAME cap the build did (settings-tunable
-        * via [[HybridSearch.servingIndex]]'s driverCacheMaxBytes). */
-      localBytesCap: Long = HybridSearch.DriverCacheMaxBytes) {
+      vecLocal: Option[IndexedSeq[ServingVecRow]] = None) {
     def unpersist(): Unit = {
       vecRows.unpersist(blocking = false)
       tokRows.unpersist(blocking = false)
-      ivf.foreach(_.rows.unpersist(blocking = false))
-      hnsw.foreach(_.parts.unpersist(blocking = false))
-      pq.foreach(_.parts.unpersist(blocking = false))
     }
   }
 
@@ -492,23 +387,18 @@ object HybridSearch {
     * partitions so a query pays per-task overhead, not data cost. One-time
     * build cost, amortized across every query of a long-lived session
     * (BASELINE.md compares steady-state latency; measured 203→~150 ms
-    * median at sf0.1).
+    * median at sf0.1). The vector leg is an exact brute-force scan: over
+    * the driver copy under the caps, over the cached RDD above them.
     */
   def servingIndex(
       chunks: DataFrame,
       vectors: DataFrame,
       partitions: Int = 4,
-      ivfLists: Int = 0,
-      ivfProbes: Int = 8,
-      hnswM: Int = 0,
-      hnswEf: Int = 60,
-      pqM: Int = 0,
-      pqRefine: Int = 64,
-      /** Corpus-size cap for the keyword leg's driver-resident fast path
-        * (see [[ServingCache.tokLocal]]); 0 disables it. The default is
+      /** Corpus-size cap for the driver-resident fast paths (see
+        * [[ServingCache.tokLocal]]); 0 disables them. The default is
         * tens of MB of driver heap at typical chunk sizes — small enough
         * to be free, large enough that an interactive single-box corpus
-        * answers keyword queries with no job scheduling at all. */
+        * answers queries with no job scheduling at all. */
       keywordDriverCacheMaxRows: Int = 65536,
       /** Byte bound on each driver-resident copy (content chars / 4
         * bytes-per-dim embeddings) — the second guard behind the row
@@ -547,8 +437,6 @@ object HybridSearch {
     // collect is skipped past 256 MB of raw content — row-count alone
     // would let 64k pathologically wide chunks (plus the 3-4x JVM
     // string/token-array expansion) OOM a modest driver at build time.
-    // The byte total is CARRIED in the cache so upsertServing re-checks
-    // the same bound as the copies grow.
     val tokLocalBytes: Long =
       if (keywordDriverCacheMaxRows > 0 && tokCount <= keywordDriverCacheMaxRows)
         chunksC.agg(coalesce(sum(length(col("content"))), lit(0L)))
@@ -558,93 +446,10 @@ object HybridSearch {
       if (tokLocalBytes <= driverCacheMaxBytes)
         Some(tokRows.collect().toIndexedSeq)
       else None
-    // opt-in IVF layout (ivfLists > 1, or ivfLists < 0 for the
-    // reference's AUTO-SIZING contract — Ivf.autoLists derives the cell
-    // count from the corpus so upserting into a growing warehouse keeps
-    // cells ~constant-sized instead of letting a caller constant decay):
-    // one build-time k-means, rows re-keyed by cell into cell-aligned
-    // partitions; vecRows stays the exact fallback (a scoped query with
-    // probes >= lists equals it)
-    val resolvedLists =
-      if (ivfLists >= 0) ivfLists
-      else graft.ann.Ivf.autoLists(denormC.count())
-    val ivf =
-      if (resolvedLists <= 1) None
-      else {
-        val built = graft.ann.Ivf.build(
-          denormC, nLists = resolvedLists, maxIter = 5,
-          fitSample = 0.25)
-        val cellRows = built.assigned
-          .select($"list_id", struct(
-            $"chunk_id", $"document_id", $"container_id", $"path",
-            $"content", $"metadata", $"model_id", $"embedding").as("row"))
-          .as[(Int, ServingVecRow)].rdd
-          .partitionBy(new org.apache.spark.HashPartitioner(resolvedLists))
-          .values.persist(StorageLevel.MEMORY_AND_DISK)
-        cellRows.count() // materialize
-        val centroids = built.centroids.as[(Int, Array[Float])].collect()
-        Some(IvfServing(centroids, cellRows, resolvedLists,
-          math.min(math.max(1, ivfProbes), resolvedLists),
-          fitMeanDist = meanAssignDist(cellRows, centroids)))
-      }
-    // opt-in HNSW layout (hnswM > 0): one partition-local graph per cached
-    // partition, composed with IVF cell routing when that layout exists —
-    // the query walks only the probed cells' graphs. Rows are sorted by
-    // chunk_id inside each partition so graph construction (and therefore
-    // the candidate walk) is a pure function of the partition's contents.
-    val hnsw =
-      if (hnswM <= 0) None
-      else {
-        val baseRows = ivf.map(_.rows).getOrElse(vecRows)
-        val graphParts = baseRows.mapPartitions { it =>
-          val rows = it.toArray.sortBy(_.chunk_id)
-          if (rows.isEmpty) Iterator.empty
-          else {
-            val pts = rows.indices.map(i => (i.toLong, rows(i).embedding))
-            Iterator.single(HnswPart(
-              graft.ann.Hnsw.build(pts, m = hnswM, efConstruction = 100), rows))
-          }
-        }.persist(StorageLevel.MEMORY_AND_DISK)
-        graphParts.count() // materialize: build cost paid at index time
-        Some(HnswServing(
-          ivf.map(_.centroids).getOrElse(Array.empty),
-          graphParts,
-          ivf.map(_.nParts).getOrElse(partitions),
-          ivf.map(_.nProbes).getOrElse(1),
-          hnswEf,
-          hnswM))
-      }
-    // opt-in PQ layout (pqM > 0): one build-time codebook fit, then each
-    // cached partition stores its rows' m-byte codes next to the rows —
-    // the ADC scan array. Shares the cell partitioning when IVF exists.
-    val pq =
-      if (pqM <= 0) None
-      else {
-        val model = graft.ann.Pq.fit(
-          denormC.select($"embedding"), "embedding", m = pqM,
-          ksub = 256, maxIter = 5, fitSample = 0.25)
-        val baseRows = ivf.map(_.rows).getOrElse(vecRows)
-        val codeParts = baseRows.mapPartitions { it =>
-          val rows = it.toArray.sortBy(_.chunk_id)
-          if (rows.isEmpty) Iterator.empty
-          else Iterator.single(PqPart(
-            rows.map(r => graft.ann.Pq.encodeOne(model, r.embedding)), rows))
-        }.persist(StorageLevel.MEMORY_AND_DISK)
-        codeParts.count() // materialize: encode cost paid at index time
-        Some(PqServing(
-          ivf.map(_.centroids).getOrElse(Array.empty),
-          model,
-          codeParts,
-          ivf.map(_.nParts).getOrElse(partitions),
-          ivf.map(_.nProbes).getOrElse(1),
-          pqRefine))
-      }
-    // brute-vector driver fast path (same caps as tokLocal, embeddings
-    // counted at 4 bytes/dim): only when NO ANN layout was built — the
-    // IVF/HNSW/PQ legs already shed the full-scan cost their own way,
-    // and holding a second full copy beside them would buy nothing
+    // vector driver fast path: same caps as tokLocal, embeddings counted
+    // at 4 bytes/dim
     val vecLocalBytes: Long =
-      if (ivf.isEmpty && hnsw.isEmpty && pq.isEmpty && tokLocal.isDefined)
+      if (tokLocal.isDefined)
         denormC.agg(coalesce(sum(size(col("embedding"))), lit(0L)))
           .head.getLong(0) * 4L
       else Long.MaxValue
@@ -653,255 +458,8 @@ object HybridSearch {
         Some(vecRows.collect().toIndexedSeq)
       else None
     Index(chunksC, denormC,
-      serving = Some(ServingCache(vecRows, tokRows, ivf, hnsw, pq,
-        tokLocal = tokLocal, tokLocalCap = keywordDriverCacheMaxRows,
-        vecLocal = vecLocal,
-        tokLocalBytes = if (tokLocal.isDefined) tokLocalBytes else 0L,
-        vecLocalBytes = if (vecLocal.isDefined) vecLocalBytes else 0L,
-        localBytesCap = driverCacheMaxBytes)))
+      serving = Some(ServingCache(vecRows, tokRows, tokLocal, vecLocal)))
   }
-
-  /** Absorb a micro-batch of new chunks/vectors into a serving cache
-    * WITHOUT a full rebuild — the streaming-upsert path for a long-lived
-    * serving tier. Every layout the cache holds is extended in place:
-    *   - flat row caches: union + re-materialize (O(batch) new blocks);
-    *   - IVF cells: each new vector routes to its cell under the EXISTING
-    *     centroids ([[graft.ann.Ivf.assignTo]] — the batch assignment's
-    *     scalar twin) and appends to that cell's partition;
-    *   - HNSW graphs: each probed cell's graph grows by the paper's
-    *     incremental insertion ([[graft.ann.Hnsw.insertAll]], O(batch·ef·m)),
-    *     never a rebuild.
-    * Centroids themselves are NOT refit — cells drift as the corpus
-    * grows, which only erodes recall, never scores (exact re-scoring).
-    * [[servingDrift]] MEASURES that drift (cell skew + assignment-
-    * distance growth) and [[maintainServing]] re-fits when a threshold
-    * trips — run it on the upsert cadence. The returned Index owns newly-persisted RDDs; the
-    * caller should `unpersist()` the old cache when in-flight queries
-    * drain. The columnar `chunks`/`vectors` frames remain the build-time
-    * snapshot (the serving legs never read them).
-    */
-  def upsertServing(index: Index, newChunks: DataFrame, newVectors: DataFrame): Index = {
-    import org.apache.spark.storage.StorageLevel
-    val cache = index.serving.getOrElse(
-      return servingIndex(newChunks, newVectors))
-    val spark = newChunks.sparkSession
-    import spark.implicits._
-    val hydration = Seq("path", "document_id", "content", "metadata")
-      .filterNot(newVectors.columns.contains)
-    val denorm =
-      if (hydration.isEmpty) newVectors
-      else newVectors.join(
-        newChunks.select((Seq("chunk_id") ++ hydration).map(col): _*), Seq("chunk_id"))
-    val newVecRows = denorm
-      .select($"chunk_id", $"document_id", $"container_id", $"path",
-        $"content", $"metadata", $"model_id", $"embedding")
-      .as[ServingVecRow].rdd
-    val newTokRows = newChunks
-      .select($"chunk_id", $"document_id", $"container_id", $"path",
-        $"content", $"metadata", $"tokens_simple", $"tokens_english")
-      .as[ServingTokRow].rdd
-    val vecRows2 = cache.vecRows.union(newVecRows)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val tokRows2 = cache.tokRows.union(newTokRows)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    vecRows2.count()
-    val tokCount2 = tokRows2.count()
-    // extend the driver fast path in place while the corpus stays under
-    // BOTH build-time guards — the row cap AND the 256 MB byte bounds
-    // (cumulative totals carried in the cache): a stream of wide-chunk
-    // micro-batches under the row cap must not grow the driver copies
-    // past the byte bound the build enforces. Past either cap the copy
-    // drops and the RDD leg takes over — the same default-off-at-scale
-    // contract as the build.
-    var tokLocalBytes2 = 0L
-    val tokLocal2: Option[IndexedSeq[ServingTokRow]] =
-      cache.tokLocal.flatMap { cur =>
-        if (tokCount2 > cache.tokLocalCap) None
-        else {
-          val batch = newTokRows.collect()
-          val b2 = cache.tokLocalBytes +
-            batch.iterator.map(r => r.content.length.toLong).sum
-          if (b2 > cache.localBytesCap) None
-          else { tokLocalBytes2 = b2; Some(cur ++ batch) }
-        }
-      }
-    var vecLocalBytes2 = 0L
-    val vecLocal2: Option[IndexedSeq[ServingVecRow]] =
-      cache.vecLocal.flatMap { cur =>
-        if (tokCount2 > cache.tokLocalCap) None
-        else {
-          val batch = newVecRows.collect()
-          val b2 = cache.vecLocalBytes +
-            batch.iterator.map(r => r.embedding.length.toLong * 4L).sum
-          if (b2 > cache.localBytesCap) None
-          else { vecLocalBytes2 = b2; Some(cur ++ batch) }
-        }
-      }
-
-    // route new rows once; both the IVF cells and the cell-aligned HNSW
-    // graphs consume the same cell-partitioned RDD
-    def routed(centroids: Array[(Int, Array[Float])], nParts: Int) =
-      newVecRows
-        .map(r => (graft.ann.Ivf.assignTo(centroids, r.embedding), r))
-        .partitionBy(new org.apache.spark.HashPartitioner(nParts))
-        .values
-
-    val ivf2 = cache.ivf.map { iv =>
-      val merged = iv.rows
-        .zipPartitions(routed(iv.centroids, iv.nParts), preservesPartitioning = true)(
-          (a, b) => a ++ b)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      merged.count()
-      iv.copy(rows = merged)
-    }
-    val hnsw2 = cache.hnsw.map { hs =>
-      val newByPart =
-        if (hs.centroids.nonEmpty) routed(hs.centroids, hs.nParts)
-        else newVecRows
-          .map(r => (r.chunk_id.hashCode, r))
-          .partitionBy(new org.apache.spark.HashPartitioner(hs.nParts))
-          .values
-      val hm = hs.m
-      val grown = hs.parts.zipPartitions(newByPart, preservesPartitioning = true) {
-        (git, rit) =>
-          val rows = rit.toArray.sortBy(_.chunk_id)
-          val existing = git.toSeq
-          (existing, rows) match {
-            case (Seq(p), rs) if rs.nonEmpty =>
-              val all = p.rows ++ rs
-              val g2 = graft.ann.Hnsw.insertAll(p.graph,
-                rs.indices.map(i => ((p.rows.length + i).toLong, rs(i).embedding)),
-                m = hm)
-              Iterator.single(HnswPart(g2, all))
-            case (Seq(p), _) => Iterator.single(p)
-            case (Seq(), rs) if rs.nonEmpty =>
-              Iterator.single(HnswPart(
-                graft.ann.Hnsw.build(
-                  rs.indices.map(i => (i.toLong, rs(i).embedding)), m = hm), rs))
-            case _ => Iterator.empty
-          }
-      }.persist(StorageLevel.MEMORY_AND_DISK)
-      grown.count()
-      hs.copy(parts = grown)
-    }
-    val pq2 = cache.pq.map { ps =>
-      val newByPart =
-        if (ps.centroids.nonEmpty) routed(ps.centroids, ps.nParts)
-        else newVecRows
-          .map(r => (r.chunk_id.hashCode, r))
-          .partitionBy(new org.apache.spark.HashPartitioner(ps.nParts))
-          .values
-      val mdl = ps.model
-      // new rows encode under the EXISTING codebooks (like the frozen
-      // centroids above: quantizer drift erodes only recall — the exact
-      // re-rank keeps returned scores exact; periodic rebuild refreshes)
-      val grown = ps.parts.zipPartitions(newByPart, preservesPartitioning = true) {
-        (pit, rit) =>
-          val rows = rit.toArray.sortBy(_.chunk_id)
-          val existing = pit.toSeq
-          (existing, rows) match {
-            case (Seq(p), rs) if rs.nonEmpty =>
-              Iterator.single(PqPart(
-                p.codes ++ rs.map(r => graft.ann.Pq.encodeOne(mdl, r.embedding)),
-                p.rows ++ rs))
-            case (Seq(p), _) => Iterator.single(p)
-            case (Seq(), rs) if rs.nonEmpty =>
-              Iterator.single(PqPart(
-                rs.map(r => graft.ann.Pq.encodeOne(mdl, r.embedding)), rs))
-            case _ => Iterator.empty
-          }
-      }.persist(StorageLevel.MEMORY_AND_DISK)
-      grown.count()
-      ps.copy(parts = grown)
-    }
-    index.copy(serving = Some(ServingCache(vecRows2, tokRows2, ivf2, hnsw2,
-      pq2, tokLocal = tokLocal2, tokLocalCap = cache.tokLocalCap,
-      vecLocal = vecLocal2,
-      tokLocalBytes = tokLocalBytes2, vecLocalBytes = vecLocalBytes2,
-      localBytesCap = cache.localBytesCap)))
-  }
-
-  /** Mean cosine distance (1 − cos) of serving rows to their assigned
-    * centroid — one pass, partial sums per partition. The centroid array
-    * is list-count-sized (KBs) and rides the task closure. */
-  private def meanAssignDist(rows: org.apache.spark.rdd.RDD[ServingVecRow],
-      centroids: Array[(Int, Array[Float])]): Double = {
-    if (centroids.isEmpty) return 0.0
-    val byId = centroids.toMap
-    val (s, n) = rows.mapPartitions { it =>
-      var sum = 0.0; var cnt = 0L
-      it.foreach { r =>
-        val lid = graft.ann.Ivf.assignTo(centroids, r.embedding)
-        sum += 1.0 - rawCosine(r.embedding, byId(lid)); cnt += 1L
-      }
-      Iterator.single((sum, cnt))
-    }.reduce((a, b) => (a._1 + b._1, a._2 + b._2))
-    if (n == 0) 0.0 else s / n
-  }
-
-  /** Measured drift of a cell-partitioned serving cache under frozen
-    * centroids. `cellSkew` = largest partition / mean partition size
-    * (upserts concentrating in few cells destroy the latency contract:
-    * a probe's cost is its cell's size); `distGrowth` = current mean
-    * assignment distance / fit-time baseline (new content far from every
-    * centroid routes arbitrarily and erodes recall). Both are O(corpus)
-    * single passes over the cached rows — run on the maintenance cadence,
-    * not per query. */
-  final case class DriftStats(
-      nRows: Long, cellSkew: Double, meanAssignDist: Double, fitMeanDist: Double) {
-    def distGrowth: Double =
-      if (fitMeanDist <= 1e-12) { if (meanAssignDist <= 1e-12) 1.0 else Double.PositiveInfinity }
-      else meanAssignDist / fitMeanDist
-  }
-
-  def servingDrift(index: Index): Option[DriftStats] =
-    index.serving.flatMap(_.ivf).map { iv =>
-      val sizes = iv.rows
-        .mapPartitions(it => Iterator.single(it.size.toLong)).collect()
-      val n = sizes.sum
-      val skew =
-        if (n == 0 || sizes.isEmpty) 1.0
-        else sizes.max / (n.toDouble / sizes.length)
-      DriftStats(n, skew, meanAssignDist(iv.rows, iv.centroids), iv.fitMeanDist)
-    }
-
-  /** Re-fit the serving cache from its CURRENT rows (the build-time
-    * frames don't know about upserted batches — the cached rows are the
-    * truth): fresh k-means centroids, fresh HNSW graphs, fresh PQ
-    * codebooks, same layout parameters. The returned Index owns new
-    * persisted RDDs; unpersist the old cache once in-flight queries
-    * drain (the upsertServing contract). */
-  def refitServing(index: Index): Index = {
-    val cache = index.serving.getOrElse(return index)
-    val spark = index.chunks.sparkSession
-    import spark.implicits._
-    servingIndex(
-      spark.createDataset(cache.tokRows).toDF(),
-      spark.createDataset(cache.vecRows).toDF(),
-      partitions = math.max(1, cache.vecRows.getNumPartitions),
-      ivfLists = cache.ivf.map(_.nParts).getOrElse(0),
-      ivfProbes = cache.ivf.map(_.nProbes).getOrElse(8),
-      hnswM = cache.hnsw.map(_.m).getOrElse(0),
-      hnswEf = cache.hnsw.map(_.ef).getOrElse(60),
-      pqM = cache.pq.map(_.model.m).getOrElse(0),
-      pqRefine = cache.pq.map(_.refine).getOrElse(64))
-  }
-
-  /** Maintenance policy for a long-lived upserted serving tier: measure
-    * drift, re-fit when either trigger fires. Thresholds: `maxCellSkew`
-    * (default 3× — one cell holding 3× its share of rows) and
-    * `maxDistGrowth` (default 1.5× the fit-time mean assignment
-    * distance). Returns the (possibly re-fit) index and the stats that
-    * triggered, or None when the cache is healthy (index returned
-    * untouched — no work done). Run after every N upsert batches, the
-    * pgvector "reindex when it degrades" guidance made measurable. */
-  def maintainServing(index: Index, maxCellSkew: Double = 3.0,
-      maxDistGrowth: Double = 1.5): (Index, Option[DriftStats]) =
-    servingDrift(index) match {
-      case Some(d) if d.cellSkew > maxCellSkew || d.distGrowth > maxDistGrowth =>
-        (refitServing(index), Some(d))
-      case _ => (index, None)
-    }
 
   private def scope(df: DataFrame, req: SearchRequest): DataFrame = {
     var out = df.filter(col("container_id") === req.containerId) // P1
@@ -970,17 +528,9 @@ object HybridSearch {
     }
   }
 
-  /** Vector leg over the pre-materialized serving rows: a per-partition
-    * top-k heap whose closure carries the query vector. The cosine loop is
-    * the same float->double accumulation as `CosineSimilarity.nullSafeEval`,
-    * in the same order, so scores are bit-identical to the DataFrame leg
-    * (pinned by HybridSearchE2ESpec "serving fast path"). */
-  /** Scope-filter + score one partition's rows — shared by the full-scan
-    * and IVF-pruned serving legs so both produce bit-identical scores. */
   /** The serving-leg cosine: float->double accumulation in scan order,
-    * identical to `CosineSimilarity.nullSafeEval` — every serving path
-    * (brute, IVF-pruned, HNSW-walked) scores with THIS loop, so scores
-    * are bit-identical across legs and to the DataFrame leg. */
+    * identical to `CosineSimilarity.nullSafeEval`, so scores are
+    * bit-identical to the DataFrame leg. */
   private def rawCosine(e: Array[Float], q: Array[Float]): Double = {
     val n = math.min(e.length, q.length)
     var dot = 0.0; var na = 0.0; var nb = 0.0
@@ -994,6 +544,7 @@ object HybridSearch {
     else dot / (math.sqrt(na) * math.sqrt(nb))
   }
 
+  /** Scope-filter + score one serving row. */
   private def scoreVecRow(
       r: ServingVecRow, container: String, model: String,
       docId: Option[String], prefix: Option[String],
@@ -1006,12 +557,11 @@ object HybridSearch {
         Option(r.content).getOrElse(""),
         Option(r.metadata).getOrElse(Map.empty), rawCosine(r.embedding, q)))
 
-  private def scoreVecRows(
-      it: Iterator[ServingVecRow], container: String, model: String,
-      docId: Option[String], prefix: Option[String],
-      q: Array[Float]): Iterator[LegHit] =
-    it.flatMap(scoreVecRow(_, container, model, docId, prefix, q))
-
+  /** Vector leg over the pre-materialized serving rows: a brute-force
+    * top-k heap whose closure carries the query vector — over the driver
+    * copy when the cache holds one, else per partition of the cached RDD.
+    * Hits equal the DataFrame leg's (pinned by SearchSpec's
+    * HybridSearchE2ESpec "servingIndex returns identical hits"). */
   private def vectorLegRdd(
       cache: ServingCache, req: SearchRequest, model: String,
       q: Array[Float], k: Int): Seq[LegHit] = {
@@ -1026,168 +576,10 @@ object HybridSearch {
           scoreVecRow(_, container, model, docId, prefix, q))
       case None =>
         val parts = cache.vecRows.mapPartitions { it =>
-          topKHeap(scoreVecRows(it, container, model, docId, prefix, q), k)
+          topKHeap(it.flatMap(scoreVecRow(_, container, model, docId, prefix, q)), k)
         }.collect()
         mergeTopK(parts, k)
     }
-  }
-
-  /** IVF-pruned serving leg: centroid routing is driver arithmetic
-    * (list-count-sized), then the scan job is scheduled ONLY on the
-    * partitions holding the probed cells — the other partitions' tasks
-    * never exist, so latency follows nProbes/nLists instead of corpus
-    * size. Scores come from the same loop as the full scan, so every
-    * returned hit is exact; only RECALL is approximate (cells the router
-    * skipped). */
-  private def vectorLegIvf(
-      ivf: IvfServing, req: SearchRequest, model: String,
-      q: Array[Float], k: Int): Seq[LegHit] = {
-    val container = req.containerId
-    val docId = req.documentId
-    val prefix = req.pathPrefix
-    val probed = ivf.centroids
-      .map { case (lid, c) =>
-        var dot = 0.0; var na = 0.0; var nb = 0.0
-        val n = math.min(c.length, q.length)
-        var i = 0
-        while (i < n) {
-          val xa = c(i).toDouble; val xb = q(i).toDouble
-          dot += xa * xb; na += xa * xa; nb += xb * xb
-          i += 1
-        }
-        val s = if (na == 0.0 || nb == 0.0) 0.0
-          else dot / (math.sqrt(na) * math.sqrt(nb))
-        (lid, s)
-      }
-      .sortBy { case (lid, s) => (-s, lid) }
-      .take(ivf.nProbes).map(_._1)
-    val keep = probed.map(ivf.partitionOf).toSet
-    val pruned = org.apache.spark.rdd.PartitionPruningRDD.create(
-      ivf.rows, keep.contains)
-    val parts = pruned.mapPartitions { it =>
-      topKHeap(scoreVecRows(it, container, model, docId, prefix, q), k)
-    }.collect()
-    mergeTopK(parts, k)
-  }
-
-  /** HNSW-walked serving leg: IVF centroid routing (when cells exist)
-    * prunes WHICH partitions run, then each probed partition walks its
-    * small-world graph instead of scanning linearly — the candidate set is
-    * the walk's ef-beam, re-scored with the exact `rawCosine` and reduced
-    * to a per-partition top-k. Exactness: scores are bit-identical to the
-    * brute leg for every RETURNED hit; recall is approximate (beam width
-    * + skipped cells), reaching 1.0 when ef covers the cell and all cells
-    * probe (HybridSearchE2ESpec pins results == brute there). Scoped
-    * queries (docId/path-prefix) filter AFTER the walk, so the beam is
-    * widened by 4× topK to keep scoped recall usable — a heavily-scoped
-    * interactive query should prefer the exact legs (the dispatcher's
-    * fallback order does this).
-    */
-  private def vectorLegHnsw(
-      hs: HnswServing, req: SearchRequest, model: String,
-      q: Array[Float], k: Int): Seq[LegHit] = {
-    val container = req.containerId
-    val docId = req.documentId
-    val prefix = req.pathPrefix
-    val efq = math.max(hs.ef, 4 * k)
-    val pruned =
-      if (hs.centroids.isEmpty) hs.parts
-      else {
-        val probed = hs.centroids
-          .map { case (lid, c) => (lid, rawCosine(c, q)) }
-          .sortBy { case (lid, s) => (-s, lid) }
-          .take(hs.nProbes).map(_._1)
-        val keep = probed.map(hs.partitionOf).toSet
-        org.apache.spark.rdd.PartitionPruningRDD.create(hs.parts, keep.contains)
-      }
-    val parts = pruned.mapPartitions { it =>
-      it.flatMap { p =>
-        val cand = graft.ann.Hnsw.search(p.graph, q, efq, efq)
-        topKHeap(
-          cand.iterator.flatMap { case (idx, _) =>
-            val r = p.rows(idx.toInt)
-            if (r.container_id != container || r.model_id != model ||
-                docId.exists(_ != r.document_id) ||
-                prefix.exists(pp => !r.path.startsWith(pp))) None
-            else
-              Some(LegHit(r.chunk_id, r.document_id,
-                Option(r.content).getOrElse(""),
-                Option(r.metadata).getOrElse(Map.empty),
-                rawCosine(r.embedding, q)))
-          }, k)
-      }
-    }.collect()
-    mergeTopK(parts, k)
-  }
-
-  /** PQ-ADC serving leg: IVF centroid routing (when cells exist) prunes
-    * WHICH partitions run, then each probed partition scans its m-byte
-    * CODE array with query lookup tables (ADC — m adds per row instead
-    * of a d-dim cosine over the float rows), keeps the `refine` best
-    * candidates, and re-scores ONLY those with the exact `rawCosine`.
-    * Exactness: returned scores are bit-identical to the brute leg;
-    * recall is approximate (code distortion + skipped cells), reaching
-    * 1.0 when refine covers the cell and all cells probe
-    * (HybridSearchE2ESpec pins results == brute there). Scoped queries
-    * filter BEFORE the ADC heap (codes and rows are index-aligned), so a
-    * narrow documentId/pathPrefix scope spends the whole budget on
-    * in-scope rows and scoped recall matches the brute leg's. */
-  private def vectorLegPq(
-      ps: PqServing, req: SearchRequest, model: String,
-      q: Array[Float], k: Int): Seq[LegHit] = {
-    val container = req.containerId
-    val docId = req.documentId
-    val prefix = req.pathPrefix
-    val budget = math.max(ps.refine, 4 * k)
-    val qNorm = graft.ann.Pq.l2norm(q.map(_.toDouble))
-    val pruned =
-      if (ps.centroids.isEmpty) ps.parts
-      else {
-        val probed = ps.centroids
-          .map { case (lid, c) => (lid, rawCosine(c, q)) }
-          .sortBy { case (lid, s) => (-s, lid) }
-          .take(ps.nProbes).map(_._1)
-        val keep = probed.map(ps.partitionOf).toSet
-        org.apache.spark.rdd.PartitionPruningRDD.create(ps.parts, keep.contains)
-      }
-    val mdl = ps.model
-    val parts = pruned.mapPartitions { it =>
-      it.flatMap { p =>
-        val lut = mdl.lut(qNorm)
-        // bounded ADC heap: keep the `budget` smallest distances; head is
-        // the WORST kept candidate so overflow evicts correctly. Ties
-        // break on row index for a deterministic candidate set.
-        // Scope predicates run BEFORE the heap (codes and rows are
-        // index-aligned, so the test is a cheap row lookup) — otherwise a
-        // narrowly scoped request (documentId / pathPrefix) over a large
-        // partition would spend its whole ADC budget on out-of-scope rows
-        // and return fewer than k hits even though in-scope rows exist.
-        val heap = scala.collection.mutable.PriorityQueue.empty[(Double, Int)](
-          Ordering.by { case (d, i) => (d, i) })
-        var i = 0
-        while (i < p.codes.length) {
-          val r = p.rows(i)
-          val inScope = r.container_id == container && r.model_id == model &&
-            docId.forall(_ == r.document_id) &&
-            prefix.forall(pp => r.path.startsWith(pp))
-          if (inScope) {
-            val d = mdl.adc(lut, p.codes(i))
-            heap.enqueue((d, i))
-            if (heap.size > budget) heap.dequeue()
-          }
-          i += 1
-        }
-        topKHeap(
-          heap.iterator.map { case (_, idx) =>
-            val r = p.rows(idx)
-            LegHit(r.chunk_id, r.document_id,
-              Option(r.content).getOrElse(""),
-              Option(r.metadata).getOrElse(Map.empty),
-              rawCosine(r.embedding, q))
-          }, k)
-      }
-    }.collect()
-    mergeTopK(parts, k)
   }
 
   /** Keyword leg over the serving rows: scope filter, then the imperative
@@ -1273,17 +665,7 @@ object HybridSearch {
       else index.serving match {
         case Some(c) => Future {
           val model = req.modelId.getOrElse(embedder.modelId)
-          val qv = embedder.embed(req.query)
-          c.hnsw match {
-            case Some(hs) => vectorLegHnsw(hs, req, model, qv, fetchK)
-            case None => c.pq match {
-              case Some(ps) => vectorLegPq(ps, req, model, qv, fetchK)
-              case None => c.ivf match {
-                case Some(iv) => vectorLegIvf(iv, req, model, qv, fetchK)
-                case None => vectorLegRdd(c, req, model, qv, fetchK)
-              }
-            }
-          }
+          vectorLegRdd(c, req, model, embedder.embed(req.query), fetchK)
         }
         case None => Future {
           collectLeg(VectorSearch.leg(vectors, chunks, embedder.embed(req.query), fetchK), "raw_v")

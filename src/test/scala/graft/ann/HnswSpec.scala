@@ -100,31 +100,6 @@ class HnswSpec extends AnyFunSuite {
     part.unpersist()
   }
 
-  test("incremental insertAll: exact at exhaustive ef, high recall, idempotent replay") {
-    val pts = corpus(400)
-    val (base, rest) = pts.splitAt(250)
-    val g0 = Hnsw.build(base, m = 8, efConstruction = 60)
-    val g1 = Hnsw.insertAll(g0, rest, m = 8, efConstruction = 60)
-    assert(g1.size == 400)
-    // replaying the same batch inserts nothing (at-least-once ingest)
-    assert(Hnsw.insertAll(g1, rest, m = 8, efConstruction = 60) eq g1)
-    for (qi <- Seq(5, 123, 311)) {
-      val q = pts(qi)._2
-      val exact = bruteTopK(pts, q, 10)
-      // exhaustive beam over the incrementally-grown graph = exact
-      assert(Hnsw.search(g1, q, 10, ef = 400).map(_._1) == exact,
-        s"incremental graph not exact at exhaustive ef (qi=$qi)")
-      val approx = Hnsw.search(g1, q, 10, ef = 60).map(_._1).toSet
-      assert((exact.toSet intersect approx).size >= 9,
-        s"incremental recall dropped (qi=$qi): $approx")
-    }
-    // determinism: same base + same batch = same graph
-    val g1b = Hnsw.insertAll(g0, rest, m = 8, efConstruction = 60)
-    assert(g1b.ids.sameElements(g1.ids) && g1b.entry == g1.entry &&
-      g1b.maxLevel == g1.maxLevel &&
-      g1b.layers.flatten.map(_.toSeq).toSeq == g1.layers.flatten.map(_.toSeq).toSeq)
-  }
-
   test("save/load round-trips graphs onto the SAME partition indices") {
     import spark.implicits._
     val pts = corpus(300)

@@ -162,8 +162,6 @@ class SettingsSpec extends AnyFunSuite {
     s2.search(graft.model.SearchRequest("chunk overlap", cid, topK = 3))
     assert(s2.currentIndex.serving.get.tokLocal.isEmpty,
       "a bytes cap under the corpus size must disable the driver copy")
-    assert(s2.currentIndex.serving.get.localBytesCap == 1L,
-      "upserts must inherit the settings-built cap")
     // reset -> defaults again -> copies return
     s2.resetSettings("serving")
     s2.search(graft.model.SearchRequest("chunk overlap", cid, topK = 3))

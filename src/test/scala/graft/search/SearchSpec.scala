@@ -207,193 +207,6 @@ class HybridSearchE2ESpec extends AnyFunSuite {
     serving.serving.foreach(_.unpersist())
   }
 
-  test("IVF serving leg: full probes equal brute force; pruned probes are exact-score subsets") {
-    // probing EVERY cell must reproduce the flat serving path bit-for-bit
-    // (same scoring loop over a complete partition cover)
-    val flat = HybridSearch.servingIndex(index.chunks, index.vectors)
-    val full = HybridSearch.servingIndex(index.chunks, index.vectors,
-      ivfLists = 4, ivfProbes = 4)
-    assert(full.serving.flatMap(_.ivf).nonEmpty, "ivfLists must build the IVF layout")
-    val requests = Seq(
-      SearchRequest("chunk overlap settings", "c1", topK = 5),
-      SearchRequest("embedding dimension model", "c1", mode = "semantic", topK = 3),
-      SearchRequest("search legs", "c1", topK = 10, pathPrefix = Some("/docs/api/")),
-      SearchRequest("chunk overlap", "c2", topK = 10))
-    requests.foreach { req =>
-      val viaFlat = HybridSearch.search(flat, req, embedder)
-      val viaIvf = HybridSearch.search(full, req, embedder)
-      assert(viaIvf.map(h => (h.chunk_id, h.score)) ==
-        viaFlat.map(h => (h.chunk_id, h.score)),
-        s"all-probe IVF diverged from brute force for $req")
-    }
-    // pruned probing: semantic-mode hits are a SUBSET of cells, but every
-    // returned hit carries its exact brute-force cosine (only recall is
-    // approximate, never scores)
-    val pruned = HybridSearch.servingIndex(index.chunks, index.vectors,
-      ivfLists = 4, ivfProbes = 1)
-    val req = SearchRequest("embedding dimension model", "c1", mode = "semantic", topK = 10)
-    val bruteScores = HybridSearch.search(flat, req, embedder)
-      .map(h => h.chunk_id -> h.score).toMap
-    val prunedHits = HybridSearch.search(pruned, req, embedder)
-    assert(prunedHits.nonEmpty)
-    prunedHits.foreach { h =>
-      assert(bruteScores.get(h.chunk_id).contains(h.score),
-        s"pruned hit ${h.chunk_id} score ${h.score} != brute ${bruteScores.get(h.chunk_id)}")
-    }
-    // and the pruned job really is pruned: one probe covers 1 of 4 cell
-    // partitions
-    val iv = pruned.serving.flatMap(_.ivf).get
-    assert(iv.rows.getNumPartitions == 4)
-
-    // latency ∝ probes, asserted at the scheduler: a 1-probe semantic
-    // query must submit its scan stage with exactly ONE task — the other
-    // 3 cell partitions' tasks never exist (PartitionPruningRDD), which
-    // is the claim that makes serving latency follow probes/lists
-    // instead of corpus size
-    val stageTasks = new java.util.concurrent.ConcurrentLinkedQueue[Integer]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onStageSubmitted(
-          s: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
-        stageTasks.add(s.stageInfo.numTasks)
-    }
-    TestSpark.spark.sparkContext.addSparkListener(listener)
-    try {
-      HybridSearch.search(pruned,
-        SearchRequest("embedding dimension model", "c1", mode = "semantic", topK = 5),
-        embedder)
-      val deadline = System.currentTimeMillis() + 5000
-      while (stageTasks.isEmpty && System.currentTimeMillis() < deadline)
-        Thread.sleep(50)
-      assert(!stageTasks.isEmpty, "no stage observed for the pruned search")
-      Thread.sleep(200) // drain any trailing stage events
-      val tasks = stageTasks.toArray(new Array[Integer](0)).map(_.toInt)
-      assert(tasks.forall(_ == 1),
-        s"1-probe search scheduled stages with tasks ${tasks.toSeq} — pruning leaked")
-    } finally TestSpark.spark.sparkContext.removeSparkListener(listener)
-
-    Seq(flat, full, pruned).foreach { s =>
-      s.chunks.unpersist(); s.vectors.unpersist()
-      s.serving.foreach(_.unpersist())
-    }
-  }
-
-  test("HNSW serving leg: exhaustive ef equals brute force; walked hits carry exact scores") {
-    val flat = HybridSearch.servingIndex(index.chunks, index.vectors)
-    // exhaustive regime: every cell probed AND ef far beyond any cell
-    // size — the walk reaches the whole graph, so results must equal the
-    // brute serving leg bit-for-bit (ids, scores, tie-breaks), including
-    // scoped requests (post-walk filtering loses nothing when the walk
-    // saw everything)
-    val exhaustive = HybridSearch.servingIndex(index.chunks, index.vectors,
-      ivfLists = 4, ivfProbes = 4, hnswM = 8, hnswEf = 100000)
-    assert(exhaustive.serving.flatMap(_.hnsw).nonEmpty,
-      "hnswM must build the graph layout")
-    // and the graph layout composed with IVF: cell-partitioned parts
-    assert(exhaustive.serving.flatMap(_.hnsw).get.centroids.nonEmpty)
-    val requests = Seq(
-      SearchRequest("chunk overlap settings", "c1", topK = 5),
-      SearchRequest("chunk overlap settings", "c1", topK = 5, fusionMethod = "dbsf"),
-      SearchRequest("embedding dimension model", "c1", mode = "semantic", topK = 3),
-      SearchRequest("search legs", "c1", topK = 10, pathPrefix = Some("/docs/api/")),
-      SearchRequest("overlap", "c1", topK = 10, documentId = Some("doc-overlap")),
-      SearchRequest("chunk overlap", "c2", topK = 10))
-    requests.foreach { req =>
-      val viaFlat = HybridSearch.search(flat, req, embedder)
-      val viaHnsw = HybridSearch.search(exhaustive, req, embedder)
-      assert(viaHnsw.map(h => (h.chunk_id, h.score, h.metadata.get("source"))) ==
-        viaFlat.map(h => (h.chunk_id, h.score, h.metadata.get("source"))),
-        s"exhaustive HNSW diverged from brute force for $req")
-    }
-    // default beam + pruned probes: the walk only selects CANDIDATES —
-    // raw ranking still comes from the shared exact-cosine loop, so the
-    // walked hits must be a subset of the brute hits IN BRUTE ORDER
-    // (post-fusion scores are min-max normalized within each leg's own
-    // candidate set, so the comparable invariant is order, not value)
-    val walked = HybridSearch.servingIndex(index.chunks, index.vectors,
-      ivfLists = 4, ivfProbes = 2, hnswM = 8)
-    val req = SearchRequest("embedding dimension model", "c1", mode = "semantic", topK = 10)
-    val bruteOrder = HybridSearch.search(flat, req, embedder).map(_.chunk_id)
-    val walkedHits = HybridSearch.search(walked, req, embedder)
-    assert(walkedHits.nonEmpty)
-    val walkedIds = walkedHits.map(_.chunk_id)
-    assert(walkedIds.toSet.subsetOf(bruteOrder.toSet),
-      s"walked hits $walkedIds not a subset of brute $bruteOrder")
-    assert(bruteOrder.filter(walkedIds.toSet) == walkedIds,
-      s"walked order $walkedIds inconsistent with brute order $bruteOrder")
-    // no-IVF composition: graphs over the flat cached partitions, no
-    // routing (centroids empty) — still exact at exhaustive ef
-    val flatGraphs = HybridSearch.servingIndex(index.chunks, index.vectors,
-      hnswM = 8, hnswEf = 100000)
-    assert(flatGraphs.serving.flatMap(_.hnsw).get.centroids.isEmpty)
-    val req2 = SearchRequest("chunk overlap settings", "c1", topK = 5)
-    assert(
-      HybridSearch.search(flatGraphs, req2, embedder).map(h => (h.chunk_id, h.score)) ==
-        HybridSearch.search(flat, req2, embedder).map(h => (h.chunk_id, h.score)))
-    Seq(flat, exhaustive, walked, flatGraphs).foreach { s =>
-      s.chunks.unpersist(); s.vectors.unpersist()
-      s.serving.foreach(_.unpersist())
-    }
-  }
-
-  test("PQ serving leg: exhaustive refine equals brute force; ADC hits carry exact scores") {
-    val flat = HybridSearch.servingIndex(index.chunks, index.vectors)
-    // exhaustive regime: every cell probed AND the refine budget far
-    // beyond any cell size — every row survives the ADC pass into the
-    // exact re-rank, so results must equal the brute serving leg
-    // bit-for-bit (ids, scores, tie-breaks), including scoped requests
-    val exhaustive = HybridSearch.servingIndex(index.chunks, index.vectors,
-      ivfLists = 4, ivfProbes = 4, pqM = 8, pqRefine = 100000)
-    assert(exhaustive.serving.flatMap(_.pq).nonEmpty,
-      "pqM must build the code layout")
-    assert(exhaustive.serving.flatMap(_.pq).get.centroids.nonEmpty,
-      "PQ must compose with the IVF cell partitioning")
-    val requests = Seq(
-      SearchRequest("chunk overlap settings", "c1", topK = 5),
-      SearchRequest("chunk overlap settings", "c1", topK = 5, fusionMethod = "dbsf"),
-      SearchRequest("embedding dimension model", "c1", mode = "semantic", topK = 3),
-      SearchRequest("search legs", "c1", topK = 10, pathPrefix = Some("/docs/api/")),
-      SearchRequest("overlap", "c1", topK = 10, documentId = Some("doc-overlap")),
-      SearchRequest("chunk overlap", "c2", topK = 10))
-    requests.foreach { req =>
-      val viaFlat = HybridSearch.search(flat, req, embedder)
-      val viaPq = HybridSearch.search(exhaustive, req, embedder)
-      assert(viaPq.map(h => (h.chunk_id, h.score, h.metadata.get("source"))) ==
-        viaFlat.map(h => (h.chunk_id, h.score, h.metadata.get("source"))),
-        s"exhaustive PQ diverged from brute force for $req")
-    }
-    // bounded refine + pruned probes: ADC only selects CANDIDATES — raw
-    // ranking still comes from the shared exact-cosine loop, so returned
-    // hits must be a subset of the brute hits IN BRUTE ORDER
-    val adc = HybridSearch.servingIndex(index.chunks, index.vectors,
-      ivfLists = 4, ivfProbes = 2, pqM = 8, pqRefine = 4)
-    val req = SearchRequest("embedding dimension model", "c1", mode = "semantic", topK = 10)
-    val bruteOrder = HybridSearch.search(flat, req, embedder).map(_.chunk_id)
-    val adcHits = HybridSearch.search(adc, req, embedder)
-    assert(adcHits.nonEmpty)
-    val adcIds = adcHits.map(_.chunk_id)
-    assert(adcIds.toSet.subsetOf(bruteOrder.toSet),
-      s"ADC hits $adcIds not a subset of brute $bruteOrder")
-    assert(bruteOrder.filter(adcIds.toSet) == adcIds,
-      s"ADC order $adcIds inconsistent with brute order $bruteOrder")
-    // no-IVF composition: codes over the flat cached partitions, no
-    // routing (centroids empty) — still exact at exhaustive refine
-    val flatCodes = HybridSearch.servingIndex(index.chunks, index.vectors,
-      pqM = 8, pqRefine = 100000)
-    assert(flatCodes.serving.flatMap(_.pq).get.centroids.isEmpty)
-    val req2 = SearchRequest("chunk overlap settings", "c1", topK = 5)
-    assert(
-      HybridSearch.search(flatCodes, req2, embedder).map(h => (h.chunk_id, h.score)) ==
-        HybridSearch.search(flat, req2, embedder).map(h => (h.chunk_id, h.score)))
-    // the codes really are the 32x-smaller scan array: m bytes per row
-    val part = flatCodes.serving.flatMap(_.pq).get.parts.collect().head
-    assert(part.codes.forall(_.length == 8))
-    assert(part.codes.length == part.rows.length)
-    Seq(flat, exhaustive, adc, flatCodes).foreach { s =>
-      s.chunks.unpersist(); s.vectors.unpersist()
-      s.serving.foreach(_.unpersist())
-    }
-  }
-
   test("keyword driver fast path: zero jobs, identical hits, defaults off above its cap") {
     // default cap: tiny corpus -> driver copy present; cap 0 / cap below
     // the corpus -> absent (the default-off-above-scale contract)
@@ -408,15 +221,6 @@ class HybridSearchE2ESpec extends AnyFunSuite {
     assert(rdd.serving.get.tokLocal.isEmpty, "cap 0 disables the fast path")
     assert(rdd.serving.get.vecLocal.isEmpty, "cap 0 disables the vector copy")
     assert(tooSmall.serving.get.tokLocal.isEmpty, "corpus over the cap -> RDD leg")
-    // an ANN layout suppresses the brute-vector driver copy (the pruned
-    // legs already shed the scan; a second full copy would buy nothing)
-    val withIvf = HybridSearch.servingIndex(index.chunks, index.vectors,
-      ivfLists = 4, ivfProbes = 4)
-    assert(withIvf.serving.get.vecLocal.isEmpty &&
-      withIvf.serving.get.tokLocal.nonEmpty,
-      "ANN layout -> no vector driver copy; the keyword copy stays")
-    withIvf.chunks.unpersist(); withIvf.vectors.unpersist()
-    withIvf.serving.foreach(_.unpersist())
 
     // identical hits across modes/operators, fast path vs RDD leg
     val requests = Seq(
@@ -454,110 +258,7 @@ class HybridSearchE2ESpec extends AnyFunSuite {
     assert(after == before,
       s"fast-path queries must schedule no Spark jobs (before=$before after=$after)")
 
-    // upsert keeps the driver copy in sync while under the cap...
-    val wh3 = java.nio.file.Files.createTempDirectory("graft-wh3").toString
-    val moreDocs = Seq(
-      IndexBuild.RawDoc("doc-fastpath", "c1", "/docs/guide/fastpath.txt",
-        "fastpath.txt",
-        "The wombat sentinel paragraph rides the keyword fast path upsert."))
-      .toDS()
-    IndexBuild.build(spark, moreDocs, wh3,
-      cfg = ChunkingConfig(maxChunkSize = 40, overlap = 5, minChunkSize = 5),
-      embedder = embedder)
-    val late3 = IndexBuild.loadIndex(spark, wh3)
-    val upserted = HybridSearch.upsertServing(fast, late3.chunks, late3.vectors)
-    val baseRows = fast.serving.get.tokLocal.get.length
-    assert(upserted.serving.get.tokLocal.exists(_.length > baseRows),
-      "upsert under the cap must extend the driver copy")
-    assert(upserted.serving.get.vecLocal.exists(
-      _.length > fast.serving.get.vecLocal.get.length),
-      "upsert under the cap must extend the vector driver copy too")
-    assert(HybridSearch.search(upserted,
-      SearchRequest("wombat sentinel", "c1", mode = "keyword", topK = 3), embedder)
-      .headOption.exists(_.document_id == "doc-fastpath"))
-    // ...and DROPS it once the corpus outgrows the cap
-    val capped = fast.copy(serving =
-      fast.serving.map(_.copy(tokLocalCap = baseRows))) // next union exceeds
-    val overflow = HybridSearch.upsertServing(capped, late3.chunks, late3.vectors)
-    assert(overflow.serving.get.tokLocal.isEmpty,
-      "outgrowing the cap must hand the leg back to the RDD path")
-    // ...and drops it when an upsert crosses the BYTES caps even while
-    // the row count stays far under the row cap — wide-chunk
-    // micro-batches must not grow the driver copies past the same 256 MB
-    // guards the build enforces
-    val nearBytes = fast.copy(serving = fast.serving.map(_.copy(
-      tokLocalBytes = HybridSearch.DriverCacheMaxBytes - 10L,
-      vecLocalBytes = HybridSearch.DriverCacheMaxBytes - 10L)))
-    val wide = HybridSearch.upsertServing(nearBytes, late3.chunks, late3.vectors)
-    assert(wide.serving.get.tokLocal.isEmpty,
-      "crossing the content-bytes cap must hand the keyword leg to the RDD path")
-    assert(wide.serving.get.vecLocal.isEmpty,
-      "crossing the embedding-bytes cap must hand the vector leg to the RDD path")
-    assert(HybridSearch.search(wide,
-      SearchRequest("wombat sentinel", "c1", mode = "keyword", topK = 3), embedder)
-      .headOption.exists(_.document_id == "doc-fastpath"),
-      "the RDD legs must keep serving the upserted rows after the drop")
     Seq(fast, rdd, tooSmall).foreach { s =>
-      s.chunks.unpersist(); s.vectors.unpersist()
-      s.serving.foreach(_.unpersist())
-    }
-  }
-
-  test("upsertServing absorbs a micro-batch into every cache layout without rebuild") {
-    // a second warehouse supplies the new docs through the SAME build path
-    val wh2 = java.nio.file.Files.createTempDirectory("graft-wh2").toString
-    val newDocs = Seq(
-      IndexBuild.RawDoc("doc-late", "c1", "/docs/guide/quokka.txt", "quokka.txt",
-        "The quokka sentinel paragraph talks about chunk overlap too. " +
-          "Late-arriving documents must be searchable without an index rebuild."))
-      .toDS()
-    IndexBuild.build(spark, newDocs, wh2,
-      cfg = ChunkingConfig(maxChunkSize = 40, overlap = 5, minChunkSize = 5),
-      embedder = embedder)
-    val late = IndexBuild.loadIndex(spark, wh2)
-
-    // full-stack cache: flat rows + IVF cells + cell-aligned HNSW graphs
-    // + PQ codes, exhaustive regime so results are provably exact
-    val serving = HybridSearch.servingIndex(index.chunks, index.vectors,
-      ivfLists = 4, ivfProbes = 4, hnswM = 8, hnswEf = 100000,
-      pqM = 8, pqRefine = 100000)
-    val updated = HybridSearch.upsertServing(serving, late.chunks, late.vectors)
-    // the PQ layout grew with the batch (codes stay row-aligned)
-    val pqParts = updated.serving.flatMap(_.pq).get.parts.collect()
-    assert(pqParts.map(_.rows.length).sum ==
-      serving.serving.flatMap(_.pq).get.parts.collect().map(_.rows.length).sum + 1)
-    assert(pqParts.forall(p => p.codes.length == p.rows.length))
-
-    // ground truth: a brute serving index over the UNION of both corpora
-    val union = HybridSearch.servingIndex(
-      index.chunks.unionByName(late.chunks),
-      index.vectors.unionByName(late.vectors))
-    val requests = Seq(
-      SearchRequest("quokka sentinel", "c1", topK = 5),
-      SearchRequest("chunk overlap settings", "c1", topK = 5),
-      SearchRequest("quokka rebuild", "c1", mode = "semantic", topK = 3),
-      SearchRequest("searchable", "c1", mode = "keyword", topK = 5))
-    // dispatch prefers the HNSW leg; a hnsw-stripped view of the SAME
-    // upserted cache routes through the grown PQ codes instead, so both
-    // layouts' post-upsert results are query-verified against the rebuild
-    val updatedPqView = updated.copy(
-      serving = updated.serving.map(_.copy(hnsw = None)))
-    requests.foreach { req =>
-      val viaRebuilt = HybridSearch.search(union, req, embedder)
-      val viaUpserted = HybridSearch.search(updated, req, embedder)
-      assert(viaUpserted.map(h => (h.chunk_id, h.score)) ==
-        viaRebuilt.map(h => (h.chunk_id, h.score)),
-        s"upserted cache diverged from rebuilt for $req")
-      val viaUpsertedPq = HybridSearch.search(updatedPqView, req, embedder)
-      assert(viaUpsertedPq.map(h => (h.chunk_id, h.score)) ==
-        viaRebuilt.map(h => (h.chunk_id, h.score)),
-        s"upserted PQ leg diverged from rebuilt for $req")
-    }
-    // the new doc is actually the winner for its own phrase
-    assert(HybridSearch.search(updated,
-      SearchRequest("quokka sentinel", "c1", topK = 3), embedder)
-      .head.document_id == "doc-late")
-    Seq(serving, updated, union).foreach { s =>
       s.chunks.unpersist(); s.vectors.unpersist()
       s.serving.foreach(_.unpersist())
     }
