@@ -1,13 +1,16 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Benchmark main: one JSON line with per-query steady-state seconds at
-  * SPARK_GRAFT_SF_DIR. Each query is warmed once at sf0.001 first so the
-  * measurement excludes one-time whole-stage-codegen compilation and JIT
-  * warmup (BASELINE.md: "BENCH compares steady-state query time, not cold
-  * start" — the reference's numbers are warm-path latencies of a running
-  * service).
+/** Benchmark main: per-query steady-state seconds for the operator battery
+  * at SPARK_GRAFT_SF_DIR, then upload→searchable and reindex→searchable.
+  * Each query is warmed once at sf0.001 first so the measurement excludes
+  * one-time whole-stage-codegen compilation and JIT warmup (BASELINE.md:
+  * "BENCH compares steady-state query time, not cold start" — the
+  * reference's numbers are warm-path latencies of a running service).
+  * Every run goes through [[Harness.measure]].
+  *
+  * Usage: runMain graft.Bench [query-prefix ...]. With prefixes only the
+  * matching queries run and BENCH_FULL.json is left as it is. Search
+  * latency through the REST surface is measured by perfbench/, not here.
   */
 object Bench {
   /** Above this many >1.5x pass-disagreement pairs, the battery runs a
@@ -18,233 +21,24 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val warmDir = "/root/testdata/sf0.001"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val all = SparkEntry.queries.toSeq.sortBy(_._1)
+    args.foreach(p =>
+      require(all.exists(_._1.startsWith(p)), s"no query name starts with '$p'"))
+    val selected = all.filter { case (n, _) => args.isEmpty || args.exists(n.startsWith) }
+    val spark = Harness.session()
 
-    // Materialization-honest action: count() lets Catalyst prune output
-    // columns, so a query whose cost lives in a payload column (q76's
-    // reassembly hid behind this for three rounds) times far below what a
-    // consumer pays. toRdd.count() evaluates the final physical plan's
-    // UnsafeRow projection — every output column is computed.
-    def run(df: org.apache.spark.sql.DataFrame): Long =
-      try df.queryExecution.toRdd.count() catch { case _: Throwable => -1L }
-
-    // Release ALL storage between measurements. clearCache() only empties
-    // the SQL CacheManager; localCheckpoint(true) blocks (from
-    // Catalog.materializeAndRelease) live at the RDD level and survived it,
-    // so in round 4 every query + its warm-up twin leaked blocks for the
-    // remaining 79-query suite and the late/heavy queries ran under
-    // accumulating memory pressure (q79 21 s vs ~1.5 s isolated).
-    def releaseStorage(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-    }
-
-    def gcMillis(): Long = {
-      import scala.jdk.CollectionConverters._
-      java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-        .asScala.map(_.getCollectionTime).sum
-    }
-
-    // Whole-process CPU time (all 32 local-mode executor threads + driver):
-    // wall-time on this box drifts 2-26x with co-tenant load (BENCH_NOTES
-    // r11/r12 needed a manual worktree A/B to separate noise from
-    // regression), but CPU burned by THIS process is contention-blind —
-    // a query whose cpu_s holds steady while wall moves is machine noise;
-    // a cpu_s move is a real plan change. -1 when the JVM doesn't expose it.
-    def procCpuNs(): Long =
-      java.lang.management.ManagementFactory.getOperatingSystemMXBean match {
-        case os: com.sun.management.OperatingSystemMXBean => os.getProcessCpuTime
-        case _ => -1L
-      }
-
-    // Shared by the serving section below AND its post-battery twin.
-    val servingEmbedder = graft.embed.HashEmbedder(64)
-    val servingCfg = graft.model.ChunkingConfig(maxChunkSize = 64, overlap = 8, minChunkSize = 8)
-    def servingDocs = {
-      import org.apache.spark.sql.functions.col
-      import spark.implicits._
-      spark.read.parquet(s"$sfDir/documents.parquet")
-        .select(col("doc_id").cast("string"), col("lang"), col("source"), col("text"))
-        .as[(String, String, String, String)]
-        .map { case (id, lang, source, text) =>
-          graft.ingest.IndexBuild.RawDoc(id, lang, s"/$source/$id.txt", s"$id.txt", text)
-        }
-    }
-
-    // The ingest + serving-latency section runs BEFORE the query battery:
-    // r8's official artifact measured 2,783 chunks/s vs 4,649-4,894 in
-    // uncontended runs because the 140-query suite ran ahead of it (page
-    // cache, JIT deopt, heap pressure). Measuring it first makes the
-    // official number the uncontended one; the battery's own warm pass
-    // still precedes the battery.
-    // BASELINE-comparable derived metrics: index-build throughput (chunks/s,
-    // reference bottleneck ~100 ms/chunk => ~10 chunks/s/worker) and
-    // steady-state hybrid-search latency over cached index frames
-    // (reference: <100 ms with both legs + fusion).
-    val (chunksPerSec, hybridMs, hybridMaxsimMs, chunkMs, embedMs, writeMs,
-         keywordLegMs, vectorLegMs) = {
-      val embedder = servingEmbedder
-      val docs = servingDocs
-      val cfg = servingCfg
-      // PER-PHASE ingest telemetry (round-8 verdict item 5: the official
-      // artifact's chunks/s moved outside the noise band with no code
-      // change — the artifact must explain its own number). Each phase
-      // materializes before the clock stops; the headline chunks/s stays
-      // chunk+embed (the r7/r8-comparable definition), with the write
-      // phase measured separately.
-      // THREE full-scale passes, min taken per phase: a small-SF
-      // self-warm is too little to drive the chunk/embed loops through
-      // C2 — a single cold pass measured 1,808 chunks/s, pass 2 3,390,
-      // pass 3 4,411 where the steady state is ~4,700. Passes 1-2 are
-      // the real warmup (full sf0.1 volume); pass 3 is steady-state.
-      // Min-of-N matches the battery's rule.
-      case class IngestPass(chunkMs: Double, embedMs: Double, writeMs: Double,
-          n: Long,
-          chunks: org.apache.spark.sql.Dataset[graft.ingest.IndexBuild.BuiltChunk],
-          vectors: org.apache.spark.sql.DataFrame)
-      def ingestPass(keep: Boolean): IngestPass = {
-        val t0 = System.nanoTime()
-        val c = graft.ingest.IndexBuild
-          .chunkDocs(docs, graft.chunk.RecursiveChunker, cfg).persist()
-        c.count()
-        val tChunk = System.nanoTime()
-        val v = graft.ingest.IndexBuild.embedChunks(c, None, embedder).persist()
-        val n = v.count()
-        val tEmbed = System.nanoTime()
-        val writeDir = java.nio.file.Files.createTempDirectory("graft-bench-wh").toString
-        v.write.mode("overwrite").parquet(s"$writeDir/vectors")
-        c.toDF().drop("precomputed").write.mode("overwrite")
-          .parquet(s"$writeDir/chunks")
-        val tWrite = System.nanoTime()
-        if (!keep) { c.unpersist(); v.unpersist() }
-        // the written warehouse only exists to time the write phase
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(writeDir))
-        IngestPass((tChunk - t0) / 1e6, (tEmbed - tChunk) / 1e6,
-          (tWrite - tEmbed) / 1e6, n, c, v)
-      }
-      val passes = Seq(ingestPass(keep = false), ingestPass(keep = false),
-        ingestPass(keep = true))
-      passes.zipWithIndex.foreach { case (p, i) =>
-        System.err.println(
-          f"[ingest] pass${i + 1} chunk=${p.chunkMs}%.0f ms embed=${p.embedMs}%.0f ms " +
-            f"write=${p.writeMs}%.0f ms  (${p.n} chunks)")
-      }
-      val nChunks = passes.head.n
-      val phaseChunkMs = passes.map(_.chunkMs).min
-      val phaseEmbedMs = passes.map(_.embedMs).min
-      val phaseWriteMs = passes.map(_.writeMs).min
-      val ingestSec = (phaseChunkMs + phaseEmbedMs) / 1e3
-      // the serving section below builds on pass 2's persisted frames
-      val chunks = passes.last.chunks
-      val vectors = passes.last.vectors
-      // interactive-serving config: few cached partitions, AQE off — tiny
-      // per-query jobs pay per-task overhead, not data cost (SCALE.md).
-      // The serving layout a deployment builds at index time (denormalized
-      // vector cache; keyword leg on the cached token-array scan — at
-      // interactive scale the single-stage scan beats the postings leg's
-      // two aggregation shuffles; postings win when the corpus outgrows
-      // cache, not here).
-      val index = graft.search.HybridSearch.servingIndex(chunks.toDF(), vectors)
-      val req = graft.model.SearchRequest("spark join window", "en", topK = 10)
-      val savedAqe = spark.conf.get("spark.sql.adaptive.enabled")
-      val savedParts = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      spark.conf.set("spark.sql.shuffle.partitions", "4")
-      // SELF-WARM (round-9 verdict item 1): serving measures BEFORE the
-      // battery since round 9, i.e. in a barely-JIT'd JVM — the same
-      // mechanism that made r8's ingest artifact read 2,783 chunks/s
-      // against a 4,700 steady state, in reverse. One warm call is not C2
-      // territory for a ~50 ms driver+job path; drive it through the
-      // compiler with a sustained loop first, like the three-pass ingest,
-      // and PRINT the per-block medians so the artifact shows its own
-      // convergence (steady state = last block ≈ second-to-last).
-      System.gc() // shed the ingest passes' garbage before the latency loop
-      val warmBlocks = (1 to 4).map { _ =>
-        val ts = (1 to 16).map { _ =>
-          val s0 = System.nanoTime()
-          graft.search.HybridSearch.search(index, req, embedder)
-          (System.nanoTime() - s0) / 1e6
-        }.sorted
-        ts(ts.length / 2)
-      }
-      System.err.println(warmBlocks.map(m => f"$m%.1f").mkString(
-        "[hybrid] self-warm convergence (median of 16 per block): ",
-        " -> ", " ms"))
-      def medianMs(ix: graft.search.HybridSearch.Index,
-          r: graft.model.SearchRequest = req): Double = {
-        (1 to 3).foreach(_ => graft.search.HybridSearch.search(ix, r, embedder))
-        val ts = (1 to 11).map { _ =>
-          val s0 = System.nanoTime()
-          graft.search.HybridSearch.search(ix, r, embedder)
-          (System.nanoTime() - s0) / 1e6
-        }.sorted
-        ts(ts.length / 2)
-      }
-      val bruteMs = medianMs(index)
-      // per-leg latencies against BASELINE's own targets (<20 ms keyword,
-      // <50 ms vector): SAME index, SAME definition, single-leg mode —
-      // every BASELINE row gets a measured twin in the artifact
-      val keywordMs = medianMs(index, req.copy(mode = "keyword"))
-      val vectorMs = medianMs(index, req.copy(mode = "semantic"))
-      System.err.println(
-        f"[hybrid] legs: keyword=${keywordMs}%.1f ms vector=${vectorMs}%.1f ms (single-leg mode, same index/definition)")
-      // MaxSim rerank tier riding the brute layout (SearchRequest
-      // maxsimTokens — the late-interaction serving slot): the delta vs
-      // bruteMs is the tier's driver-side token-scoring cost
-      val maxsimMs = medianMs(index, req.copy(maxsimTokens = Some(8)))
-      System.err.println(
-        f"[hybrid] brute=${bruteMs}%.1f ms (scans $nChunks rows) maxsim=${maxsimMs}%.1f ms")
-      spark.conf.set("spark.sql.adaptive.enabled", savedAqe)
-      spark.conf.set("spark.sql.shuffle.partitions", savedParts)
-      (nChunks / math.max(ingestSec, 1e-9), bruteMs, maxsimMs, phaseChunkMs,
-        phaseEmbedMs, phaseWriteMs, keywordMs, vectorMs)
-    }
-    releaseStorage() // serving-index frames must not skew the streaming run
-
-    // Dev-only subset runs (A/B a query rework without the full battery):
-    // SPARK_GRAFT_BENCH_ONLY=q25,q26 — unset for the driver's full suite.
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(f => f.exists(n.startsWith)) }
     // A query that throws (analysis error, runtime failure) must surface as
     // an ERROR in the artifact, not as a fast time: in round 6 the four
     // timestamp-drift-broken queries were recorded at analysis-failure
-    // latency, and q82's 0.072 s read as a 25x speed-up. `measure` returns
-    // -1 for a failed pass and records the name; the JSON gains an
-    // "errors":[...] field that the driver/judge treats like rc!=0.
+    // latency, and q82's 0.072 s read as a 25x speed-up. A failed pass is
+    // -1 and names the query in "errors":[...], which the driver/judge
+    // treats like rc!=0.
     val errored = scala.collection.mutable.LinkedHashSet[String]()
-    def measure(name: String,
-        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-        p: Int): (Double, Double) = {
-      val gc0 = gcMillis()
-      val cpu0 = procCpuNs()
-      val t0 = System.nanoTime()
-      val ok = try run(fn(spark, sfDir)) >= 0 catch { case _: Throwable => false }
-      val dt = (System.nanoTime() - t0) / 1e9
-      val cpuDt = if (cpu0 < 0) -1.0 else (procCpuNs() - cpu0) / 1e9
-      val gcDt = gcMillis() - gc0
-      val leftover = spark.sparkContext.getPersistentRDDs.size
-      val heapMb = {
-        val rt = Runtime.getRuntime
-        (rt.totalMemory() - rt.freeMemory()) / (1024 * 1024)
+    def measure(name: String, fn: Harness.Query, p: Int): (Double, Double) =
+      Harness.measure(spark, f"$name%-28s p$p", fn, sfDir) match {
+        case Right(s) => (s.wall, s.cpu)
+        case Left(_) => errored += name; (-1.0, -1.0)
       }
-      // per-pass telemetry so the next suite-context anomaly is diagnosable
-      // from the driver artifact (stderr — stdout stays one JSON line)
-      System.err.println(
-        f"[bench] $name%-28s p$p ${dt}%8.3f s  cpu=${cpuDt}%7.3f s  gc=${gcDt}%5d ms  heap=${heapMb}%6d MB  rddBlocksLeft=$leftover" +
-          (if (ok) "" else "  FAILED"))
-      releaseStorage()
-      if (!ok) { errored += name; (-1.0, -1.0) } else (dt, cpuDt)
-    }
 
     // Warm every query once at sf0.001 (codegen + JIT are JVM-global, so
     // warmth survives the suite), then run the two measured passes
@@ -255,10 +49,7 @@ object Bench {
     // contention burst lands on DIFFERENT queries in the two passes instead
     // of poisoning both passes of the same query back-to-back — a
     // regression that survives the min is real.
-    selected.foreach { case (_, fn) =>
-      try run(fn(spark, warmDir)) catch { case _: Throwable => () }
-      releaseStorage() // warm runs must not occupy storage memory
-    }
+    selected.foreach { case (_, fn) => Harness.warm(spark, fn) }
     val passA = selected.map { case (n, fn) => n -> measure(n, fn, 1) }.toMap
     val passB = selected.map { case (n, fn) => n -> measure(n, fn, 2) }.toMap
     // DRIFT AUTO-EXTEND: when more than DriftAutoExtendPairs queries
@@ -289,63 +80,22 @@ object Bench {
         (n, minW, passes.map(_._1).max, minC)
       }
     }
-    val qs = results.map { case (k, v, _, _) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val cpuJson = results.map { case (k, _, _, c) =>
-      "\"" + k + "\":" + f"$c%.3f" }.mkString("{", ",", "}")
+    def str(s: String): String = "\"" + s + "\""
+    def obj(fields: Seq[(String, String)]): String =
+      fields.map { case (k, v) => str(k) + ":" + v }.mkString("{", ",", "}")
+    val qs = obj(results.map { case (k, v, _, _) => k -> v.toString })
+    val cpuJson = obj(results.map { case (k, _, _, c) => k -> f"$c%.3f" })
     // queries whose two passes disagree >1.5x: environmental drift, named
     // in the artifact itself so a judge can tell drift from regression
-    val drift = results.collect {
-      case (k, lo, hi, _) if lo > 0 && hi / lo > 1.5 =>
-        "\"" + k + "\":" + f"[$lo%.3f,$hi%.3f]"
-    }.mkString("{", ",", "}")
-    val errors = errored.toSeq.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val drift = obj(results.collect {
+      case (k, lo, hi, _) if lo > 0 && hi / lo > 1.5 => k -> f"[$lo%.3f,$hi%.3f]"
+    })
+    val errors = errored.toSeq.map(str).mkString("[", ",", "]")
     if (errored.nonEmpty)
       System.err.println(
         s"[bench] ERRORS: ${errored.size} queries failed: ${errored.mkString(", ")}")
     val total = results.map(_._2).filter(_ >= 0).sum
     val totalCpu = results.map(_._4).filter(_ >= 0).sum
-
-    // POST-BATTERY TWIN (round-9 verdict item 1): re-measure the brute
-    // serving layout AFTER the 146-query battery in the SAME JVM, same
-    // definition (fresh index build, 3 warm, median of 11). Pre/post
-    // agreement in one artifact proves the serving number is
-    // steady-state-defined and the r8→r9 37→63 ms move was
-    // measurement-order JIT warmth, not a serving regression.
-    val hybridPostBatteryMs: Double = {
-      // conf restore + storage release in FINALLY: a failed twin must
-      // not leave AQE off and 4 shuffle partitions for the
-      // upload/reindex-to-searchable baselines measured after it
-      val savedAqe = spark.conf.get("spark.sql.adaptive.enabled")
-      val savedParts = spark.conf.get("spark.sql.shuffle.partitions")
-      try {
-        val chunks2 = graft.ingest.IndexBuild
-          .chunkDocs(servingDocs, graft.chunk.RecursiveChunker, servingCfg).persist()
-        val vectors2 = graft.ingest.IndexBuild
-          .embedChunks(chunks2, None, servingEmbedder).persist()
-        vectors2.count()
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        spark.conf.set("spark.sql.shuffle.partitions", "4")
-        val index2 = graft.search.HybridSearch.servingIndex(chunks2.toDF(), vectors2)
-        val req2 = graft.model.SearchRequest("spark join window", "en", topK = 10)
-        (1 to 3).foreach(_ =>
-          graft.search.HybridSearch.search(index2, req2, servingEmbedder))
-        val ts = (1 to 11).map { _ =>
-          val s0 = System.nanoTime()
-          graft.search.HybridSearch.search(index2, req2, servingEmbedder)
-          (System.nanoTime() - s0) / 1e6
-        }.sorted
-        ts(ts.length / 2)
-      } catch { case _: Throwable => -1.0 }
-      finally {
-        spark.conf.set("spark.sql.adaptive.enabled", savedAqe)
-        spark.conf.set("spark.sql.shuffle.partitions", savedParts)
-        releaseStorage()
-      }
-    }
-    System.err.println(
-      f"[hybrid] twin: pre-battery=$hybridMs%.1f ms post-battery=$hybridPostBatteryMs%.1f ms (same definition, same JVM)")
-
 
     // BASELINE "upload -> searchable < 30 s": wall time from dropping a
     // file into a watched dir until a hybrid search over the freshly-read
@@ -443,31 +193,40 @@ object Bench {
     // (2 clean / 3 drift-extended) — consumers must be able to tell
     // 2-pass and 3-pass minima apart, and to key round-over-round claims
     // on cpu from the artifact alone
-    val perQuery = results.map { case (k, lo, hi, c) =>
-      "\"" + k + "\":" + f"{\"wall\":[$lo%.3f,$hi%.3f],\"cpu\":$c%.3f}"
-    }.mkString("{", ",", "}")
+    val perQuery = obj(results.map { case (k, lo, hi, c) =>
+      k -> f"{\"wall\":[$lo%.3f,$hi%.3f],\"cpu\":$c%.3f}"
+    })
     val passCount = if (passC.isDefined) 3 else 2
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","cpu_total":${"%.1f".format(totalCpu)},"passes":$passCount,"queries":$qs,"cpu":$cpuJson,"per_query":$perQuery,"drift":$drift,"errors":$errors,"sf":"$sfDir","ingest_chunks_per_s":${"%.1f".format(chunksPerSec)},"ingest_phase_ms":{"chunk":${"%.0f".format(chunkMs)},"embed":${"%.0f".format(embedMs)},"write":${"%.0f".format(writeMs)}},"hybrid_query_ms":${"%.1f".format(hybridMs)},"keyword_query_ms":${"%.1f".format(keywordLegMs)},"vector_query_ms":${"%.1f".format(vectorLegMs)},"hybrid_query_ms_maxsim":${"%.1f".format(hybridMaxsimMs)},"hybrid_query_ms_postbattery":${"%.1f".format(hybridPostBatteryMs)},"upload_to_searchable_s":${"%.2f".format(uploadToSearchableS)},"reindex_to_searchable_s":${"%.2f".format(reindexToSearchableS)}}"""
+    // ONE field list feeds both lines: the full line adds the per-query
+    // maps, the compact line the query count
+    val headline = Seq("metric" -> str("total"), "value" -> total.toString,
+      "unit" -> str("sec"), "cpu_total" -> "%.1f".format(totalCpu),
+      "passes" -> passCount.toString)
+    val trailer = Seq("errors" -> errors, "sf" -> str(sfDir),
+      "upload_to_searchable_s" -> "%.2f".format(uploadToSearchableS),
+      "reindex_to_searchable_s" -> "%.2f".format(reindexToSearchableS))
+    val line = obj(headline ++ Seq("queries" -> qs, "cpu" -> cpuJson,
+      "per_query" -> perQuery, "drift" -> drift) ++ trailer)
     println(line)
     // the driver's artifact keeps only the LAST 2000 chars of stdout, which
     // on drift-heavy runs truncates the per-query maps away — persist the
-    // COMPLETE line where the judge can read it whole
-    try java.nio.file.Files.write(
-      java.nio.file.Paths.get("BENCH_FULL.json"),
-      (line + "\n").getBytes("UTF-8"))
-    catch { case e: Exception =>
-      System.err.println(s"[bench] could not write BENCH_FULL.json: ${e.getMessage}") }
+    // COMPLETE line where the judge can read it whole. A subset run leaves
+    // the committed full-battery file alone.
+    val fullWritten = args.isEmpty && (try {
+      java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_FULL.json"),
+        (line + "\n").getBytes("UTF-8"))
+      true
+    } catch { case e: Exception =>
+      System.err.println(s"[bench] could not write BENCH_FULL.json: ${e.getMessage}")
+      false
+    })
     // COMPACT HEADLINE (round-15 verdict item 1): the full line above is
     // ~15 KB and the driver's artifact keeps only the last 2000 chars of
     // stdout, so its parser has seen a mid-JSON fragment every round since
-    // r12 (BENCH_r12..r15 all `parsed: null`). Print a second, FINAL line
-    // — the same headline fields, NO per-query maps, well under the tail —
-    // so the driver's automated round-over-round comparison can parse at
-    // least the totals. The full line (with every per-query entry,
-    // unchanged) still prints first AND lands in BENCH_FULL.json; nothing
-    // is removed or renamed, this is purely an additional summary line.
-    val compact = s"""{"metric":"total","value":$total,"unit":"sec","cpu_total":${"%.1f".format(totalCpu)},"passes":$passCount,"n_queries":${results.size},"errors":$errors,"sf":"$sfDir","ingest_chunks_per_s":${"%.1f".format(chunksPerSec)},"hybrid_query_ms":${"%.1f".format(hybridMs)},"keyword_query_ms":${"%.1f".format(keywordLegMs)},"vector_query_ms":${"%.1f".format(vectorLegMs)},"hybrid_query_ms_maxsim":${"%.1f".format(hybridMaxsimMs)},"hybrid_query_ms_postbattery":${"%.1f".format(hybridPostBatteryMs)},"upload_to_searchable_s":${"%.2f".format(uploadToSearchableS)},"reindex_to_searchable_s":${"%.2f".format(reindexToSearchableS)},"full_line":"BENCH_FULL.json"}"""
-    println(compact)
+    // r12. This FINAL line carries the same headline fields without the
+    // per-query maps, well under the tail.
+    println(obj(headline ++ Seq("n_queries" -> results.size.toString) ++ trailer ++
+      (if (fullWritten) Seq("full_line" -> str("BENCH_FULL.json")) else Nil)))
     spark.stop()
   }
 }

@@ -1,7 +1,6 @@
 package graft
 
 import graft.store.TxLog
-import org.apache.spark.sql.SparkSession
 
 /** Checkpoint-format rehearsal at a REALISTIC live-file count: the
   * multipart parquet checkpoint exists for warehouses with 10^5..10^7
@@ -17,12 +16,7 @@ import org.apache.spark.sql.SparkSession
 object CheckpointScale {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toInt).getOrElse(200000)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     val wh = java.nio.file.Files.createTempDirectory("graft-ckscale").toString
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(wh), spark.sparkContext.hadoopConfiguration)

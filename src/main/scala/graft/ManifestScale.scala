@@ -1,7 +1,7 @@
 package graft
 
+import graft.Harness.{heapUsed, settledHeap}
 import graft.store.TxLog
-import org.apache.spark.sql.SparkSession
 
 /** Snapshot-as-a-DataFrame rehearsal: measures DRIVER HEAP for the two
   * pruning paths as the live-file count grows — the full snapshot fold
@@ -21,37 +21,9 @@ import org.apache.spark.sql.SparkSession
   * Numbers land in SCALE.md / BENCH_NOTES.
   */
 object ManifestScale {
-  private def heapUsed(): Long = {
-    val rt = Runtime.getRuntime
-    System.gc(); System.gc()
-    Thread.sleep(200)
-    rt.totalMemory() - rt.freeMemory()
-  }
-
-  /** A BASELINE reading needs the heap settled — a just-finished Spark
-    * job leaves block/broadcast state that clears asynchronously and
-    * would otherwise inflate the baseline (negative deltas). Probe until
-    * two consecutive readings agree within 5% (max 6 probes). */
-  private def settledHeap(): Long = {
-    var prev = heapUsed()
-    var i = 0
-    while (i < 6) {
-      Thread.sleep(500)
-      val cur = heapUsed()
-      if (math.abs(cur - prev) < math.max(prev, cur) * 0.05) return math.min(cur, prev)
-      prev = cur; i += 1
-    }
-    prev
-  }
-
   def main(args: Array[String]): Unit = {
     val sizes = if (args.nonEmpty) args.map(_.toInt).toSeq else Seq(200000, 1000000)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
 
     def timed[T](what: String)(f: => T): (T, Double) = {
       val t0 = System.nanoTime()

@@ -2,7 +2,6 @@ package graft
 
 import graft.embed.HashEmbedder
 import graft.functions.CosineSimilarity
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Micro-benchmarks for operator implementation choices (SURVEY §4.2:
@@ -11,12 +10,7 @@ import org.apache.spark.sql.functions._
   */
 object MicroBench {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session(cpus = 8)
     import spark.implicits._
 
     val emb = HashEmbedder(64)

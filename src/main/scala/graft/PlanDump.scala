@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Dev tool: dump `.explain("formatted")` for catalog queries to files
@@ -18,14 +17,7 @@ object PlanDump {
     val tag = args(1)
     val names = args.drop(2)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session()
     spark.conf.set("graft.plan.inspect", "true")
     Files.createDirectories(Paths.get(outDir))
     names.foreach { name =>
@@ -38,8 +30,7 @@ object PlanDump {
       } catch { case e: Throwable =>
         System.err.println(s"[plandump] $name FAILED: ${e.getMessage}")
       }
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+      Harness.releaseStorage(spark)
     }
     spark.stop()
   }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.Harness.heapUsed
 import org.apache.spark.sql.functions._
 
 /** Streaming-rename rehearsal at ledger scale: DRIVER HEAP and wall time
@@ -18,22 +18,10 @@ import org.apache.spark.sql.functions._
   * Numbers land in SCALE.md / BENCH_NOTES.
   */
 object RenameScale {
-  private def heapUsed(): Long = {
-    val rt = Runtime.getRuntime
-    System.gc(); System.gc()
-    Thread.sleep(200)
-    rt.totalMemory() - rt.freeMemory()
-  }
-
   def main(args: Array[String]): Unit = {
     val sizes = if (args.nonEmpty) args.map(_.toInt).toSeq
       else Seq(100000, 1000000)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     import spark.implicits._
 
     sizes.foreach { n =>

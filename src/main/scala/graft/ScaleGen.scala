@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scaling-rehearsal corpus generator: synthesize an N× scale factor from
@@ -40,13 +40,7 @@ object ScaleGen {
   def main(args: Array[String]): Unit = {
     val Array(baseDir, outDir, copiesStr) = args
     val copies = copiesStr.toInt
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     new java.io.File(outDir).mkdirs()
 
     def base(t: String): DataFrame = spark.read.parquet(s"$baseDir/$t.parquet")

@@ -1,5 +1,6 @@
 package graft
 
+import graft.Harness.{heapUsed, settledHeap}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -18,26 +19,6 @@ import org.apache.spark.sql.functions._
   * Numbers land in SCALE.md / BENCH_NOTES.
   */
 object SyncScale {
-  private def heapUsed(): Long = {
-    val rt = Runtime.getRuntime
-    System.gc(); System.gc()
-    Thread.sleep(200)
-    rt.totalMemory() - rt.freeMemory()
-  }
-
-  private def settledHeap(): Long = {
-    var prev = heapUsed()
-    var i = 0
-    while (i < 6) {
-      Thread.sleep(500)
-      val cur = heapUsed()
-      if (math.abs(cur - prev) < math.max(prev, cur) * 0.05)
-        return math.min(cur, prev)
-      prev = cur; i += 1
-    }
-    prev
-  }
-
   /** First-crawl rehearsal (round-14 verdict item 3): wall time for an
     * EMPTY container's initial sync, driver MaxBulk loop vs the
     * `fetchBulk` one-commit bulk path, at growing file counts. The loop
@@ -82,13 +63,8 @@ object SyncScale {
   }
 
   def main(args: Array[String]): Unit = {
+    val spark = Harness.session()
     if (args.headOption.contains("firstcrawl")) {
-      val spark = SparkSession.builder()
-        .master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
       firstCrawl(spark,
         if (args.length > 1) args.tail.map(_.toInt).toSeq else Seq(1000, 4000))
       spark.stop()
@@ -96,12 +72,6 @@ object SyncScale {
     }
     val sizes = if (args.nonEmpty) args.map(_.toInt).toSeq
       else Seq(100000, 1000000)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
 
     sizes.foreach { n =>
       val wh = java.nio.file.Files.createTempDirectory(s"graft-sscale-$n").toString

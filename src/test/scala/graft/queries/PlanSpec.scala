@@ -12,13 +12,15 @@ class PlanSpec extends AnyFunSuite {
   import TestSpark.spark
   private val sf = "/root/testdata/sf0.001"
 
-  private def plan(name: String): String = {
+  private def physical(name: String): org.apache.spark.sql.execution.SparkPlan = {
     // inspect the REAL plan, not the post-materialization ExistingRDD scan
     // (see Catalog.materializeAndRelease)
     spark.conf.set("graft.plan.inspect", "true")
-    try Catalog.queries(name)(spark, sf).queryExecution.executedPlan.toString
+    try Catalog.queries(name)(spark, sf).queryExecution.executedPlan
     finally spark.conf.set("graft.plan.inspect", "false")
   }
+
+  private def plan(name: String): String = physical(name).toString
 
   test("filters push into the parquet scan with pruned columns (q03)") {
     val p = plan("q03_filter_project")
@@ -124,27 +126,31 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("PCA covariance Gramian aggregates in-buffer, no explode feeds it (q86)") {
-    val p = plan("q86_pca_covariance")
+    import org.apache.spark.sql.catalyst.expressions.aggregate.Partial
+    import org.apache.spark.sql.execution.GenerateExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec
+    import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, CartesianProductExec}
+    import org.apache.spark.sql.execution.window.WindowExec
+    val helper = new AdaptiveSparkPlanHelper {}
+    val p = physical("q86_pca_covariance")
     // round-16: the Gramian accumulates in a d(d+1)/2 buffer aggregate
-    // (UpperTriSums) — no Generate may feed it (the old shape exploded
-    // rows*2080 terms into the partial aggregate); the means leg still
-    // partial-aggregates and the two mean joins must broadcast
-    assert(p.contains("upper_tri_sums"), p.take(1200))
-    assert(p.contains("partial_sum") || p.contains("partial_"), p.take(1200))
-    assert(p.contains("BroadcastHashJoin"), p.take(1200))
-    assert(!p.contains("Window"), p.take(1200))
-    assert(!p.contains("CartesianProduct"), p.take(1200))
-    // the one Generate left is the FINAL 2080-row struct unpack AFTER the
-    // aggregate (and the means posexplode) — never upstream of the
-    // Gramian ObjectHashAggregate. Structural check: the aggregate's
-    // child subtree (everything below the first ObjectHashAggregate that
-    // mentions upper_tri_sums, partial mode) must be Generate-free.
-    val lines = p.linesIterator.toSeq
-    val aggIdx = lines.lastIndexWhere(l =>
-      l.contains("ObjectHashAggregate") && l.contains("upper_tri_sums"))
-    assert(aggIdx >= 0, p.take(1200))
-    assert(!lines.drop(aggIdx + 1).takeWhile(l => !l.contains("Scan"))
-      .exists(_.contains("Generate")), lines.drop(aggIdx).take(6).mkString("\n"))
+    // (UpperTriSums) — the old shape exploded rows*2080 terms into the
+    // partial aggregate, so no Generate may sit anywhere below it. The
+    // Generates left are the struct unpack above it and the means legs'
+    // posexplode beside it.
+    val gramian = helper.collect(p) {
+      case a: ObjectHashAggregateExec if a.aggregateExpressions.exists(e =>
+          e.mode == Partial &&
+            e.aggregateFunction.isInstanceOf[graft.functions.UpperTriSums]) => a
+    }
+    assert(gramian.size == 1, p.treeString)
+    assert(helper.collect(gramian.head.child) { case g: GenerateExec => g }.isEmpty,
+      gramian.head.treeString)
+    // the two mean joins broadcast; no window, no cartesian product
+    assert(helper.collect(p) { case j: BroadcastHashJoinExec => j }.nonEmpty, p.treeString)
+    assert(helper.collect(p) { case w: WindowExec => w }.isEmpty, p.treeString)
+    assert(helper.collect(p) { case c: CartesianProductExec => c }.isEmpty, p.treeString)
   }
 
   test("quality features keep q77's shapes: keyed joins, no windows (q87)") {
