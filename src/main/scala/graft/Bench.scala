@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
+
 /** Benchmark main: per-query steady-state seconds for the operator battery
   * at SPARK_GRAFT_SF_DIR, then upload→searchable and reindex→searchable.
   * Each query is warmed once at sf0.001 first so the measurement excludes
@@ -97,42 +99,7 @@ object Bench {
     val total = results.map(_._2).filter(_ >= 0).sum
     val totalCpu = results.map(_._4).filter(_ >= 0).sum
 
-    // BASELINE "upload -> searchable < 30 s": wall time from dropping a
-    // file into a watched dir until a hybrid search over the freshly-read
-    // warehouse returns it (streaming micro-batch + append upsert + search).
-    val uploadToSearchableS: Double = try {
-      val tmp = java.nio.file.Files.createTempDirectory("graft-bench-stream")
-      val watch = tmp.resolve("in"); val wh = tmp.resolve("wh"); val cp = tmp.resolve("cp")
-      java.nio.file.Files.createDirectories(watch)
-      val embedder = graft.embed.HashEmbedder(64)
-      val q = graft.streaming.StreamingIngest.start(
-        spark, watch.toString, "bench", wh.toString, cp.toString,
-        embedder = embedder,
-        trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime("250 milliseconds"))
-      val t0 = System.nanoTime()
-      java.nio.file.Files.write(watch.resolve("note.txt"),
-        "The zanzibar protocol gates warehouse uploads end to end.".getBytes("UTF-8"))
-      val deadline = t0 + 30L * 1000 * 1000 * 1000
-      var found = false
-      while (!found && System.nanoTime() < deadline) {
-        found = try {
-          val chunks = graft.streaming.StreamingIngest.latest(
-            graft.streaming.StreamingIngest.table(spark, wh.toString, "chunks"))
-          val vectors = graft.streaming.StreamingIngest.latest(
-            graft.streaming.StreamingIngest.table(spark, wh.toString, "vectors"))
-          val hits = graft.search.HybridSearch.search(
-            graft.search.HybridSearch.Index(chunks, vectors.join(
-              chunks.select("chunk_id", "path"), Seq("chunk_id"))),
-            graft.model.SearchRequest("zanzibar protocol", "bench", topK = 3),
-            embedder)
-          hits.nonEmpty
-        } catch { case _: org.apache.spark.sql.AnalysisException => false }
-        if (!found) Thread.sleep(100)
-      }
-      val dt = (System.nanoTime() - t0) / 1e9
-      q.stop()
-      if (found) dt else -1.0
-    } catch { case _: Throwable => -1.0 }
+    val uploadToSearchableS = uploadToSearchable(spark)()
 
     // BASELINE "<30 s" is about INCREMENTAL updates: wall time for a 10%
     // reindex — classify the delta against the stored ledger (J5/T6),
@@ -140,12 +107,10 @@ object Bench {
     // and hybrid-search until the revised content wins last-writer-wins.
     // Also the guard that the TxLog path didn't regress interactive reads:
     // the search loop reads through the log snapshot every iteration.
-    val reindexToSearchableS: Double = try {
+    val reindexToSearchableS: Double = try withTempDir("graft-bench-reindex") { tmp =>
       import org.apache.spark.sql.functions.{col, lit, map, sha2}
       import spark.implicits._
-      val wh = java.nio.file.Files.createTempDirectory("graft-bench-reindex")
-        .resolve("wh").toString
-      val embedder = graft.embed.HashEmbedder(64)
+      val wh = tmp.resolve("wh").toString
       val cfg = graft.model.ChunkingConfig(maxChunkSize = 64, overlap = 8, minChunkSize = 8)
       val nDocs = 50
       def doc(i: Int, rev: Int) = graft.ingest.IndexBuild.RawDoc(
@@ -175,15 +140,7 @@ object Bench {
       val deadline = t0 + 30L * 1000 * 1000 * 1000
       var found = false
       while (!found && System.nanoTime() < deadline) {
-        val chunks = graft.streaming.StreamingIngest.latest(
-          graft.streaming.StreamingIngest.table(spark, wh, "chunks"))
-        val vectors = graft.streaming.StreamingIngest.latest(
-          graft.streaming.StreamingIngest.table(spark, wh, "vectors"))
-        found = graft.search.HybridSearch.search(
-          graft.search.HybridSearch.Index(chunks, vectors.join(
-            chunks.select("chunk_id", "path"), Seq("chunk_id"))),
-          graft.model.SearchRequest("quokka checkpoint sentinel", "bench", topK = 3),
-          embedder).nonEmpty
+        found = hybridFinds(spark, wh, "quokka checkpoint sentinel")
         if (!found) Thread.sleep(50)
       }
       if (found) (System.nanoTime() - t0) / 1e9 else -1.0
@@ -229,4 +186,56 @@ object Bench {
       (if (fullWritten) Seq("full_line" -> str("BENCH_FULL.json")) else Nil)))
     spark.stop()
   }
+
+  /** The upload and reindex sections' embedder (ingest and query side). */
+  private val embedder = graft.embed.HashEmbedder(64)
+
+  /** `body` over a fresh temp directory, deleted however `body` ends. */
+  private def withTempDir[T](prefix: String)(body: java.nio.file.Path => T): T = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix)
+    try body(dir)
+    finally org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
+  }
+
+  /** Whether a hybrid search over warehouse `wh`'s latest chunks and
+    * vectors returns a hit for `query` in the bench container. */
+  private def hybridFinds(spark: SparkSession, wh: String, query: String): Boolean = {
+    import graft.streaming.StreamingIngest.{latest, table}
+    val chunks = latest(table(spark, wh, "chunks"))
+    val vectors = latest(table(spark, wh, "vectors"))
+    graft.search.HybridSearch.search(
+      graft.search.HybridSearch.Index(chunks,
+        vectors.join(chunks.select("chunk_id", "path"), Seq("chunk_id"))),
+      graft.model.SearchRequest(query, "bench", topK = 3), embedder).nonEmpty
+  }
+
+  /** BASELINE "upload -> searchable < 30 s": wall seconds from dropping a
+    * file into a watched dir until `searchable(warehouse)` (by default a
+    * hybrid search over the freshly read warehouse) returns it — streaming
+    * micro-batch + append upsert + search. -1 when it throws or times out.
+    * The streaming query stops and the temp warehouse is deleted on every
+    * path. */
+  private[graft] def uploadToSearchable(spark: SparkSession)(
+      searchable: String => Boolean = hybridFinds(spark, _, "zanzibar protocol")): Double =
+    try withTempDir("graft-bench-stream") { tmp =>
+      val watch = tmp.resolve("in"); val wh = tmp.resolve("wh"); val cp = tmp.resolve("cp")
+      java.nio.file.Files.createDirectories(watch)
+      val q = graft.streaming.StreamingIngest.start(
+        spark, watch.toString, "bench", wh.toString, cp.toString,
+        embedder = embedder,
+        trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime("250 milliseconds"))
+      try {
+        val t0 = System.nanoTime()
+        java.nio.file.Files.write(watch.resolve("note.txt"),
+          "The zanzibar protocol gates warehouse uploads end to end.".getBytes("UTF-8"))
+        val deadline = t0 + 30L * 1000 * 1000 * 1000
+        var found = false
+        while (!found && System.nanoTime() < deadline) {
+          found = try searchable(wh.toString)
+          catch { case _: org.apache.spark.sql.AnalysisException => false }
+          if (!found) Thread.sleep(100)
+        }
+        if (found) (System.nanoTime() - t0) / 1e9 else -1.0
+      } finally q.stop()
+    } catch { case _: Throwable => -1.0 }
 }

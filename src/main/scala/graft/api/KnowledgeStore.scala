@@ -1510,23 +1510,19 @@ final class KnowledgeStore(
   @volatile private var cachedIndex: Option[HybridSearch.Index] = None
 
   private def invalidate(): Unit = synchronized {
-    cachedIndex.foreach { ix =>
-      ix.chunks.unpersist(); ix.vectors.unpersist()
-      ix.serving.foreach(_.unpersist())
-    }
+    cachedIndex.foreach(_.serving.foreach(_.unpersist()))
     cachedIndex = None
   }
 
-  /** The cached index frames (interactive-latency path). Coalesced to few
+  /** The cached serving index (interactive-latency path). Coalesced to few
     * partitions: per-query jobs on a cached index pay per-task scheduling
     * overhead, not data cost, so fewer fat partitions beat many thin ones
     * (re-examine if a single container's index outgrows executor memory).
     */
   private def index: HybridSearch.Index = synchronized {
     cachedIndex.getOrElse {
-      // denormalized serving layout: the vector leg answers in one cached
-      // scan, no per-query hydration join (HybridSearch.servingIndex).
-      // The driver fast-path caps come from the runtime-mutable settings
+      // one cached row per chunk serves both legs (HybridSearch.servingIndex).
+      // The driver-copy caps come from the runtime-mutable settings
       // registry (GLOBAL scope — the index is store-wide); a PUT
       // invalidates the cache so the NEXT build honors the new caps.
       val sv = effectiveSettings("serving")

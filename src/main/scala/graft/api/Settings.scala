@@ -49,8 +49,11 @@ object Settings {
       "provider", "model", "base_url", "temperature", "max_tokens",
       "timeout_seconds"),
     /** Serving-cache knobs (beyond the reference, which hardcodes its
-      * search infrastructure): the driver fast-path caps documented on
-      * [[graft.search.HybridSearch.servingIndex]]. GLOBAL scope only —
+      * search infrastructure): the driver-copy caps documented on
+      * [[graft.search.HybridSearch.servingIndex]]. Despite its name,
+      * `keyword_driver_cache_max_rows` caps the whole driver copy, which
+      * serves both legs; `driver_cache_max_bytes` bounds its content and,
+      * apart, its embeddings. GLOBAL scope only —
       * the serving index is store-wide, so per-container overrides have
       * nothing to bind to. Changing them takes effect on the NEXT index
       * build (a PUT invalidates the cached index); they never change

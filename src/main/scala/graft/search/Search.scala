@@ -3,7 +3,11 @@ package graft.search
 import graft.embed.Embedder
 import graft.model.{SearchHit, SearchRequest}
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.SpecializedGetters
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
+import scala.collection.immutable.ArraySeq
 
 /** Score fusion (ref HybridSearchService.cs) as declarative column ops:
   * per-leg normalization (min-max :362-371, DBSF :336-360), full-outer
@@ -287,39 +291,28 @@ object VectorSearch {
   /** The leg: score = cosine similarity (ref similarity = 1 - distance),
     * `vectors` joined back to chunks for hydration (J1). Uses the codegen
     * CosineSimilarity expression (one fused loop per row; the HOF form in
-    * [[cosineToQuery]] stays as the pure-Catalyst reference).
+    * [[cosineToQuery]] stays as the pure-Catalyst reference). The join runs
+    * after the top-k, so AQE picks the build side from k-row runtime stats.
     */
-  def leg(vectors: DataFrame, chunks: DataFrame, queryVec: Array[Float], k: Int): DataFrame = {
-    // serving fast path: a denormalized vector frame (hydration columns
-    // carried next to the embedding) answers in ONE scan — no per-query
-    // hydration join. The normalized layout pays one more join (AQE picks
-    // the build side from the k-row runtime stats).
-    val hydrationCols = Seq("document_id", "content", "metadata")
-    val denormalized = hydrationCols.forall(vectors.columns.contains)
-    val hydration = if (denormalized) hydrationCols.map(col) else Seq.empty
-    val scored = vectors
+  def leg(vectors: DataFrame, chunks: DataFrame, queryVec: Array[Float], k: Int): DataFrame =
+    vectors
       .withColumn("raw_v",
         graft.functions.CosineSimilarity.toQuery(col("embedding"), queryVec))
-      .select(col("chunk_id") +: col("raw_v") +: hydration: _*)
+      .select(col("chunk_id"), col("raw_v"))
       .orderBy(desc("raw_v"), col("chunk_id"))
       .limit(k)
-    if (denormalized) scored
-    else scored
       .join(chunks.select("chunk_id", "document_id", "content", "metadata"), Seq("chunk_id"))
-  }
 }
 
-/** One pre-materialized vector-leg serving row (planning-free path). */
-final case class ServingVecRow(
-    chunk_id: String, document_id: String, container_id: String,
-    path: String, content: String, metadata: Map[String, String],
-    model_id: String, embedding: Array[Float])
-
-/** One pre-materialized keyword-leg serving row. */
-final case class ServingTokRow(
-    chunk_id: String, document_id: String, container_id: String,
-    path: String, content: String, metadata: Map[String, String],
-    tokens_simple: Seq[String], tokens_english: Seq[String])
+/** One chunk of the serving cache: hydration, both token streams and the
+  * chunk's `(model_id, embedding)` vector entries, each stored once. Null
+  * content decodes as "" and null metadata as an empty map, as the
+  * DataFrame legs' collect does. */
+final case class ServingRow(
+    chunkId: String, documentId: String, containerId: String, path: String,
+    content: String, metadata: Map[String, String],
+    tokensSimple: Array[String], tokensEnglish: Array[String],
+    vectors: Array[(String, Array[Float])])
 
 /** The search orchestrator (ref HybridSearchService.cs:68-172 lifecycle
   * §3.1): two legs -> normalize -> fuse -> minScore -> autocut ->
@@ -327,44 +320,41 @@ final case class ServingTokRow(
   */
 object HybridSearch {
 
-  /** Byte bound on each driver-resident serving copy (raw content chars
-    * for the keyword copy, 4 bytes/dim for the vector copy) — enforced
-    * at build, because the row cap alone would let 64k pathologically
-    * wide chunks OOM the driver. */
+  /** Byte bound on the driver-resident serving copy (raw content chars;
+    * its embeddings are counted apart at 4 bytes/dim) — enforced at build,
+    * because the row cap alone would let 64k pathologically wide chunks
+    * OOM the driver. */
   val DriverCacheMaxBytes: Long = 256L << 20
 
-  /** Pre-materialized row caches for the interactive serving path. The
-    * DataFrame legs pay 40-70 ms of Catalyst re-analysis PER QUERY (the
-    * query vector/terms are literals, so plans can't be reused across
-    * queries — measured in SCALE.md "Interactive serving layout"); these
-    * RDDs are planned and materialized ONCE at index-build time, and each
-    * query runs a per-partition top-k heap whose closure carries the query
-    * (closures ship with every job, so the path is cluster-correct — no
-    * driver-local state leaks into tasks). This is the SURVEY §4.2 carve-out
-    * for RDDs: genuinely imperative per-partition serving logic, while every
+  /** The interactive serving cache: one [[ServingRow]] per chunk, planned,
+    * decoded and persisted ONCE at index-build time. The DataFrame legs pay
+    * 40-70 ms of Catalyst re-analysis PER QUERY (the query vector/terms are
+    * literals, so plans can't be reused across queries — measured in
+    * SCALE.md "Interactive serving layout"); here each query runs a
+    * per-partition top-k heap whose closure carries the query (closures
+    * ship with every job, so the path is cluster-correct — no driver-local
+    * state leaks into tasks). This is the SURVEY §4.2 carve-out for RDDs:
+    * genuinely imperative per-partition serving logic, while every
     * analytical/oracled query stays on the DataFrame API.
     */
   final case class ServingCache(
-      vecRows: org.apache.spark.rdd.RDD[ServingVecRow],
-      tokRows: org.apache.spark.rdd.RDD[ServingTokRow],
-      /** Driver-resident copy of `tokRows`, present ONLY while the corpus
-        * fits the build's row and byte caps (the autocut ≤100-row pattern
-        * at cache scale): the keyword leg then answers as a driver loop —
-        * zero Spark jobs, shedding the ~30 ms local-mode job floor that
-        * dominated the leg's latency (BASELINE's < 20 ms row is a
+      rows: org.apache.spark.rdd.RDD[ServingRow],
+      /** Driver-resident copy of `rows`, present ONLY while the corpus fits
+        * the build's row cap and its content the byte cap (the autocut
+        * ≤100-row pattern at cache scale): the legs then answer as driver
+        * loops — zero Spark jobs, shedding the ~30 ms local-mode job floor
+        * that dominated a leg's latency (BASELINE's < 20 ms row is a
         * Postgres GIN point lookup; the fair comparison is compute, not
         * scheduler overhead). Above the caps this is None and the
-        * distributed RDD leg serves — the 100 TB path is unchanged. */
-      tokLocal: Option[IndexedSeq[ServingTokRow]] = None,
-      /** Driver-resident copy of `vecRows` — same contract as
-        * [[tokLocal]] (present only under the caps). The vector leg then
-        * answers as the sliced driver scan, zero Spark jobs. */
-      vecLocal: Option[IndexedSeq[ServingVecRow]] = None) {
-    def unpersist(): Unit = {
-      vecRows.unpersist(blocking = false)
-      tokRows.unpersist(blocking = false)
-    }
+        * distributed RDD legs serve — the 100 TB path is unchanged. */
+      driverCopy: Option[DriverCopy] = None) {
+    def unpersist(): Unit = rows.unpersist(blocking = false)
   }
+
+  /** The driver copy's rows. `withVectors` is false when the embeddings
+    * (4 bytes/dim) exceed the byte cap although the content fits: the rows
+    * then carry no vector entries and the vector leg runs on the RDD. */
+  final case class DriverCopy(rows: IndexedSeq[ServingRow], withVectors: Boolean)
 
   /** Index handles: chunk + vector DataFrames (pre-filtered caches are the
     * caller's choice; filters here prune partitions by container/model).
@@ -380,85 +370,73 @@ object HybridSearch {
       termStats: Option[DataFrame] = None,
       serving: Option[ServingCache] = None)
 
-  /** Build the interactive serving index from warehouse frames: hydration
-    * columns are denormalized INTO the vector frame (so the vector leg is a
-    * single cached scan — `VectorSearch.leg` detects the layout and skips
-    * the per-query join), and both frames are coalesced to a few cached
-    * partitions so a query pays per-task overhead, not data cost. One-time
-    * build cost, amortized across every query of a long-lived session
-    * (BASELINE.md compares steady-state latency; measured 203→~150 ms
-    * median at sf0.1). The vector leg is an exact brute-force scan: over
-    * the driver copy under the caps, over the cached RDD above them.
+  /** Build the interactive serving index from warehouse frames: chunks
+    * left-joined to their vectors grouped by chunk_id, decoded straight from
+    * the plan's `InternalRow`s (no Dataset encoder) into one [[ServingRow]]
+    * per chunk, coalesced to `partitions` so a query pays per-task
+    * overhead, not data cost, and persisted MEMORY_AND_DISK so the serving
+    * tier degrades to local disk, not to recomputing the build lineage. The
+    * job that materializes the cache also sizes it; one `collect` then
+    * makes the driver copy when the caps allow. `chunks`/`vectors` come
+    * back as given, unpersisted: only `bm25` keyword requests read them.
     */
   def servingIndex(
       chunks: DataFrame,
       vectors: DataFrame,
       partitions: Int = 4,
-      /** Corpus-size cap for the driver-resident fast paths (see
-        * [[ServingCache.tokLocal]]); 0 disables them. The default is
-        * tens of MB of driver heap at typical chunk sizes — small enough
-        * to be free, large enough that an interactive single-box corpus
-        * answers queries with no job scheduling at all. */
+      /** Row cap for the driver copy (see [[ServingCache.driverCopy]]);
+        * 0 disables it. The default is tens of MB of driver heap at
+        * typical chunk sizes — small enough to be free, large enough that
+        * an interactive single-box corpus answers queries with no job
+        * scheduling at all. */
       keywordDriverCacheMaxRows: Int = 65536,
-      /** Byte bound on each driver-resident copy (content chars / 4
-        * bytes-per-dim embeddings) — the second guard behind the row
-        * cap; see [[DriverCacheMaxBytes]]. Runtime-tunable through the
-        * settings registry (`serving.driver_cache_max_bytes`). */
+      /** Byte bound on the driver copy's content, and apart on its
+        * embeddings at 4 bytes/dim — the second guard behind the row cap;
+        * see [[DriverCacheMaxBytes]]. Runtime-tunable through the settings
+        * registry (`serving.driver_cache_max_bytes`). */
       driverCacheMaxBytes: Long = DriverCacheMaxBytes): Index = {
-    import org.apache.spark.storage.StorageLevel
-    val spark = chunks.sparkSession
-    import spark.implicits._
-    val hydration = Seq("path", "document_id", "content", "metadata")
-      .filterNot(vectors.columns.contains)
-    val denorm =
-      if (hydration.isEmpty) vectors
-      else vectors.join(
-        chunks.select((Seq("chunk_id") ++ hydration).map(col): _*), Seq("chunk_id"))
-    val chunksC = chunks.coalesce(partitions).persist()
-    val denormC = denorm.coalesce(partitions).persist()
-    // planning-free serving rows: decoded ONCE here (the columnar DF caches
-    // above re-materialize rows on every query; these object RDDs don't).
-    // MEMORY_AND_DISK: the serving tier should degrade to local disk, not
-    // recompute through the whole build lineage, when a corpus outgrows RAM.
-    val vecRows = denormC
-      .select($"chunk_id", $"document_id", $"container_id", $"path",
-        $"content", $"metadata", $"model_id", $"embedding")
-      .as[ServingVecRow].rdd.persist(StorageLevel.MEMORY_AND_DISK)
-    val tokRows = chunksC
-      .select($"chunk_id", $"document_id", $"container_id", $"path",
-        $"content", $"metadata", $"tokens_simple", $"tokens_english")
-      .as[ServingTokRow].rdd.persist(StorageLevel.MEMORY_AND_DISK)
-    vecRows.count()
-    val tokCount = tokRows.count() // materialize: queries start warm
-    // keyword driver fast path: collect ONCE at build when the corpus is
-    // under the cap; defaults OFF above it (the RDD leg is the scale
-    // path). Belt-and-braces BYTES guard on top of the row cap: content
-    // lengths are summed on the cached frame (one cheap job) and the
-    // collect is skipped past 256 MB of raw content — row-count alone
-    // would let 64k pathologically wide chunks (plus the 3-4x JVM
-    // string/token-array expansion) OOM a modest driver at build time.
-    val tokLocalBytes: Long =
-      if (keywordDriverCacheMaxRows > 0 && tokCount <= keywordDriverCacheMaxRows)
-        chunksC.agg(coalesce(sum(length(col("content"))), lit(0L)))
-          .head.getLong(0)
-      else Long.MaxValue
-    val tokLocal: Option[IndexedSeq[ServingTokRow]] =
-      if (tokLocalBytes <= driverCacheMaxBytes)
-        Some(tokRows.collect().toIndexedSeq)
-      else None
-    // vector driver fast path: same caps as tokLocal, embeddings counted
-    // at 4 bytes/dim
-    val vecLocalBytes: Long =
-      if (tokLocal.isDefined)
-        denormC.agg(coalesce(sum(size(col("embedding"))), lit(0L)))
-          .head.getLong(0) * 4L
-      else Long.MaxValue
-    val vecLocal: Option[IndexedSeq[ServingVecRow]] =
-      if (vecLocalBytes <= driverCacheMaxBytes)
-        Some(vecRows.collect().toIndexedSeq)
-      else None
-    Index(chunksC, denormC,
-      serving = Some(ServingCache(vecRows, tokRows, tokLocal, vecLocal)))
+    val byChunk = vectors.groupBy("chunk_id").agg(collect_list(struct(
+      col("model_id"), col("embedding").cast("array<float>"))).as("vectors"))
+    val frame = chunks.join(byChunk, Seq("chunk_id"), "left")
+      .select("chunk_id", "document_id", "container_id", "path", "content",
+        "metadata", "tokens_simple", "tokens_english", "vectors")
+    val rows = frame.queryExecution.toRdd.mapPartitions(_.map(decodeRow))
+      .coalesce(partitions)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // materialize (queries start warm) and size the driver copy in one job
+    val (n, chars, dims) = rows
+      .map(r => (1L, r.content.codePointCount(0, r.content.length).toLong,
+        r.vectors.map(_._2.length.toLong).sum))
+      .fold((0L, 0L, 0L)) { case ((a, b, c), (x, y, z)) => (a + x, b + y, c + z) }
+    val fits = keywordDriverCacheMaxRows > 0 && n <= keywordDriverCacheMaxRows &&
+      chars <= driverCacheMaxBytes
+    val withVectors = fits && dims * 4L <= driverCacheMaxBytes
+    val driverCopy = Option.when(fits) {
+      val local = if (withVectors) rows else rows.map(_.copy(vectors = Array.empty))
+      DriverCopy(ArraySeq.unsafeWrapArray(local.collect()), withVectors)
+    }
+    Index(chunks, vectors, serving = Some(ServingCache(rows, driverCopy)))
+  }
+
+  /** Decode one row of [[servingIndex]]'s frame by ordinal. Every value is
+    * copied out: the plan reuses its `InternalRow` objects. */
+  private def decodeRow(r: InternalRow): ServingRow = {
+    def str(g: SpecializedGetters, i: Int): String =
+      if (g.isNullAt(i)) null else g.getUTF8String(i).toString
+    def elems[T: scala.reflect.ClassTag](i: Int)(elem: (ArrayData, Int) => T): Array[T] =
+      if (r.isNullAt(i)) Array.empty[T]
+      else { val a = r.getArray(i); Array.tabulate(a.numElements())(elem(a, _)) }
+    val metadata =
+      if (r.isNullAt(5)) Map.empty[String, String]
+      else {
+        val m = r.getMap(5)
+        (0 until m.numElements()).map(j => str(m.keyArray(), j) -> str(m.valueArray(), j)).toMap
+      }
+    ServingRow(str(r, 0), str(r, 1), str(r, 2), str(r, 3), Option(str(r, 4)).getOrElse(""),
+      metadata, elems(6)(str), elems(7)(str), elems(8) { (a, j) =>
+        val v = a.getStruct(j, 2)
+        (str(v, 0), if (v.isNullAt(1)) Array.emptyFloatArray else v.getArray(1).toFloatArray())
+      })
   }
 
   private def scope(df: DataFrame, req: SearchRequest): DataFrame = {
@@ -484,34 +462,40 @@ object HybridSearch {
         r.getAs[Double](rawCol))
     }.toSeq
 
-  /** Per-partition bounded top-k under (raw DESC, chunk_id ASC) — the exact
-    * ordering of the DataFrame legs' `orderBy(desc(raw), chunk_id)`. The
-    * queue head is the WORST kept hit (tuple max of (-raw, chunkId)), so
-    * overflow evicts correctly. */
-  private def topKHeap(it: Iterator[LegHit], k: Int): Iterator[LegHit] = {
-    val pq = scala.collection.mutable.PriorityQueue.empty[LegHit](
-      Ordering.by((h: LegHit) => (-h.raw, h.chunkId)))
-    it.foreach { h => pq.enqueue(h); if (pq.size > k) pq.dequeue() }
-    pq.iterator
+  /** (raw DESC, chunk_id ASC) — the exact ordering of the DataFrame legs'
+    * `orderBy(desc(raw), chunk_id)`, compared as `Ordering.by((-raw,
+    * chunkId))` does but without a tuple per comparison. */
+  private val legOrder: Ordering[LegHit] = new Ordering[LegHit] {
+    def compare(a: LegHit, b: LegHit): Int = {
+      val c = java.lang.Double.compare(-a.raw, -b.raw)
+      if (c != 0) c else a.chunkId.compareTo(b.chunkId)
+    }
+  }
+
+  /** Bounded top-k under [[legOrder]] of the hits `score` emits over
+    * `rows`. The queue head is the WORST kept hit, so overflow evicts
+    * correctly. */
+  private def topKHeap(rows: Iterator[ServingRow], k: Int)(
+      score: (ServingRow, LegHit => Unit) => Unit): Array[LegHit] = {
+    val pq = scala.collection.mutable.PriorityQueue.empty[LegHit](legOrder)
+    val emit = (h: LegHit) => { pq.enqueue(h); if (pq.size > k) pq.dequeue(); () }
+    rows.foreach(score(_, emit))
+    pq.toArray
   }
 
   private def mergeTopK(parts: Array[LegHit], k: Int): Seq[LegHit] =
-    parts.sortBy(h => (-h.raw, h.chunkId)).take(k).toSeq
+    parts.sorted(legOrder).take(k).toSeq
 
-  /** Sliced parallel top-k over a DRIVER-RESIDENT row cache — the
-    * zero-Spark-job serving scan shared by the keyword and brute-vector
-    * fast paths (see [[ServingCache.tokLocal]]): the capped corpus still
-    * costs microseconds/row single-threaded, which lands right back at
-    * the job floor the fast path exists to shed, so the IndexedSeq is
-    * split across ≤16 driver Futures and the per-slice heaps merge with
-    * the RDD legs' own [[mergeTopK]] — same scorers, identical results.
-    * Small corpora stay single-sliced. */
-  private def slicedTopK[R](rows: IndexedSeq[R], k: Int)(
-      score: R => Option[LegHit]): Seq[LegHit] = {
+  /** Sliced parallel top-k over the DRIVER copy — the zero-Spark-job
+    * serving scan: the capped corpus still costs microseconds/row
+    * single-threaded, which lands right back at the job floor the driver
+    * copy exists to shed, so the rows are split across ≤16 driver Futures
+    * and the per-slice heaps merge with the RDD legs' own [[mergeTopK]] —
+    * same scorers, identical results. Small corpora stay single-sliced. */
+  private def slicedTopK(rows: IndexedSeq[ServingRow], k: Int)(
+      score: (ServingRow, LegHit => Unit) => Unit): Seq[LegHit] = {
     val slices = math.min(16, math.max(1, rows.length / 512))
-    if (slices <= 1)
-      topKHeap(rows.iterator.flatMap(score(_)), k).toSeq
-        .sortBy(h => (-h.raw, h.chunkId))
+    if (slices <= 1) mergeTopK(topKHeap(rows.iterator, k)(score), k)
     else {
       import scala.concurrent.{Await, Future}
       import scala.concurrent.ExecutionContext.Implicits.global
@@ -519,12 +503,28 @@ object HybridSearch {
       val bounds = (0 to slices).map(i => (rows.length.toLong * i / slices).toInt)
       val parts = Await.result(Future.sequence(
         (0 until slices).map { i =>
-          Future {
-            topKHeap(rows.view.slice(bounds(i), bounds(i + 1))
-              .iterator.flatMap(score(_)), k).toSeq
-          }
+          Future(topKHeap(rows.view.slice(bounds(i), bounds(i + 1)).iterator, k)(score))
         }), Duration.Inf).flatten
       mergeTopK(parts.toArray, k)
+    }
+  }
+
+  /** A serving leg: the request's scope filter, then the hits `score`
+    * emits per row, then top-k — over `local` (a driver copy) when given,
+    * else per partition of the cached RDD. Hits equal the DataFrame legs'
+    * (pinned by SearchSpec's HybridSearchE2ESpec "servingIndex returns
+    * identical hits"). */
+  private def servingLeg(
+      cache: ServingCache, local: Option[IndexedSeq[ServingRow]], req: SearchRequest,
+      k: Int)(score: (ServingRow, LegHit => Unit) => Unit): Seq[LegHit] = {
+    val (container, docId, prefix) = (req.containerId, req.documentId, req.pathPrefix)
+    val scoped = (r: ServingRow, emit: LegHit => Unit) => // [[scope]] over one row
+      if (r.containerId == container && docId.forall(_ == r.documentId) &&
+          prefix.forall(p => r.path != null && r.path.startsWith(p))) score(r, emit)
+    local match {
+      case Some(rows) => slicedTopK(rows, k)(scoped)
+      case None => mergeTopK(
+        cache.rows.mapPartitions(it => topKHeap(it, k)(scoped).iterator).collect(), k)
     }
   }
 
@@ -544,84 +544,36 @@ object HybridSearch {
     else dot / (math.sqrt(na) * math.sqrt(nb))
   }
 
-  /** Scope-filter + score one serving row. */
-  private def scoreVecRow(
-      r: ServingVecRow, container: String, model: String,
-      docId: Option[String], prefix: Option[String],
-      q: Array[Float]): Option[LegHit] =
-    if (r.container_id != container || r.model_id != model ||
-        docId.exists(_ != r.document_id) ||
-        prefix.exists(p => !r.path.startsWith(p))) None
-    else
-      Some(LegHit(r.chunk_id, r.document_id,
-        Option(r.content).getOrElse(""),
-        Option(r.metadata).getOrElse(Map.empty), rawCosine(r.embedding, q)))
-
-  /** Vector leg over the pre-materialized serving rows: a brute-force
-    * top-k heap whose closure carries the query vector — over the driver
-    * copy when the cache holds one, else per partition of the cached RDD.
-    * Hits equal the DataFrame leg's (pinned by SearchSpec's
-    * HybridSearchE2ESpec "servingIndex returns identical hits"). */
+  /** Vector leg over the serving rows: brute-force cosine of each vector
+    * entry under `model`, the driver copy serving when it holds vectors. */
   private def vectorLegRdd(
       cache: ServingCache, req: SearchRequest, model: String,
-      q: Array[Float], k: Int): Seq[LegHit] = {
-    val container = req.containerId
-    val docId = req.documentId
-    val prefix = req.pathPrefix
-    cache.vecLocal match {
-      case Some(rows) =>
-        // zero-job brute leg over the driver copy — same cosine loop,
-        // same scope filter, sliced like the keyword fast path
-        slicedTopK(rows, k)(
-          scoreVecRow(_, container, model, docId, prefix, q))
-      case None =>
-        val parts = cache.vecRows.mapPartitions { it =>
-          topKHeap(it.flatMap(scoreVecRow(_, container, model, docId, prefix, q)), k)
-        }.collect()
-        mergeTopK(parts, k)
+      q: Array[Float], k: Int): Seq[LegHit] =
+    servingLeg(cache, cache.driverCopy.filter(_.withVectors).map(_.rows), req, k) {
+      (r, emit) => r.vectors.foreach { case (m, e) =>
+        if (m == model)
+          emit(LegHit(r.chunkId, r.documentId, r.content, r.metadata, rawCosine(e, q)))
+      }
     }
-  }
 
-  /** Keyword leg over the serving rows: scope filter, then the imperative
-    * mirror of `KeywordSearch.leg`'s conjunctive prefilter, then the SAME
-    * `rankChunk` — scores identical to the DataFrame leg by construction.
-    * When the cache carries a driver-resident copy ([[ServingCache
-    * .tokLocal]], present only under its corpus cap), the whole leg runs
-    * as a driver loop — zero Spark jobs, same scorer, identical hits. */
+  /** Keyword leg over the serving rows: the imperative mirror of
+    * `KeywordSearch.leg`'s conjunctive prefilter, then the SAME `rankChunk`
+    * — scores identical to the DataFrame leg by construction. */
   private def keywordLegRdd(
       cache: ServingCache, req: SearchRequest, k: Int): Seq[LegHit] = {
     val parsed = WebsearchParser.parse(req.query)
     if (parsed.isEmpty) return Seq.empty // rankChunk = None everywhere
-    val container = req.containerId
-    val docId = req.documentId
-    val prefix = req.pathPrefix
     val preGroups = parsed.groups
       .filter(g => g.nonEmpty && g.exists(_.english.nonEmpty))
       .map(g => (g.flatMap(_.simple).toSet, g.flatMap(_.english).toSet))
-    def score(r: ServingTokRow): Option[LegHit] = {
-      if (r.container_id != container || docId.exists(_ != r.document_id) ||
-          prefix.exists(p => !r.path.startsWith(p))) None
-      else {
-        val simple = r.tokens_simple
-        val english = r.tokens_english
-        val pass = preGroups.forall { case (s, e) =>
-          simple.exists(s.contains) || (e.nonEmpty && english.exists(e.contains))
-        }
-        if (!pass) None
-        else KeywordSearch
-          .rankChunk(parsed, simple.toIndexedSeq, english.toIndexedSeq)
-          .map(raw => LegHit(r.chunk_id, r.document_id,
-            Option(r.content).getOrElse(""),
-            Option(r.metadata).getOrElse(Map.empty), raw))
-      }
-    }
-    cache.tokLocal match {
-      case Some(rows) => slicedTopK(rows, k)(score)
-      case None =>
-        val parts = cache.tokRows.mapPartitions { it =>
-          topKHeap(it.flatMap(score), k)
-        }.collect()
-        mergeTopK(parts, k)
+    servingLeg(cache, cache.driverCopy.map(_.rows), req, k) { (r, emit) =>
+      val simple = r.tokensSimple
+      val english = r.tokensEnglish
+      if (preGroups.forall { case (s, e) =>
+            simple.exists(s.contains) || (e.nonEmpty && english.exists(e.contains)) })
+        KeywordSearch.rankChunk(parsed,
+            ArraySeq.unsafeWrapArray(simple), ArraySeq.unsafeWrapArray(english))
+          .foreach(raw => emit(LegHit(r.chunkId, r.documentId, r.content, r.metadata, raw)))
     }
   }
 

@@ -148,24 +148,24 @@ class SettingsSpec extends AnyFunSuite {
       "chunk overlap controls how many tokens adjacent chunks share")
     // defaults: tiny corpus -> the driver fast-path copies exist
     s2.search(graft.model.SearchRequest("chunk overlap", cid, topK = 3))
-    assert(s2.currentIndex.serving.get.tokLocal.nonEmpty)
+    assert(s2.currentIndex.serving.get.driverCopy.nonEmpty)
     // PUT row cap 0 -> the cached index invalidates and the NEXT build
     // leaves the driver copies off (the RDD legs serve)
     s2.putSettings("serving", Map("keyword_driver_cache_max_rows" -> "0"))
     val hits = s2.search(graft.model.SearchRequest("chunk overlap", cid, topK = 3))
     assert(hits.nonEmpty)
-    assert(s2.currentIndex.serving.get.tokLocal.isEmpty,
+    assert(s2.currentIndex.serving.get.driverCopy.isEmpty,
       "row cap 0 must disable the driver copy on the next build")
-    assert(s2.currentIndex.serving.get.vecLocal.isEmpty)
+    assert(!s2.currentIndex.serving.get.driverCopy.exists(_.withVectors))
     // a 1-byte bytes cap does the same even with the row cap back
     s2.putSettings("serving", Map("driver_cache_max_bytes" -> "1"))
     s2.search(graft.model.SearchRequest("chunk overlap", cid, topK = 3))
-    assert(s2.currentIndex.serving.get.tokLocal.isEmpty,
+    assert(s2.currentIndex.serving.get.driverCopy.isEmpty,
       "a bytes cap under the corpus size must disable the driver copy")
     // reset -> defaults again -> copies return
     s2.resetSettings("serving")
     s2.search(graft.model.SearchRequest("chunk overlap", cid, topK = 3))
-    assert(s2.currentIndex.serving.get.tokLocal.nonEmpty)
+    assert(s2.currentIndex.serving.get.driverCopy.nonEmpty)
     // bad values reject at the boundary
     assertThrows[IllegalArgumentException](
       s2.putSettings("serving", Map("driver_cache_max_bytes" -> "lots")))

@@ -169,9 +169,9 @@ class HybridSearchE2ESpec extends AnyFunSuite {
     IndexBuild.loadIndex(spark, warehouse)
   }
 
-  test("servingIndex returns identical hits and a join-free vector leg") {
+  test("servingIndex returns identical hits across the request shapes") {
     val serving = HybridSearch.servingIndex(index.chunks, index.vectors)
-    assert(serving.serving.nonEmpty, "servingIndex must build the RDD row caches")
+    assert(serving.serving.nonEmpty, "servingIndex must build the serving cache")
     // the planning-free RDD legs must return EXACTLY the DataFrame legs'
     // hits — same ids, same scores (the cosine loop and rankChunk are
     // shared/bit-identical), same tie-breaks — across modes, scoping,
@@ -195,14 +195,6 @@ class HybridSearchE2ESpec extends AnyFunSuite {
         viaNormalized.map(h => (h.chunk_id, h.score, h.metadata.get("source"))),
         s"serving path diverged for $req")
     }
-    // the denormalized layout answers the vector leg in one scan: no join
-    // above the cache scan (the InMemoryRelation's child plan retains the
-    // one-time build join — that part never re-executes)
-    val legPlan = VectorSearch.leg(serving.vectors, serving.chunks,
-      embedder.embed(SearchRequest("chunk overlap settings", "c1").query), 10)
-      .queryExecution.executedPlan.toString
-    val queryPart = legPlan.split("InMemoryTableScan")(0)
-    assert(!queryPart.toLowerCase.contains("join"), queryPart)
     serving.chunks.unpersist(); serving.vectors.unpersist()
     serving.serving.foreach(_.unpersist())
   }
@@ -215,12 +207,12 @@ class HybridSearchE2ESpec extends AnyFunSuite {
       keywordDriverCacheMaxRows = 0)
     val tooSmall = HybridSearch.servingIndex(index.chunks, index.vectors,
       keywordDriverCacheMaxRows = 1)
-    assert(fast.serving.get.tokLocal.nonEmpty, "under the cap -> driver copy")
-    assert(fast.serving.get.vecLocal.nonEmpty,
+    assert(fast.serving.get.driverCopy.nonEmpty, "under the cap -> driver copy")
+    assert(fast.serving.get.driverCopy.exists(_.withVectors),
       "brute layout under the cap -> vector driver copy too")
-    assert(rdd.serving.get.tokLocal.isEmpty, "cap 0 disables the fast path")
-    assert(rdd.serving.get.vecLocal.isEmpty, "cap 0 disables the vector copy")
-    assert(tooSmall.serving.get.tokLocal.isEmpty, "corpus over the cap -> RDD leg")
+    assert(rdd.serving.get.driverCopy.isEmpty, "cap 0 disables the fast path")
+    assert(!rdd.serving.get.driverCopy.exists(_.withVectors), "cap 0 disables the vector copy")
+    assert(tooSmall.serving.get.driverCopy.isEmpty, "corpus over the cap -> RDD leg")
 
     // identical hits across modes/operators, fast path vs RDD leg
     val requests = Seq(
@@ -262,6 +254,87 @@ class HybridSearchE2ESpec extends AnyFunSuite {
       s.chunks.unpersist(); s.vectors.unpersist()
       s.serving.foreach(_.unpersist())
     }
+  }
+
+  private def ids(hits: Seq[graft.model.SearchHit]) =
+    hits.map(h => (h.chunk_id, h.score, h.metadata.get("source")))
+
+  test("serving rows: a chunk with vectors under two models serves each model apart") {
+    import org.apache.spark.sql.functions.{col, lit, reverse}
+    // every chunk gets a second vector entry under another model
+    val twoModels = index.vectors.unionByName(index.vectors
+      .withColumn("model_id", lit("other-model"))
+      .withColumn("embedding", reverse(col("embedding"))))
+    val dataFrameLegs = index.copy(vectors = twoModels)
+    val oneModel = HybridSearch.servingIndex(index.chunks, index.vectors)
+    val fast = HybridSearch.servingIndex(index.chunks, twoModels)
+    val rdd = HybridSearch.servingIndex(index.chunks, twoModels,
+      keywordDriverCacheMaxRows = 0)
+    assert(fast.serving.get.driverCopy.exists(_.withVectors))
+    val semantic = SearchRequest("chunk overlap settings", "c1", mode = "semantic", topK = 10)
+    val other = semantic.copy(modelId = Some("other-model"))
+    val keyword = SearchRequest("chunk overlap", "c1", mode = "keyword", topK = 10)
+    Seq(fast, rdd).foreach { s =>
+      // the vector leg scores only the requested model's entries
+      val a = HybridSearch.search(s, semantic, embedder)
+      assert(a.nonEmpty && a.map(_.chunk_id).distinct.length == a.length)
+      assert(ids(a) == ids(HybridSearch.search(oneModel, semantic, embedder)))
+      assert(ids(a) == ids(HybridSearch.search(dataFrameLegs, semantic, embedder)))
+      val b = HybridSearch.search(s, other, embedder)
+      assert(ids(b) == ids(HybridSearch.search(dataFrameLegs, other, embedder)))
+      assert(b.map(_.score) != a.map(_.score), "the other model's vectors must score")
+      // the keyword leg returns each chunk once, whatever its vector count
+      val k = HybridSearch.search(s, keyword, embedder)
+      assert(k.nonEmpty && k.map(_.chunk_id).distinct.length == k.length)
+      assert(ids(k) == ids(HybridSearch.search(oneModel, keyword, embedder)))
+    }
+    Seq(oneModel, fast, rdd).foreach(_.serving.foreach(_.unpersist()))
+  }
+
+  test("mixed caps: content under the byte cap, embeddings over it") {
+    import org.apache.spark.sql.functions.{col, length, size, sum}
+    val chars = index.chunks.agg(sum(length(col("content")))).head.getLong(0)
+    val embBytes = 4L * index.vectors.agg(sum(size(col("embedding")))).head.getLong(0)
+    assert(chars < embBytes, s"fixture: content $chars chars, embeddings $embBytes bytes")
+    val mixed = HybridSearch.servingIndex(index.chunks, index.vectors,
+      driverCacheMaxBytes = chars)
+    val copy = mixed.serving.get.driverCopy
+    assert(copy.nonEmpty && !copy.get.withVectors, "driver copy without its vectors")
+    assert(copy.get.rows.forall(_.vectors.isEmpty))
+    val requests = Seq(
+      SearchRequest("run", "c1", mode = "keyword", topK = 10),
+      SearchRequest("chunk overlap", "c1", mode = "keyword", topK = 10,
+        pathPrefix = Some("/docs/guide/")),
+      SearchRequest("embedding dimension model", "c1", mode = "semantic", topK = 3),
+      SearchRequest("chunk overlap settings", "c1", topK = 5))
+    requests.foreach { req =>
+      assert(ids(HybridSearch.search(mixed, req, embedder)) ==
+        ids(HybridSearch.search(index, req, embedder)), s"mixed caps diverged for $req")
+    }
+    // keyword requests stay on the driver copy; the vector leg takes the RDD
+    val tracker = spark.sparkContext.statusTracker
+    def jobs(req: SearchRequest): Int = {
+      Thread.sleep(300)
+      val before = tracker.getJobIdsForGroup(null).length
+      HybridSearch.search(mixed, req, embedder)
+      Thread.sleep(500) // job-start events are async; give the bus time
+      tracker.getJobIdsForGroup(null).length - before
+    }
+    assert(jobs(requests.head) == 0, "keyword mode must schedule no Spark jobs")
+    assert(jobs(requests(2)) > 0, "the vector leg runs on the RDD")
+    mixed.serving.foreach(_.unpersist())
+  }
+
+  test("servingIndex persists one RDD and no DataFrame") {
+    val cacheManager = spark.sharedState.cacheManager
+    spark.catalog.clearCache()
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet
+    val serving = HybridSearch.servingIndex(index.chunks, index.vectors)
+    val added = spark.sparkContext.getPersistentRDDs.keySet -- persisted
+    assert(added == Set(serving.serving.get.rows.id), added)
+    assert(cacheManager.isEmpty, "servingIndex must not cache a DataFrame")
+    assert((serving.chunks eq index.chunks) && (serving.vectors eq index.vectors))
+    serving.serving.foreach(_.unpersist())
   }
 
   test("mmrLambda diversifies: a verbatim duplicate is demoted below a distinct hit") {
