@@ -81,18 +81,20 @@ object SyncScale {
       // fabricate the post-ingest state directly (the thing under test is
       // the SYNC PASS's driver shape, not ingestion): a ledger with n
       // synced paths + the matching connector snapshot, both written as
-      // distributed frames — exactly what n prior syncs would leave
+      // distributed frames — exactly what n prior syncs would leave. The
+      // ledger is committed through the store's log (a plain parquet
+      // write would be invisible to the store's snapshot reads)
       def listing(upTo: Int) = spark.range(upTo.toLong)
         .select(format_string("/corpus/f%08d.txt", col("id")).as("path"),
           lit(1L).as("mtime"), lit(64L).as("size"))
-      listing(n)
+      val ledger = listing(n)
         .select(lit(cid).as("container_id"),
           expr("uuid()").as("document_id"), col("path"),
           lit(1).as("chunk_count"), lit("h").as("content_hash"),
           lit(64L).as("size_bytes"), lit("f.txt").as("file_name"),
           lit("Ready").as("status"), lit(1).as("generation"))
-        .write.mode("overwrite").partitionBy("container_id")
-        .parquet(s"$wh/ledger")
+      graft.store.TxLog.commit(spark, wh, graft.store.TxLog.stageWrite(
+        ledger, wh, "ledger", Seq("container_id"), generation = 1L))
       listing(n).write.mode("overwrite")
         .parquet(s"$wh/connector_snapshots/$cid")
 

@@ -4,7 +4,8 @@ import graft.embed.Embedder
 import graft.ingest.IndexBuild
 import graft.model.{ChunkingConfig, SearchHit, SearchRequest}
 import graft.search.{CrossEncoderProvider, HybridSearch, Reranker}
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import graft.store.TxLog
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The engine's query surface — the Scala equivalent of the reference's 11
@@ -15,9 +16,22 @@ import org.apache.spark.sql.functions._
   * queries pay Spark job latency, not scan latency (BASELINE translation:
   * steady-state hybrid latency over cached index frames).
   *
-  * Storage is the partitioned parquet warehouse (IndexBuild layout);
-  * containers are partition values, so create/delete are metadata-cheap and
-  * every read prunes to its container partition (P1).
+  * Storage is the partitioned parquet warehouse (IndexBuild layout) under
+  * the `store/TxLog` commit log: chunks/vectors/ledger change only by log
+  * commits. An UPSERT (replace + append across all three tables) is ONE
+  * atomic commit (the reference's Postgres transaction, ref
+  * PgVectorStore.cs:144-184), deletes are stats-pruned copy-on-write
+  * commits, and readers get snapshot isolation, the change feed and time
+  * travel. Containers are partition values, so create/delete are
+  * metadata-cheap and every read prunes to its container partition (P1).
+  * Registry tables (containers/folders/settings) and the embed cache stay
+  * plain parquet — driver-rewritten metadata / optimization tables.
+  *
+  * Construction adopts the warehouse into the log: a warehouse without a
+  * log registers its existing chunks/vectors/ledger files as the initial
+  * commit (CONVERT-style — a populated plain-parquet warehouse migrates
+  * instead of vanishing behind an empty snapshot), and an empty one
+  * starts with an empty commit.
   */
 final class KnowledgeStore(
     spark: SparkSession,
@@ -28,41 +42,25 @@ final class KnowledgeStore(
     /** Ingestion progress sink (ref IngestionProgressBroadcaster): the
       * upload path emits one event per phase per job. Default: none. */
     progress: graft.ingest.ProgressListener = graft.ingest.ProgressListener.Noop,
-    /** Transactional warehouse mode: chunks/vectors/ledger live under the
-      * `store/TxLog` commit log — an UPSERT (replace + append across all
-      * three tables) is ONE atomic commit (the reference's Postgres
-      * transaction, ref PgVectorStore.cs:144-184), bulk deletes are
-      * stats-pruned copy-on-write `deleteWhere` commits, and readers get
-      * snapshot isolation + the change feed + time travel. Auto-detected
-      * when the warehouse already has a log (a StreamingIngest or
-      * IndexBuild.build TxLog warehouse); `true` initializes one.
-      * Registry tables (containers/folders) and the embed cache stay
-      * plain parquet — driver-rewritten metadata / optimization tables. */
-    transactional: Boolean = false,
-    /** Delete flavor for txMode bulk deletes: "copy_on_write" (owner
-      * files rewritten to survivors — reads stay join-free) or
-      * "merge_on_read" (deletion-vector masks, no data rewrite — the
-      * shape for frequent small deletes; reads pay an anti-join until
-      * the compaction cadence materializes). Upsert replacement always
-      * uses copy-on-write (the replaced rows' files are being rewritten
-      * anyway). */
-    deleteMode: String = "copy_on_write") {
+    /** The commit log is the store's only storage engine; `false` is
+      * rejected with an IllegalArgumentException. */
+    transactional: Boolean = true) {
   import spark.implicits._
 
-  private val txMode: Boolean = {
-    if (transactional && !graft.store.TxLog.exists(spark, warehouse)) {
-      // a populated plain-parquet warehouse must MIGRATE, not vanish:
-      // initializing an empty log over existing chunks/vectors/ledger
-      // would flip every read to the (empty) snapshot and silently hide
-      // all pre-existing documents. Adopt registers the existing files
-      // as the initial commit (CONVERT-style); an actually-empty
-      // warehouse initializes with a plain empty commit.
-      if (graft.store.TxLog.adopt(spark, warehouse,
-          Seq("chunks", "vectors", "ledger")) < 0)
-        graft.store.TxLog.commit(spark, warehouse, Nil)
-    }
-    transactional || graft.store.TxLog.exists(spark, warehouse)
-  }
+  if (!transactional)
+    throw new IllegalArgumentException(
+      "KnowledgeStore(transactional = false) is not supported: every store " +
+        "commits through the TxLog commit log")
+
+  /** The log-managed data tables and their partition columns. */
+  private val DataTables = Seq(
+    "chunks" -> Seq("container_id"),
+    "vectors" -> Seq("container_id", "model_id"),
+    "ledger" -> Seq("container_id"))
+
+  if (!TxLog.exists(spark, warehouse) &&
+      TxLog.adopt(spark, warehouse, DataTables.map(_._1)) < 0)
+    TxLog.commit(spark, warehouse, Nil)
 
   /** Validation bounds (ref ValidationConstants.cs:6-8,19-21). */
   val MaxTopK = 100
@@ -94,14 +92,13 @@ final class KnowledgeStore(
   private def tableOrEmpty(path: String, empty: => DataFrame): DataFrame =
     try spark.read.parquet(path) catch { case _: Throwable => empty }
 
-  /** Data-table reader: log-aware in txMode (snapshot isolation — staged
-    * or logically-removed files are invisible), plain parquet otherwise;
-    * missing tables read as empty either way. */
+  /** Data-table reader at the log's current snapshot (staged or
+    * logically-removed files are invisible); a table with no live files
+    * reads as empty. */
   private def managed(table: String): DataFrame =
-    if (!txMode) tableOrEmpty(s"$warehouse/$table", spark.emptyDataFrame)
-    else try graft.store.TxLog.read(spark, warehouse, table)
-      // only "no live files" reads as empty; real failures propagate
-      catch { case _: org.apache.spark.sql.AnalysisException => spark.emptyDataFrame }
+    try TxLog.read(spark, warehouse, table)
+    // only "no live files" reads as empty; real failures propagate
+    catch { case _: org.apache.spark.sql.AnalysisException => spark.emptyDataFrame }
 
   private def chunksDf: DataFrame = managed("chunks")
   private def vectorsDf: DataFrame = managed("vectors")
@@ -209,10 +206,13 @@ final class KnowledgeStore(
     require(isWritable(containerId),
       s"container $containerId is read-only (connector write guard)")
 
-  /** container_delete (ref :64): drops the container's data partitions —
-    * including the derived postings/term_stats — and its folder rows
-    * (container ids are name-derived UUIDs, so a recreated same-named
-    * container would otherwise inherit ghost folders). */
+  /** container_delete (ref :64): removes the container's chunk/vector/
+    * ledger files from the log in ONE commit whose change feed carries
+    * the rows as delete pre-images (the bytes stay for time travel until
+    * [[maintain]]'s vacuum), drops the derived postings/term_stats
+    * partitions, and drops its folder rows (container ids are
+    * name-derived UUIDs, so a recreated same-named container would
+    * otherwise inherit ghost folders). */
   def deleteContainer(containerId: String): Unit = {
     // ref PostgresContainerStore.DeleteAsync:96-119 — a MANAGED-STORAGE
     // container that still holds documents refuses deletion (the store
@@ -228,39 +228,28 @@ final class KnowledgeStore(
               "Delete all files first.")
       }
     }
-    // txMode: logically remove the container's live files in one
-    // metadata commit — readers flip atomically, in-flight snapshot and
+    // logically remove the container's live files in one metadata
+    // commit — readers flip atomically, in-flight snapshot and
     // time-travel reads keep working, and VACUUM reclaims the bytes on
-    // its retention cadence (immediate physical deletion would bypass
-    // the retention window this mode promises). Plain mode deletes
-    // physically; derived postings/term_stats are unlogged either way.
-    if (txMode) {
-      val T = graft.store.TxLog
-      val snap = T.snapshot(spark, warehouse)
-      val removes = Seq("chunks", "vectors", "ledger").flatMap { t =>
-        snap.files(t).collect {
-          case (rel, _) if rel.startsWith(s"container_id=$containerId/") =>
-            T.Remove(t, rel)
-        }
+    // its retention cadence. The removes carry a `delete` action per
+    // touched table: without it readChanges classifies a remove-only
+    // commit as a rewrite and CDC consumers (IncrementalView) silently
+    // miss the container's deletion. The predicate replays the
+    // pre-images exactly — every row in these files belongs to the
+    // container (partition dirs).
+    val snap = TxLog.snapshot(spark, warehouse)
+    val removes = DataTables.map(_._1).flatMap { t =>
+      snap.files(t).collect {
+        case (rel, _) if rel.startsWith(s"container_id=$containerId/") =>
+          TxLog.Remove(t, rel)
       }
-      // the removes carry a `delete` action per touched table: without
-      // it readChanges classifies a remove-only commit as a rewrite and
-      // CDC consumers (IncrementalView) silently miss the container's
-      // deletion. The predicate replays the pre-images exactly — every
-      // row in these files belongs to the container (partition dirs).
-      if (removes.nonEmpty)
-        T.commit(spark, warehouse, Nil, removes,
-          deletes = removes.map(_.table).distinct
-            .map(_ -> s"(container_id = '$containerId')").toMap)
     }
-    val physical =
-      (if (txMode) Seq.empty[String]
-       else Seq(s"$warehouse/chunks/container_id=$containerId",
-         s"$warehouse/vectors/container_id=$containerId",
-         s"$warehouse/ledger/container_id=$containerId")) ++
-        Seq(s"$warehouse/postings/container_id=$containerId",
-          s"$warehouse/term_stats/container_id=$containerId")
-    physical.foreach { p =>
+    if (removes.nonEmpty)
+      commit(Nil, removes, deletes = removes.map(_.table).distinct
+        .map(_ -> s"(container_id = '$containerId')").toMap)
+    // the derived postings/term_stats are unlogged: dropped physically
+    Seq("postings", "term_stats").foreach { t =>
+      val p = s"$warehouse/$t/container_id=$containerId"
       val fs = org.apache.hadoop.fs.FileSystem.get(
         new java.net.URI(p), spark.sparkContext.hadoopConfiguration)
       fs.delete(new org.apache.hadoop.fs.Path(p), true)
@@ -632,64 +621,16 @@ final class KnowledgeStore(
     if (!asConnector) requireWritable(containerId)
     require(filePathsDf(containerId).isEmpty,
       "first-crawl bulk ingest requires a container with no synced files")
-    val jobId = java.util.UUID.randomUUID().toString.take(8)
     // duplicate listing paths collapse (same recipe as bulkUploadBatch's
     // last-wins — without an order, one survivor per path)
     val ds = docs.dropDuplicates("path").persist()
-    val total = ds.count()
-    def emit(phase: String, current: Long, detail: => String = ""): Unit =
-      if (progress ne graft.ingest.ProgressListener.Noop)
-        progress.onProgress(graft.ingest.ProgressEvent(jobId, phase, current, total, detail))
-    emit("received", 0L, "first_crawl")
-    val (chunker, effCfg) = chunkingFor(containerId)
-    val effEmbedder = embedderFor(containerId)
-    val stamp = stampFor(containerId)
-    val newChunks = IndexBuild.chunkDocs(ds, chunker, effCfg).persist()
-    val vectors = IndexBuild.embedChunks(newChunks,
-      Option(tableOrEmpty(s"$warehouse/embed_cache", null)), effEmbedder)
-      .persist()
-    val ledger = newChunks.groupBy($"document_id", $"container_id", $"path")
-      .agg(count(lit(1)).cast("int").as("chunk_count"))
-      .join(ds.select($"document_id", sha2($"content", 256).as("content_hash"),
-        length($"content").cast("long").as("size_bytes"), $"file_name"),
-        Seq("document_id"))
-      .withColumn("status", lit("Ready"))
-      .withColumn("generation", lit(1).cast("int"))
-      .withColumn("indexed_with", typedLit(stamp))
-    if (txMode) {
-      val T = graft.store.TxLog
-      val gen = T.snapshot(spark, warehouse).maxGeneration("chunks") + 1L
-      val adds =
-        T.stageWrite(newChunks.drop("precomputed").toDF(), warehouse,
-          "chunks", Seq("container_id"), gen) ++
-        T.stageWrite(vectors.toDF(), warehouse,
-          "vectors", Seq("container_id", "model_id"), gen) ++
-        T.stageWrite(ledger.toDF(), warehouse, "ledger", Seq("container_id"), gen)
-      T.commit(spark, warehouse, adds, Nil)
-      spark.catalog.refreshByPath(s"$warehouse/chunks")
-      org.apache.spark.sql.graftbridge.Bridge.invalidateFileStatusCache()
-      emit("chunked", total, s"chunks=${newChunks.count()}")
-      emit("embedded", total, s"vectors=${vectors.count()}")
-    } else {
-      newChunks.drop("precomputed").toDF()
-        .write.mode(SaveMode.Append).partitionBy("container_id")
-        .parquet(s"$warehouse/chunks")
-      emit("chunked", total, s"chunks=${newChunks.count()}")
-      vectors.write.mode(SaveMode.Append).partitionBy("container_id", "model_id")
-        .parquet(s"$warehouse/vectors")
-      emit("embedded", total, s"vectors=${vectors.count()}")
-      ledger.write.mode(SaveMode.Append).partitionBy("container_id")
-        .parquet(s"$warehouse/ledger")
-    }
-    vectors.select("content_hash", "model_id", "dimensions", "embedding")
-      .dropDuplicates("content_hash")
-      .write.mode(SaveMode.Append).parquet(s"$warehouse/embed_cache")
-    vectors.unpersist()
-    newChunks.unpersist()
+    val job = new Job(newJobId(), ds.count())
+    job.emit("received", 0L, "first_crawl")
+    // corpus-sized: the staged write keeps the upstream's width
+    ingest(ds, containerId, prevGen = Map.empty, writeParts = None, job)
     ds.unpersist()
-    invalidate()
-    emit("ready", total)
-    jobId
+    job.emit("ready", job.total)
+    job.id
   }
 
   /** Returns (progress jobId — the batch resource's id, the FINAL
@@ -701,7 +642,7 @@ final class KnowledgeStore(
     // started reading docs.head's container — and the id is POLLABLE:
     // the batch resource contract says every returned id resolves
     if (docs0.isEmpty) {
-      val emptyJob = java.util.UUID.randomUUID().toString.take(8)
+      val emptyJob = newJobId()
       progress.onProgress(graft.ingest.ProgressEvent(emptyJob, "received", 0L, 0L))
       progress.onProgress(graft.ingest.ProgressEvent(emptyJob, "ready", 0L, 0L))
       return (emptyJob, Map.empty)
@@ -746,20 +687,9 @@ final class KnowledgeStore(
     val finalIds = docs.map(d => d.path -> d.document_id).toMap
     // phase-grained progress (the reference's per-phase broadcast,
     // IngestionPipeline.cs:412-446): one jobId per upsert batch, events
-    // at each phase boundary; counts come from already-persisted frames
-    // so progress never adds a recompute
-    val jobId = java.util.UUID.randomUUID().toString.take(8)
-    val total = docs.length.toLong
-    // detail is BY-NAME and the Noop listener short-circuits: the
-    // chunk/vector counts in the phase details are real Spark jobs (cheap
-    // on persisted frames, but jobs), and an unobserved pipeline must not
-    // pay them — with a listener attached they remain count()s on frames
-    // the write path persists anyway
-    def emit(phase: String, current: Long, detail: => String = ""): Unit =
-      if (progress ne graft.ingest.ProgressListener.Noop)
-        progress.onProgress(graft.ingest.ProgressEvent(jobId, phase, current, total, detail))
-    emit("received", 0L)
-    val ds = docs.toDS()
+    // at each phase boundary
+    val job = new Job(newJobId(), docs.length.toLong)
+    job.emit("received", 0L)
     // Upsert, not blind append: re-uploading an existing path must REPLACE
     // its chunks/vectors/ledger rows (ref IngestionPipeline.cs upsert +
     // generation checks), or every re-upload doubles getDocument output
@@ -771,143 +701,119 @@ final class KnowledgeStore(
     val prevGen: Map[String, Int] =
       docs.flatMap(d => probeGen.get(d.document_id).map(d.document_id -> _))
         .toMap
-    // plain mode replaces existing docs by partition rewrite up front;
-    // txMode folds the replacement into the SAME commit as the append
-    // (stageDelete below) — the reference's single-transaction upsert
-    if (!txMode) docs.groupBy(_.container_id).foreach { case (cid, group) =>
-      val ids = group.map(_.document_id).toSet
-      // the ledger probe alone misses ORPHANED rows: plain mode appends
-      // chunks, then vectors, then the ledger — a mid-append failure (FS
-      // hiccup between tables) leaves chunk rows with NO ledger row, and
-      // a retry of the same document would then append a SECOND set of
-      // chunks (doubled getDocument output, doubled stats) because
-      // prevGen is ledger-driven. Probe the chunks table for the batch's
-      // ids too (one point-filtered scan, batch-sized result) so any
-      // partial previous attempt is swept before the fresh append.
-      // txMode needs none of this — its upsert is one atomic commit.
-      val orphanProbe: Set[String] = {
-        val c = chunksDf
-        if (!c.columns.contains("document_id")) Set.empty
-        else c.filter(col("container_id") === cid &&
-            col("document_id").isin(ids.toSeq: _*))
-          .select("document_id").distinct().as[String].collect().toSet
-      }
-      val existing = ids.filter(id =>
-        prevGen.contains(id) || orphanProbe.contains(id))
-      if (existing.nonEmpty) {
-        dropDocRows("chunks", cid, Nil, existing)
-        dropDocRows("vectors", cid, Seq("model_id"), existing)
-        dropDocRows("ledger", cid, Nil, existing)
-      }
-    }
-    emit("upsert_probe", 0L, s"replaced=${prevGen.size}")
+    job.emit("upsert_probe", 0L, s"replaced=${prevGen.size}")
+    // writeParts = 1: a <= MaxBulk-doc batch otherwise stages one tiny
+    // parquet file PER DOCUMENT per table (the upstream runs one doc per
+    // task) — N footer opens + renames + log lines per commit, and
+    // N-file scans for every later reader. Chunk/embed stay wide; only
+    // the staged write narrows (repartition, not coalesce).
+    ingest(docs.toDS(), docs.head.container_id, prevGen, writeParts = Some(1), job)
+    job.emit("ready", job.total)
+    (job.id, finalIds)
+  }
+
+  private def newJobId(): String = java.util.UUID.randomUUID().toString.take(8)
+
+  /** One upload job's phase events. The detail is BY-NAME and the Noop
+    * listener short-circuits: the chunk/vector counts in the phase
+    * details are real Spark jobs (cheap on persisted frames, but jobs),
+    * and an unobserved pipeline must not pay them. */
+  private final class Job(val id: String, val total: Long) {
+    def emit(phase: String, current: Long, detail: => String = ""): Unit =
+      if (progress ne graft.ingest.ProgressListener.Noop)
+        progress.onProgress(graft.ingest.ProgressEvent(id, phase, current, total, detail))
+  }
+
+  /** The one ingest body of uploads, reindexes and first crawls:
+    * chunk → embed → ledger → ONE commit of the three tables' fresh
+    * files together with the copy-on-write removal of the replaced
+    * documents' (`prevGen`) old rows — a reader sees the whole upsert or
+    * none of it, and the change feed reads as Delta CDF (delete
+    * pre-images + insert post-images at one version) — then the
+    * embed-cache write-back. `writeParts` narrows the staged write (and
+    * the cache increment) of bounded batches; None keeps a corpus-sized
+    * write wide. */
+  private def ingest(ds: Dataset[IndexBuild.RawDoc], containerId: String,
+      prevGen: Map[String, Int], writeParts: Option[Int], job: Job): Unit = {
     // chunker/config/embedder resolve through the settings layers at JOB
     // BUILD time (constructor defaults <- global PUTs <- this container's
     // overrides) — a settings change applies to the next upload with no
-    // restart, and the IndexedWith stamp below records what was actually
-    // used so Reindex.classify can flag docs indexed under older settings
-    val batchCid = docs.head.container_id
-    val (chunker, effCfg) = chunkingFor(batchCid)
-    val effEmbedder = embedderFor(batchCid)
+    // restart, and the IndexedWith stamp records what was actually used
+    // so Reindex.classify can flag docs indexed under older settings
+    val (chunker, effCfg) = chunkingFor(containerId)
     val newChunks = IndexBuild.chunkDocs(ds, chunker, effCfg).persist()
     val vectors = IndexBuild.embedChunks(newChunks,
-      Option(tableOrEmpty(s"$warehouse/embed_cache", null)), effEmbedder)
+      Option(tableOrEmpty(s"$warehouse/embed_cache", null)),
+      embedderFor(containerId))
       .persist() // reused by the cache write-back below without re-embedding
-    // same ledger schema as IndexBuild.build (generation + indexed_with
-    // settings stamp) so both producers can target one warehouse and
-    // Reindex.classify reads API-built ledgers
-    val stamp = stampFor(batchCid)
-    val genDf = prevGen.toSeq.toDF("document_id", "prev_gen")
-    val ledger = newChunks.groupBy($"document_id", $"container_id", $"path")
-      .agg(count(lit(1)).cast("int").as("chunk_count"))
-      .join(ds.select($"document_id", sha2($"content", 256).as("content_hash"),
-        length($"content").cast("long").as("size_bytes"), $"file_name"), Seq("document_id"))
-      .withColumn("status", lit("Ready"))
-      .join(broadcast(genDf), Seq("document_id"), "left")
-      .withColumn("generation", coalesce($"prev_gen" + 1, lit(1)).cast("int"))
-      .drop("prev_gen")
-      .withColumn("indexed_with", typedLit(stamp))
-    if (txMode) {
-      // ONE commit: replaced docs' survivor rewrites + all three tables'
-      // fresh files — a reader sees the whole upsert or none of it, and
-      // the change feed reads as Delta CDF (delete pre-images + insert
-      // post-images at one version)
-      val T = graft.store.TxLog
-      val gen = T.snapshot(spark, warehouse).maxGeneration("chunks") + 1L
-      val existingIds = prevGen.keys.toSeq
-      val staged =
-        if (existingIds.isEmpty) Nil
-        else Seq(
-          ("chunks", Seq("container_id")),
-          ("vectors", Seq("container_id", "model_id")),
-          ("ledger", Seq("container_id"))).flatMap { case (t, pb) =>
-          T.stageDelete(spark, warehouse, t,
-            col("document_id").isin(existingIds: _*), pb).map(t -> _)
-        }
-      // writeParts = 1: a <= MaxBulk-doc batch otherwise stages one tiny
-      // parquet file PER DOCUMENT per table (the upstream runs one doc per
-      // task) — N footer opens + renames + log lines per commit, and
-      // N-file scans for every later reader. Chunk/embed stay wide; only
-      // the staged write narrows (repartition, not coalesce).
-      val adds =
-        T.stageWrite(newChunks.drop("precomputed").toDF(), warehouse,
-          "chunks", Seq("container_id"), gen, writeParts = Some(1)) ++
-        T.stageWrite(vectors.toDF(), warehouse,
-          "vectors", Seq("container_id", "model_id"), gen, writeParts = Some(1)) ++
-        T.stageWrite(ledger.toDF(), warehouse, "ledger", Seq("container_id"), gen,
-          writeParts = Some(1))
-      // readVersion threads the staged deletes' snapshot into the commit
-      // so the snapshot-isolation check runs on the upsert path too: a
-      // concurrent rewrite of the replaced docs' owner files during this
-      // (potentially long) chunk+embed staging must surface as
-      // TxConflictException, not silently resurrect its deleted rows
-      T.commit(spark, warehouse,
-        staged.flatMap(_._2.adds) ++ adds,
-        staged.flatMap(_._2.removes),
-        deletes = staged.map { case (t, sd) => t -> sd.predSql }.toMap,
-        readVersion = Some(staged.map(_._2.readVersion))
-          .filter(_.nonEmpty).map(_.min).filter(_ >= 0))
-      spark.catalog.refreshByPath(s"$warehouse/chunks")
-      org.apache.spark.sql.graftbridge.Bridge.invalidateFileStatusCache()
-      emit("chunked", total, s"chunks=${newChunks.count()}")
-      emit("embedded", total, s"vectors=${vectors.count()}")
-    } else {
-      newChunks.drop("precomputed").toDF()
-        .write.mode(SaveMode.Append).partitionBy("container_id")
-        .parquet(s"$warehouse/chunks")
-      emit("chunked", total, s"chunks=${newChunks.count()}")
-      vectors.write.mode(SaveMode.Append).partitionBy("container_id", "model_id")
-        .parquet(s"$warehouse/vectors")
-      emit("embedded", total, s"vectors=${vectors.count()}")
-      ledger.write.mode(SaveMode.Append).partitionBy("container_id")
-        .parquet(s"$warehouse/ledger")
+    val generation =
+      if (prevGen.isEmpty) lit(1)
+      else coalesce(element_at(typedLit(prevGen), col("document_id")) + 1, lit(1))
+    val ledger = IndexBuild.ledgerRows(newChunks, ds, stampFor(containerId), generation)
+    val gen = TxLog.snapshot(spark, warehouse).maxGeneration("chunks") + 1L
+    val frames = Map("chunks" -> newChunks.drop("precomputed").toDF(),
+      "vectors" -> vectors.toDF(), "ledger" -> ledger)
+    val adds = DataTables.flatMap { case (t, pb) =>
+      TxLog.stageWrite(frames(t), warehouse, t, pb, gen, writeParts = writeParts)
     }
+    commitReplacing(adds, Some(prevGen.keys.toSeq).filter(_.nonEmpty)
+      .map(ids => col("document_id").isin(ids: _*)))
+    job.emit("chunked", job.total, s"chunks=${newChunks.count()}")
+    job.emit("embedded", job.total, s"vectors=${vectors.count()}")
     // write-back: fresh embeddings join the shared content-hash cache so
     // re-uploading identical content skips the embedder (IndexBuild.build
     // refreshes the cache wholesale; the API path appends increments —
     // the cache reader dropDuplicates on content_hash). The cache is an
-    // optimization table: plain parquet in both modes. coalesce(1): the
-    // increment is batch-bounded and the dropDuplicates shuffle otherwise
+    // optimization table: plain parquet, outside the log. A bounded
+    // batch's increment coalesces: the dropDuplicates shuffle otherwise
     // fans it into shuffle-partition-many tiny files per upload.
-    vectors.select("content_hash", "model_id", "dimensions", "embedding")
-      .dropDuplicates("content_hash").coalesce(1)
+    val cache = vectors.select("content_hash", "model_id", "dimensions", "embedding")
+      .dropDuplicates("content_hash")
+    writeParts.fold(cache)(n => cache.coalesce(n))
       .write.mode(SaveMode.Append).parquet(s"$warehouse/embed_cache")
     vectors.unpersist()
     newChunks.unpersist()
     invalidate()
-    emit("ready", total)
-    (jobId, finalIds)
+  }
+
+  /** The one commit step of every data-table write: commit, then drop
+    * Spark's cached listing of the table dirs so the next read replans
+    * over the new snapshot. */
+  private def commit(adds: Seq[TxLog.Add], removes: Seq[TxLog.Remove],
+      deletes: Map[String, String] = Map.empty,
+      readVersion: Option[Long] = None): Unit = {
+    TxLog.commit(spark, warehouse, adds, removes, deletes = deletes,
+      readVersion = readVersion)
+    spark.catalog.refreshByPath(s"$warehouse/chunks")
+    org.apache.spark.sql.graftbridge.Bridge.invalidateFileStatusCache()
+  }
+
+  /** Commit `adds` together with a copy-on-write delete of the rows
+    * matching `replaced` in all three tables (log-level partition + stats
+    * pruning picks the owner files, which are rewritten to their
+    * survivors). The staged deletes' snapshot version rides into the
+    * commit so the snapshot-isolation check runs: a concurrent rewrite
+    * of the same owner files surfaces as TxConflictException instead of
+    * silently resurrecting the deleted rows. */
+  private def commitReplacing(adds: Seq[TxLog.Add], replaced: Option[Column]): Unit = {
+    val staged = replaced.toSeq.flatMap(pred => DataTables.flatMap { case (t, pb) =>
+      TxLog.stageDelete(spark, warehouse, t, pred, pb).map(t -> _)
+    })
+    if (adds.nonEmpty || staged.nonEmpty)
+      commit(staged.flatMap(_._2.adds) ++ adds, staged.flatMap(_._2.removes),
+        deletes = staged.map { case (t, sd) => t -> sd.predSql }.toMap,
+        readVersion = staged.map(_._2.readVersion).minOption.filter(_ >= 0))
   }
 
   /** delete_file (ref :321): drop one document's rows. */
   def deleteFile(containerId: String, path: String): Unit =
     bulkDelete(containerId, Seq(path))
 
-  /** bulk_delete (ref :375, <=100 ids — EXCEPT on keys). txMode: the
-    * three tables' row-level deletes land in ONE `deleteWhere`-staged
-    * commit (log-level partition + stats pruning picks the owner files;
-    * pre-images surface in the change feed); plain mode rewrites the
-    * container partition dirs. */
+  /** bulk_delete (ref :375, <=100 ids — EXCEPT on keys): the three
+    * tables' row-level deletes land in ONE copy-on-write commit
+    * (log-level partition + stats pruning picks the owner files; the
+    * pre-images surface in the change feed; vacuum reclaims the replaced
+    * files). */
   def bulkDelete(containerId: String, paths: Seq[String]): Unit = {
     bulkDeleteBatch(containerId, paths); ()
   }
@@ -921,7 +827,7 @@ final class KnowledgeStore(
       asConnector: Boolean = false): String = {
     require(paths.length <= MaxBulk, s"bulk_delete limited to $MaxBulk")
     if (!asConnector) requireWritable(containerId)
-    val jobId = java.util.UUID.randomUUID().toString.take(8)
+    val jobId = newJobId()
     progress.onProgress(graft.ingest.ProgressEvent(
       jobId, "received", 0L, paths.length.toLong, "bulk_delete"))
     // ledger-first id resolution (same contract as the upload probe): a
@@ -938,102 +844,13 @@ final class KnowledgeStore(
     }
     val ids = norms.map(n => ledgerIds.getOrElse(n,
       java.util.UUID.nameUUIDFromBytes(
-        s"$containerId:$n".getBytes("UTF-8")).toString)).toSet
-    if (txMode) {
-      val T = graft.store.TxLog
-      val pred = col("container_id") === containerId &&
-        col("document_id").isin(ids.toSeq: _*)
-      if (deleteMode == "merge_on_read") {
-        // deletion-vector flavor: three masks, ONE commit, zero rewrite
-        val staged = Seq("chunks", "vectors", "ledger")
-          .flatMap(t => T.stageDeleteDV(spark, warehouse, t, pred))
-        if (staged.nonEmpty) {
-          T.commit(spark, warehouse, Nil, Nil, dvAdds = staged.map(_.dvAdd),
-            readVersion = Some(staged.map(_.readVersion).min))
-          spark.catalog.refreshByPath(s"$warehouse/chunks")
-          org.apache.spark.sql.graftbridge.Bridge.invalidateFileStatusCache()
-        }
-      } else {
-        val staged = Seq(
-          ("chunks", Seq("container_id")),
-          ("vectors", Seq("container_id", "model_id")),
-          ("ledger", Seq("container_id"))).flatMap { case (t, pb) =>
-          T.stageDelete(spark, warehouse, t, pred, pb).map(t -> _)
-        }
-        if (staged.nonEmpty) {
-          T.commit(spark, warehouse,
-            staged.flatMap(_._2.adds), staged.flatMap(_._2.removes),
-            deletes = staged.map { case (t, sd) => t -> sd.predSql }.toMap,
-            readVersion = Some(staged.map(_._2.readVersion).min).filter(_ >= 0))
-          spark.catalog.refreshByPath(s"$warehouse/chunks")
-          org.apache.spark.sql.graftbridge.Bridge.invalidateFileStatusCache()
-        }
-      }
-    } else {
-      dropDocRows("chunks", containerId, Nil, ids)
-      dropDocRows("vectors", containerId, Seq("model_id"), ids)
-      dropDocRows("ledger", containerId, Nil, ids)
-    }
+        s"$containerId:$n".getBytes("UTF-8")).toString)).distinct
+    commitReplacing(Nil, Some(col("container_id") === containerId &&
+      col("document_id").isin(ids: _*)))
     invalidate()
     progress.onProgress(graft.ingest.ProgressEvent(
       jobId, "ready", paths.length.toLong, paths.length.toLong, "bulk_delete"))
     jobId
-  }
-
-  /** Distributed, container-scoped document delete: rewrites ONLY the
-    * affected `container_id=` partition directory as a Spark job — rows
-    * never touch the driver, and unrelated containers' files are never
-    * read. The filtered partition is written to a dot-prefixed temp dir
-    * inside the table (same filesystem — Spark's listing ignores hidden
-    * dirs) and swapped in with a rename, so readers see old-or-new, not
-    * half-written. Streaming warehouses get the same effect via the
-    * append-only tombstone + `StreamingIngest.latest`/`compact` path.
-    */
-  private def dropDocRows(
-      table: String,
-      containerId: String,
-      subParts: Seq[String],
-      ids: Set[String]): Unit = {
-    if (ids.isEmpty) return
-    val tableDir = s"$warehouse/$table"
-    val partDir = s"$tableDir/container_id=$containerId"
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(tableDir), spark.sparkContext.hadoopConfiguration)
-    val partPath = new org.apache.hadoop.fs.Path(partDir)
-    if (!fs.exists(partPath)) return
-    // a fully-deleted partition leaves a dir with only _SUCCESS markers;
-    // parquet schema inference on it throws, so treat file-less as absent
-    if (!hasDataFiles(fs, partPath)) { fs.delete(partPath, true); return }
-    val kept = spark.read.option("basePath", tableDir).parquet(partDir)
-      .filter(!col("document_id").isin(ids.toSeq: _*))
-      .drop("container_id") // implied by the partition dir name
-    // "kept nothing" must leave NO partition dir: a plain write still emits
-    // a footer-only parquet part, and a dynamic-partitionBy write emits no
-    // footers at all (which would poison the next read of this partition)
-    if (kept.isEmpty) { fs.delete(partPath, true); return }
-    val tmp = s"$tableDir/.rewrite-${java.util.UUID.randomUUID}"
-    val w = kept.write.mode(SaveMode.Overwrite)
-    (if (subParts.nonEmpty) w.partitionBy(subParts: _*) else w).parquet(tmp)
-    val tmpPath = new org.apache.hadoop.fs.Path(tmp)
-    fs.delete(partPath, true)
-    // an empty rewrite (dynamic partitionBy with zero rows) emits no parquet
-    // footers — swapping it in would poison the next read of this partition;
-    // dropping the dir entirely IS the correct post-state for "kept nothing"
-    if (hasDataFiles(fs, tmpPath)) fs.rename(tmpPath, partPath)
-    else fs.delete(tmpPath, true)
-  }
-
-  /** True iff `dir` contains at least one non-hidden, non-marker file
-    * (i.e. something parquet schema inference can read). */
-  private def hasDataFiles(
-      fs: org.apache.hadoop.fs.FileSystem,
-      dir: org.apache.hadoop.fs.Path): Boolean = {
-    val it = fs.listFiles(dir, true)
-    while (it.hasNext) {
-      val name = it.next().getPath.getName
-      if (!name.startsWith("_") && !name.startsWith(".")) return true
-    }
-    false
   }
 
   /** The ledger's document id at an EXACT path — a partition-pruned
@@ -1288,7 +1105,7 @@ final class KnowledgeStore(
   /** The settings-change reindex trigger: re-ingests every stale document
     * under the current effective settings (new chunker/config/embedder,
     * fresh IndexedWith stamp, generation bump — the same upsert path as an
-    * upload, so readers flip atomically per batch in txMode).
+    * upload, so readers flip atomically per batch).
     *
     * Document text is reconstructed from the stored chunks by OFFSET
     * SLICING ([[graft.ingest.Reindex.reconstruct]] — ONE Spark job per
@@ -1357,7 +1174,7 @@ final class KnowledgeStore(
     * `GET /batches/{id}` or follow `/progress/stream?job_id=`. */
   def reindexStaleAsync(containerId: String, force: Boolean = false): String = {
     requireWritable(containerId)
-    val jobId = java.util.UUID.randomUUID().toString.take(8)
+    val jobId = newJobId()
     progress.onProgress(graft.ingest.ProgressEvent(
       jobId, "received", 0L, 0L, "reindex"))
     reindexExec.submit(new Runnable {
@@ -1447,35 +1264,29 @@ final class KnowledgeStore(
 
   /** The warehouse's NIGHTLY JOB in one call (the reference runs these as
     * periodic background services — compaction-style cleanup, index
-    * refresh; ref IngestionPipeline periodic rescan). In txMode, per
-    * table: compact when fragmented past `maxFilesPerTable` OR when
-    * deletion vectors are pending (compaction materializes the masks);
-    * then refresh the derived postings/term_stats from the live chunk
-    * set, CHECKPOINT the log (snapshot fold stays O(recent)), vacuum
-    * data files past `vacuumRetentionMs`, and optionally expire the
-    * checkpoint-covered log history. Plain-parquet warehouses refresh
-    * postings only. Returns an action report for the operator's log
-    * line. Serving caches invalidate at the end — the next query
-    * rebuilds over the compacted layout. */
+    * refresh; ref IngestionPipeline periodic rescan). Per table: compact
+    * when fragmented past `maxFilesPerTable` OR when deletion-vector
+    * masks are pending (compaction materializes them; the store's own
+    * deletes are copy-on-write, but other log writers such as
+    * `TxLogSink.mergeDV` or `TxLog.deleteWhereDV` leave masks); then
+    * refresh the derived postings/term_stats from the live chunk set,
+    * CHECKPOINT the log (snapshot fold stays O(recent)), vacuum data
+    * files past `vacuumRetentionMs`, and optionally expire the
+    * checkpoint-covered log history. Returns an action report for the
+    * operator's log line. Serving caches invalidate at the end — the next
+    * query rebuilds over the compacted layout. */
   def maintain(
       maxFilesPerTable: Int = 64,
       vacuumRetentionMs: Long = 7L * 24 * 3600 * 1000,
       expireLogHistory: Boolean = false): Map[String, String] = {
-    val T = graft.store.TxLog
     val report = scala.collection.mutable.LinkedHashMap[String, String]()
-    if (txMode) {
-      val tables = Seq(
-        ("chunks", Seq("container_id")),
-        ("vectors", Seq("container_id", "model_id")),
-        ("ledger", Seq("container_id")))
-      tables.foreach { case (t, pb) =>
-        val snap = T.snapshot(spark, warehouse)
-        if (snap.files(t).nonEmpty &&
-          (snap.files(t).size > maxFilesPerTable || snap.dvsOf(t).nonEmpty)) {
-          val v = T.compact(spark, warehouse, t, pb,
-            view = _.repartition(pb.map(col): _*))
-          report += s"compact_$t" -> s"v$v"
-        }
+    DataTables.foreach { case (t, pb) =>
+      val snap = TxLog.snapshot(spark, warehouse)
+      if (snap.files(t).nonEmpty &&
+        (snap.files(t).size > maxFilesPerTable || snap.dvsOf(t).nonEmpty)) {
+        val v = TxLog.compact(spark, warehouse, t, pb,
+          view = _.repartition(pb.map(col): _*))
+        report += s"compact_$t" -> s"v$v"
       }
     }
     // derived-index refresh (PostingsIndex.refresh handles generation
@@ -1490,17 +1301,15 @@ final class KnowledgeStore(
       case e: Exception =>
         report += "postings" -> s"failed: ${e.getMessage}"
     }
-    if (txMode) {
-      // the INCREMENTAL writer (previous checkpoint + delta as a Spark
-      // job): driver memory ∝ commits-since-last-checkpoint, never live
-      // files — the classic driver-fold writer OOMs an 8 GB driver near
-      // 10M live files, a count a nightly-maintained 100 TB warehouse
-      // reaches (see ManifestScale / BENCH_NOTES)
-      report += "checkpoint" -> s"v${T.checkpointViaManifest(spark, warehouse)}"
-      report += "vacuum" -> s"${T.vacuum(spark, warehouse, vacuumRetentionMs)} files"
-      if (expireLogHistory)
-        report += "expire_log" -> s"${T.expireLog(spark, warehouse)} commits"
-    }
+    // the INCREMENTAL writer (previous checkpoint + delta as a Spark
+    // job): driver memory ∝ commits-since-last-checkpoint, never live
+    // files — the classic driver-fold writer OOMs an 8 GB driver near
+    // 10M live files, a count a nightly-maintained 100 TB warehouse
+    // reaches (see ManifestScale / BENCH_NOTES)
+    report += "checkpoint" -> s"v${TxLog.checkpointViaManifest(spark, warehouse)}"
+    report += "vacuum" -> s"${TxLog.vacuum(spark, warehouse, vacuumRetentionMs)} files"
+    if (expireLogHistory)
+      report += "expire_log" -> s"${TxLog.expireLog(spark, warehouse)} commits"
     invalidate()
     report.toMap
   }

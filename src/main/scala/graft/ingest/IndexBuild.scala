@@ -4,7 +4,7 @@ import graft.chunk.{Chunker, Chunkers}
 import graft.embed.Embedder
 import graft.model._
 import graft.text.{PorterStemmer, Stopwords, Tokenizer}
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Index-build batch job — the Spark form of the reference's ingestion
@@ -156,7 +156,6 @@ object IndexBuild {
       chunkerName: String = "recursive",
       cfg: ChunkingConfig = ChunkingConfig(),
       embedder: Embedder = graft.embed.HashEmbedder()): Unit = {
-    import spark.implicits._
     val chunker = Chunkers.forName(chunkerName, embedder)
     val chunks = chunkDocs(docs, chunker, cfg).persist()
 
@@ -206,18 +205,30 @@ object IndexBuild {
       "IndexedWith:MaxChunkSize" -> cfg.maxChunkSize.toString,
       "IndexedWith:Overlap" -> cfg.overlap.toString,
       "IndexedWith:Model" -> embedder.modelId)
-    val ledger = chunks.groupBy($"document_id", $"container_id", $"path")
-      .agg(count(lit(1)).cast("int").as("chunk_count"))
-      .join(docs.select($"document_id", sha2($"content", 256).as("content_hash"),
-        length($"content").cast("long").as("size_bytes"), $"file_name"), Seq("document_id"))
-      .withColumn("status", lit("Ready"))
-      .withColumn("generation", lit(1))
-      .withColumn("indexed_with", typedLit(stamp))
-    ledger.write.mode(SaveMode.Overwrite)
+    ledgerRows(chunks, docs, stamp, lit(1)).write.mode(SaveMode.Overwrite)
       .partitionBy("container_id")
       .parquet(s"$warehouse/ledger")
     chunks.unpersist()
   }
+
+  /** The document ledger of freshly chunked documents — the one recipe
+    * every producer writes (this build, the API upsert, the first crawl):
+    * one row per document with its chunk count, the sha-256 and byte
+    * length of its parsed content, status "Ready", the settings `stamp`
+    * (IndexedWith:*, what Reindex.classify compares against) and
+    * `generation`, an int column evaluated per document (an upsert bumps
+    * the replaced document's generation; a fresh document is 1). */
+  def ledgerRows(chunks: Dataset[BuiltChunk], docs: Dataset[RawDoc],
+      stamp: Map[String, String], generation: Column): DataFrame =
+    chunks.groupBy(col("document_id"), col("container_id"), col("path"))
+      .agg(count(lit(1)).cast("int").as("chunk_count"))
+      .join(docs.select(col("document_id"),
+        sha2(col("content"), 256).as("content_hash"),
+        length(col("content")).cast("long").as("size_bytes"), col("file_name")),
+        Seq("document_id"))
+      .withColumn("status", lit("Ready"))
+      .withColumn("generation", generation.cast("int"))
+      .withColumn("indexed_with", typedLit(stamp))
 
   /** Load the warehouse as a search index (vectors hydrated with path for
     * P3 scoping; postings attached when present). */

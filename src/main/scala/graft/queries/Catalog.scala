@@ -48,6 +48,26 @@ object Catalog {
     if (name == "events") tsNanos(raw) else raw
   }
 
+  /** A scratch warehouse for a query that stages its own tables (the
+    * TxLog DML and store harnesses). The query's returned DataFrame still
+    * reads the directory lazily after the query function returns, so it
+    * cannot be deleted there; it is deleted recursively when the JVM
+    * exits, through one shutdown hook shared by every such directory. */
+  def scratchDir(prefix: String): String = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toFile
+    scratchCleanup
+    scratchDirs.add(dir)
+    dir.toString
+  }
+
+  private val scratchDirs = new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]()
+
+  private lazy val scratchCleanup: Unit = {
+    sys.addShutdownHook(
+      scratchDirs.forEach(d => org.apache.commons.io.FileUtils.deleteQuietly(d)))
+    ()
+  }
+
   /** Normalize a `ts` column to epoch-nanos BIGINT, whatever the reader
     * surfaced: long passthrough (TIMESTAMP(NANOS) + nanosAsLong),
     * TIMESTAMP_NTZ -> cast to TIMESTAMP (identity instant under the UTC

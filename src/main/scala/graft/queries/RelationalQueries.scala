@@ -1088,7 +1088,7 @@ object RelationalQueries {
         // deleted id range must open ZERO files (the rewritten survivors
         // carry fresh stats). Both are pinned by the DuckDB oracle's
         // constant 1 — a regression fails the hash compare.
-        val wh = java.nio.file.Files.createTempDirectory("graft-q140").toString
+        val wh = Catalog.scratchDir("graft-q140")
         val T = graft.store.TxLog
         val docs = table(s, d, "documents")
         T.commit(s, wh, T.stageWrite(
@@ -1143,7 +1143,7 @@ object RelationalQueries {
         // This is the r7 verdict's fix for the artifact's heaviest query:
         // at 100 TB an always-queried JSON field pays its parse once per
         // CORPUS BUILD, not once per query.
-        val wh = java.nio.file.Files.createTempDirectory("graft-q141").toString
+        val wh = Catalog.scratchDir("graft-q141")
         val T = graft.store.TxLog
         graft.ingest.JsonMaterialize.buildTable(s, wh, "events_typed",
           table(s, d, "events").select(col("value"), col("props")),
@@ -1185,7 +1185,7 @@ object RelationalQueries {
         // masks and after materialization — and both must match the
         // oracle, so the anti-join read path and the materializing
         // rewrite must agree exactly.
-        val wh = java.nio.file.Files.createTempDirectory("graft-q144").toString
+        val wh = Catalog.scratchDir("graft-q144")
         val T = graft.store.TxLog
         T.commit(s, wh, T.stageWrite(
           table(s, d, "documents").repartitionByRange(8, col("doc_id")),
@@ -1241,7 +1241,7 @@ object RelationalQueries {
         // recompute and that refreshes consumed the feed (version
         // advanced). At 100 TB this is the nightly-groupBy → minute-
         // scale-delta trade.
-        val wh = java.nio.file.Files.createTempDirectory("graft-q146").toString
+        val wh = Catalog.scratchDir("graft-q146")
         val T = graft.store.TxLog
         val V = graft.store.IncrementalView
         T.commit(s, wh, T.stageWrite(
@@ -1300,8 +1300,8 @@ object RelationalQueries {
         // matched/written counts agree, and (c) the two final tables are
         // row-identical — all folded into audit_ok, which the oracle's
         // constant 1 hash-pins.
-        val wh = java.nio.file.Files.createTempDirectory("graft-q147").toString
-        val whDv = java.nio.file.Files.createTempDirectory("graft-q147dv").toString
+        val wh = Catalog.scratchDir("graft-q147")
+        val whDv = Catalog.scratchDir("graft-q147dv")
         val T = graft.store.TxLog
         val docs = table(s, d, "documents")
         Seq(wh, whDv).foreach { w =>
@@ -1374,7 +1374,7 @@ object RelationalQueries {
         // post-image inserts == reported updated rows, pairs at one
         // version per statement); the oracle replays both statements as
         // ordered CASE branches over the raw table.
-        val wh = java.nio.file.Files.createTempDirectory("graft-q148").toString
+        val wh = Catalog.scratchDir("graft-q148")
         val T = graft.store.TxLog
         T.commit(s, wh, T.stageWrite(
           table(s, d, "documents").repartitionByRange(8, col("doc_id")),
@@ -1439,8 +1439,8 @@ object RelationalQueries {
         // and the oracle's GROUP BY lang hash-pins it again. Tombstones
         // (whenMatchedDelete) and inserts ride the same batch; both
         // flavors run on twin warehouses and must agree row-for-row.
-        val wh = java.nio.file.Files.createTempDirectory("graft-q152").toString
-        val whDv = java.nio.file.Files.createTempDirectory("graft-q152dv").toString
+        val wh = Catalog.scratchDir("graft-q152")
+        val whDv = Catalog.scratchDir("graft-q152dv")
         val T = graft.store.TxLog
         val docs = table(s, d, "documents")
         Seq(wh, whDv).foreach { w =>
@@ -1520,7 +1520,7 @@ object RelationalQueries {
         // sketch internals are engine-private). At 100 TB: per-key
         // distinct counts maintained without ever re-scanning the
         // corpus OR holding distinct values in view state.
-        val wh = java.nio.file.Files.createTempDirectory("graft-q153").toString
+        val wh = Catalog.scratchDir("graft-q153")
         val T = graft.store.TxLog
         val V = graft.store.IncrementalView
         T.commit(s, wh, T.stageWrite(
@@ -1578,8 +1578,8 @@ object RelationalQueries {
         // feed's pre-image count equal the CHANGED keys only (the
         // condition-failing majority never costs a rewrite), and both
         // flavors agree row-for-row.
-        val wh = java.nio.file.Files.createTempDirectory("graft-q154").toString
-        val whDv = java.nio.file.Files.createTempDirectory("graft-q154dv").toString
+        val wh = Catalog.scratchDir("graft-q154")
+        val whDv = Catalog.scratchDir("graft-q154dv")
         val T = graft.store.TxLog
         val docs = table(s, d, "documents")
         Seq(wh, whDv).foreach { w =>
@@ -1643,8 +1643,8 @@ object RelationalQueries {
         // flavors agree row-for-row, and the change feed's pre-image
         // count equals matched keys + clause-passing keys exactly (the
         // condition-failing English rows never rewrite or feed).
-        val wh = java.nio.file.Files.createTempDirectory("graft-q155").toString
-        val whDv = java.nio.file.Files.createTempDirectory("graft-q155dv").toString
+        val wh = Catalog.scratchDir("graft-q155")
+        val whDv = Catalog.scratchDir("graft-q155dv")
         val T = graft.store.TxLog
         val docs = table(s, d, "documents")
         Seq(wh, whDv).foreach { w =>
@@ -1705,7 +1705,7 @@ object RelationalQueries {
         // is IDENTICAL across all three schema ops (zero rewrite), and
         // the merge's owner pruning still works off the stats recorded
         // under the pre-rename physical name.
-        val wh = java.nio.file.Files.createTempDirectory("graft-q156").toString
+        val wh = Catalog.scratchDir("graft-q156")
         val T = graft.store.TxLog
         val docs = table(s, d, "documents")
           .select("doc_id", "lang", "source", "n_chars")
@@ -1810,7 +1810,7 @@ object RelationalQueries {
         // Scale: harness I/O ∝ the sf table; the operators under test
         // are the production paths whose whole point is 10^6..10^7-file
         // warehouses.
-        val wh = java.nio.file.Files.createTempDirectory("graft-q159").toString
+        val wh = Catalog.scratchDir("graft-q159")
         val T = graft.store.TxLog
         val docs = table(s, d, "documents")
           .select("doc_id", "lang", "source", "n_chars")
@@ -1891,7 +1891,7 @@ object RelationalQueries {
         val T = graft.store.TxLog
         val docs = table(s, d, "documents")
           .select("doc_id", "lang", "source", "n_chars")
-        val wh = java.nio.file.Files.createTempDirectory("graft-q160").toString
+        val wh = Catalog.scratchDir("graft-q160")
         def canon() = {
           val sn = T.snapshot(s, wh)
           (sn.version, sn.live.map { case (t, fs0) => t -> fs0.sorted },

@@ -164,7 +164,7 @@ class SyncBinaryBucketSpec extends AnyFunSuite {
     assert(store.getDocument(cid, "/r/tool.exe").isEmpty)
     // the index holds the pdf's EXTRACTED text (chunks the search legs scan)
     import org.apache.spark.sql.functions.col
-    assert(spark.read.parquet(s"$wh/chunks")
+    assert(graft.store.TxLog.read(spark, wh, "chunks")
       .filter(col("container_id") === cid &&
         col("content").contains("Quarterly synced report body"))
       .count() > 0, "synced pdf text must reach the chunk index")
@@ -348,7 +348,7 @@ class SyncFirstCrawlSpec extends AnyFunSuite {
     assert(rA.created == rB.created && rA.skipped == rB.skipped, (rA, rB))
     // PARITY: same ledger identities and content hashes, same chunk rows
     def ledgerOf(wh: String, cid: String) =
-      spark.read.parquet(s"$wh/ledger")
+      graft.store.TxLog.read(spark, wh, "ledger")
         .filter(org.apache.spark.sql.functions.col("container_id") === cid)
         .select("path", "document_id", "content_hash", "chunk_count")
         .as[(String, String, String, Int)].collect().toSet
@@ -791,35 +791,36 @@ class SyncRetrySpec extends AnyFunSuite {
   }
 }
 
-/** Round-13 review pins: the partial-append orphan sweep, the
+/** Sync regression pins: a crashed upload's stranded files, the
   * pre-ingest guard denominator, and the bulk-rename demotion bound. */
 class SyncReviewPinsSpec extends AnyFunSuite {
   import TestSpark.spark
   import spark.implicits._
 
-  test("a partially-failed append never doubles a document on retry (orphan sweep)") {
+  test("a crashed upload's staged files never double a document on retry") {
     val wh = java.nio.file.Files.createTempDirectory("graft-orphan").toString
     val store = new KnowledgeStore(spark, wh,
       cfg = graft.model.ChunkingConfig(maxChunkSize = 40, overlap = 5, minChunkSize = 5))
     val cid = store.createContainer("orphans")
     store.uploadFile(cid, "a.txt", "the one true body of this document.")
     val before = store.getDocument(cid, "/a.txt").get
-    // simulate the mid-append crash window: chunk rows landed, the ledger
-    // row did not (plain mode appends chunks -> vectors -> ledger)
-    import scala.reflect.io.Directory
-    new Directory(new java.io.File(s"$wh/ledger/container_id=$cid")).deleteRecursively()
-    spark.catalog.refreshByPath(s"$wh/ledger")
-    // the retry: the ledger probe finds nothing, but the orphan sweep
-    // must still clear the stranded chunk rows before appending
+    // the crash window: an upload staged its chunk files, then died
+    // before its commit — the files sit in the table dir, unreferenced
+    import org.apache.spark.sql.functions.col
+    val T = graft.store.TxLog
+    val staged = T.stageWrite(
+      T.read(spark, wh, "chunks").filter(col("container_id") === cid),
+      wh, "chunks", Seq("container_id"),
+      generation = T.snapshot(spark, wh).maxGeneration("chunks") + 1L)
+    assert(staged.nonEmpty)
+    // the retry commits once; the stranded files stay invisible
     store.uploadFile(cid, "a.txt", "the one true body of this document.")
     val after = store.getDocument(cid, "/a.txt").get
     assert(after == before,
-      s"retry after a partial append must not double content:\n$after")
-    import org.apache.spark.sql.functions.col
-    val rows = spark.read.parquet(s"$wh/chunks")
-      .filter(col("container_id") === cid)
+      s"retry after a crashed upload must not double content:\n$after")
+    val rows = T.read(spark, wh, "chunks").filter(col("container_id") === cid)
     assert(rows.count() == rows.select("chunk_id").distinct().count(),
-      "no stranded duplicate chunk rows may survive the retry")
+      "no stranded duplicate chunk rows may surface after the retry")
   }
 
   test("the mass-delete guard's denominator is the PRE-ingest store size") {

@@ -23,20 +23,19 @@ class PathUtilSpec extends AnyFunSuite {
   }
 }
 
-/** §2.12: the 11-tool query surface end-to-end over a temp warehouse.
-  * Runs TWICE — plain-parquet mode here and TxLog-transactional mode in
-  * [[KnowledgeStoreTxSpec]] — every behavior must hold under both
-  * storage engines. */
+/** §2.12: the 11-tool query surface end-to-end over a temp warehouse on
+  * the TxLog commit log (the store's only storage engine), plus the
+  * guarantees only the log can give — one-commit upserts whose change
+  * feed reads as delete pre-images + insert post-images, snapshot-isolated
+  * deletes, adoption of a plain-parquet warehouse. */
 class KnowledgeStoreSpec extends AnyFunSuite {
   import TestSpark.spark
+  import spark.implicits._
 
-  /** Overridden by the transactional twin. */
-  protected def transactional: Boolean = false
-
+  private val smallChunks =
+    graft.model.ChunkingConfig(maxChunkSize = 40, overlap = 5, minChunkSize = 5)
   private val wh = java.nio.file.Files.createTempDirectory("graft-ks").toString
-  private lazy val store = new KnowledgeStore(spark, wh,
-    cfg = graft.model.ChunkingConfig(maxChunkSize = 40, overlap = 5, minChunkSize = 5),
-    transactional = transactional)
+  private lazy val store = new KnowledgeStore(spark, wh, cfg = smallChunks)
 
   test("container create/list enforces unique names") {
     val id = store.createContainer("docs")
@@ -135,9 +134,8 @@ class KnowledgeStoreSpec extends AnyFunSuite {
     assert(doc.forall(!_.contains("Set overlap in settings")))
     // document count unchanged; ledger has exactly one row at generation 2
     assert(store.containerStats(cid)("documents") == 2)
-    // log-aware read: identical to the raw read in plain mode, and the
-    // snapshot view in txMode (the replaced file stays on disk until
-    // vacuum but must be invisible)
+    // log-aware read: the replaced file stays on disk until vacuum but
+    // must be invisible
     val led = graft.store.TxLog.read(spark, wh, "ledger")
     val rows = led.filter(org.apache.spark.sql.functions.col("path") === "/guide/overlap.txt")
       .select("generation").collect()
@@ -165,17 +163,14 @@ class KnowledgeStoreSpec extends AnyFunSuite {
   }
 
   test("delete APIs survive a fully-emptied container partition") {
-    // deleting the LAST document empties the partition: the rewrite emits
-    // zero parquet footers, so a naive swap leaves a dir whose next read
-    // throws AnalysisException ('Unable to infer schema') — the empty
-    // rewrite must drop the partition dir instead
+    // deleting the LAST document empties the partition: the delete
+    // removes the rows LOGICALLY (files stay until vacuum), and after
+    // vacuum the partition dir holds nothing a parquet read would trip on
     val cid = store.createContainer("empties-out")
     store.uploadFile(cid, "only/doc.txt", "the sole document in this container")
     store.deleteFile(cid, "only/doc.txt")
     val partDir = new java.io.File(s"$wh/chunks/container_id=$cid")
-    // txMode removes the rows LOGICALLY first (files stay until vacuum);
-    // plain mode must physically drop the emptied partition dir
-    if (transactional) graft.store.TxLog.vacuum(spark, wh, retentionMs = 0L)
+    graft.store.TxLog.vacuum(spark, wh, retentionMs = 0L)
     assert(!partDir.exists() ||
       partDir.listFiles().forall(f => f.getName.startsWith("_") || f.getName.startsWith(".")),
       "empty rewrite left unreadable partition contents")
@@ -286,8 +281,7 @@ class KnowledgeStoreSpec extends AnyFunSuite {
   test("API uploads write back to the embed cache (J4 across calls)") {
     val wh2 = java.nio.file.Files.createTempDirectory("graft-ks-cache").toString
     val counting = new graft.ingest.CountingEmbedder
-    val s2 = new KnowledgeStore(spark, wh2, embedder = counting,
-      cfg = graft.model.ChunkingConfig(maxChunkSize = 40, overlap = 5, minChunkSize = 5))
+    val s2 = new KnowledgeStore(spark, wh2, embedder = counting, cfg = smallChunks)
     val cid = s2.createContainer("cachec")
     graft.ingest.CountingEmbedder.calls.set(0)
     s2.uploadFile(cid, "a.txt", "identical cached words every time.")
@@ -297,6 +291,188 @@ class KnowledgeStoreSpec extends AnyFunSuite {
     s2.uploadFile(cid, "b.txt", "identical cached words every time.")
     assert(graft.ingest.CountingEmbedder.calls.get() == 0,
       "second upload should hit the embed cache")
+  }
+
+  test("transactional = false is rejected: the log is the only storage engine") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-ksplain").toString
+    val e = intercept[IllegalArgumentException](
+      new KnowledgeStore(spark, dir, transactional = false))
+    assert(e.getMessage.contains("transactional = false"), e.getMessage)
+    assert(!graft.store.TxLog.exists(spark, dir), "a rejected store must not start a log")
+  }
+
+  test("upsert is ONE commit; CDF shows pre-images and post-images at one version") {
+    val wh = java.nio.file.Files.createTempDirectory("graft-kstx").toString
+    val s = new KnowledgeStore(spark, wh, cfg = smallChunks)
+    val cid = s.createContainer("tx-docs")
+    s.uploadFile(cid, "/a.txt", "alpha beta gamma delta epsilon zeta")
+    val v1 = graft.store.TxLog.snapshot(spark, wh).version
+    // re-upload the same path: REPLACE must be one commit
+    s.uploadFile(cid, "/a.txt", "alpha beta gamma delta epsilon replaced")
+    val v2 = graft.store.TxLog.snapshot(spark, wh).version
+    assert(v2 == v1 + 1, s"upsert must claim exactly one version ($v1 -> $v2)")
+    // the ledger feed at the upsert version: old row out, new row in
+    val feed = graft.store.TxLog.readChanges(spark, wh, "ledger", fromVersion = v1)
+      .select("_change_type", "content_hash").as[(String, String)].collect().toSeq
+    assert(feed.count(_._1 == "delete") == 1, s"pre-image missing: $feed")
+    assert(feed.count(_._1 == "insert") == 1, s"post-image missing: $feed")
+    assert(feed.map(_._2).distinct.length == 2, "hashes must differ across the upsert")
+    // reads resolve the replacement exactly once
+    assert(s.getDocument(cid, "/a.txt").get.contains("replaced"))
+    assert(s.containerStats(cid)("documents") == 1)
+    // time travel: the pre-upsert snapshot still reads the old content
+    val oldLedger = graft.store.TxLog.read(spark, wh, "ledger", atVersion = v1)
+    assert(oldLedger.count() == 1)
+  }
+
+  /** Masks one document's rows in all three tables the way other log
+    * writers do (TxLog.deleteWhereDV, TxLogSink.mergeDV): deletion
+    * vectors, no data rewrite. */
+  private def maskDocument(wh: String, s: KnowledgeStore, cid: String,
+      path: String): Unit = {
+    import org.apache.spark.sql.functions.col
+    val id = s.documentIdAt(cid, path).get
+    Seq("chunks", "vectors", "ledger").foreach(t =>
+      graft.store.TxLog.deleteWhereDV(spark, wh, t,
+        col("container_id") === cid && col("document_id") === id))
+  }
+
+  test("deletion-vector masks hide rows across the API surface; compact materializes") {
+    val wh = java.nio.file.Files.createTempDirectory("graft-kstxdv").toString
+    val s = new KnowledgeStore(spark, wh, cfg = smallChunks)
+    val cid = s.createContainer("tx-dv")
+    s.bulkUpload(cid, Seq(
+      ("/a.txt", "alpha beta gamma delta epsilon zeta"),
+      ("/b.txt", "one two three four five six seven")))
+    val T = graft.store.TxLog
+    val filesBefore = T.snapshot(spark, wh).files("chunks").map(_._1).toSet
+    maskDocument(wh, s, cid, "/a.txt")
+    // NO data rewrite — the three tables' deletes are masks
+    assert(T.snapshot(spark, wh).files("chunks").map(_._1).toSet == filesBefore)
+    assert(T.snapshot(spark, wh).dvsOf("chunks").nonEmpty)
+    assert(T.snapshot(spark, wh).dvsOf("ledger").nonEmpty)
+    // the API surface sees the delete everywhere
+    assert(s.getDocument(cid, "/a.txt").isEmpty)
+    assert(s.getDocument(cid, "/b.txt").nonEmpty)
+    assert(s.listFiles(cid).map(_._2) == Seq("/b.txt"))
+    assert(s.containerStats(cid)("documents") == 1)
+    // search never returns masked chunks
+    val hits = s.search(graft.model.SearchRequest("alpha beta", cid, topK = 5))
+    assert(!hits.exists(_.document_id == java.util.UUID.nameUUIDFromBytes(
+      s"$cid:/a.txt".getBytes("UTF-8")).toString))
+    // the store's own writes work over masked files: a copy-on-write
+    // delete of the survivor and a re-upload of the masked path
+    s.bulkDelete(cid, Seq("/b.txt"))
+    assert(s.getDocument(cid, "/b.txt").isEmpty)
+    s.uploadFile(cid, "/a.txt", "alpha beta gamma delta epsilon back again")
+    assert(s.getDocument(cid, "/a.txt").exists(_.contains("back again")))
+    assert(s.containerStats(cid)("documents") == 1)
+    // the compaction cadence materializes the masks
+    T.compact(spark, wh, "chunks", Seq("container_id"))
+    assert(T.snapshot(spark, wh).dvsOf("chunks").isEmpty)
+    assert(s.getDocument(cid, "/a.txt").exists(_.contains("back again")))
+    assert(s.getDocument(cid, "/b.txt").isEmpty)
+  }
+
+  test("maintain() compacts fragmented tables, materializes masks, checkpoints, vacuums") {
+    val wh = java.nio.file.Files.createTempDirectory("graft-kstxm").toString
+    val s = new KnowledgeStore(spark, wh, cfg = smallChunks)
+    val cid = s.createContainer("tx-maint")
+    // several upsert batches fragment the tables; a mask delete is pending
+    for (i <- 1 to 4)
+      s.uploadFile(cid, s"/d$i.txt", s"alpha beta gamma delta content number $i words")
+    maskDocument(wh, s, cid, "/d4.txt")
+    val T = graft.store.TxLog
+    assert(T.snapshot(spark, wh).dvsOf("chunks").nonEmpty)
+    val nFilesBefore = T.snapshot(spark, wh).files("chunks").size
+
+    val report = s.maintain(maxFilesPerTable = 2, vacuumRetentionMs = 0L)
+    // compaction materialized the masks and bounded the file count
+    assert(report.contains("compact_chunks"), report.toString)
+    assert(T.snapshot(spark, wh).dvsOf("chunks").isEmpty)
+    assert(T.snapshot(spark, wh).dvsOf("ledger").isEmpty)
+    assert(T.snapshot(spark, wh).files("chunks").size < nFilesBefore)
+    // checkpoint + vacuum + postings all ran
+    assert(report.get("postings").contains("refreshed"))
+    assert(report.contains("checkpoint") && report.contains("vacuum"))
+    // the surface is intact: the deleted doc stays gone, the rest serve
+    assert(s.getDocument(cid, "/d4.txt").isEmpty)
+    assert(s.containerStats(cid)("documents") == 3)
+    assert(s.search(graft.model.SearchRequest("alpha beta", cid, topK = 5)).nonEmpty)
+    // a second maintenance pass on a healthy warehouse does no compaction
+    val report2 = s.maintain(maxFilesPerTable = 64)
+    assert(!report2.contains("compact_chunks"), report2.toString)
+  }
+
+  test("bulk delete is a logged deleteWhere — pre-images feed, vacuum reclaims") {
+    val wh = java.nio.file.Files.createTempDirectory("graft-kstx2").toString
+    val s = new KnowledgeStore(spark, wh, cfg = smallChunks)
+    val cid = s.createContainer("tx-del")
+    s.bulkUpload(cid, Seq(
+      ("/a.txt", "alpha beta gamma delta epsilon zeta"),
+      ("/b.txt", "one two three four five six seven")))
+    val before = graft.store.TxLog.snapshot(spark, wh).version
+    s.bulkDelete(cid, Seq("/a.txt"))
+    // one commit covered all three tables
+    assert(graft.store.TxLog.snapshot(spark, wh).version == before + 1)
+    val dels = graft.store.TxLog.readChanges(spark, wh, "chunks", fromVersion = before)
+      .filter($"_change_type" === "delete")
+    assert(dels.count() > 0, "chunk pre-images must feed")
+    assert(s.listFiles(cid).map(_._2) == Seq("/b.txt"))
+    assert(s.getDocument(cid, "/a.txt").isEmpty)
+    // physical reclamation is vacuum's job, and live data survives it
+    graft.store.TxLog.vacuum(spark, wh, retentionMs = 0L)
+    assert(s.getDocument(cid, "/b.txt").nonEmpty)
+  }
+
+  test("container deletion feeds delete pre-images — CDC consumers see it") {
+    val wh = java.nio.file.Files.createTempDirectory("graft-kstxcd").toString
+    val s = new KnowledgeStore(spark, wh, cfg = smallChunks)
+    val cid = s.createContainer("tx-cdel", connectorType = "Filesystem")
+    val keep = s.createContainer("tx-keep")
+    s.uploadFile(cid, "/a.txt", "alpha beta gamma delta epsilon zeta")
+    s.uploadFile(keep, "/k.txt", "kappa lambda mu nu xi omicron")
+    val v0 = graft.store.TxLog.snapshot(spark, wh).version
+    s.deleteContainer(cid)
+    // the remove-bearing commit carries a delete action: the feed
+    // replays the dropped container's rows as pre-images (an
+    // IncrementalView over the ledger stays exact through it)
+    val feed = graft.store.TxLog.readChanges(spark, wh, "ledger", fromVersion = v0)
+    val dels = feed.filter($"_change_type" === "delete")
+      .select("container_id").as[String].collect()
+    assert(dels.toSeq == Seq(cid), s"container delete must feed pre-images, got ${dels.toSeq}")
+    assert(feed.filter($"_change_type" === "insert").isEmpty)
+    // chunks feed too, and only for the deleted container
+    val chunkDels = graft.store.TxLog.readChanges(spark, wh, "chunks", fromVersion = v0)
+      .filter($"_change_type" === "delete").select("container_id").as[String].collect()
+    assert(chunkDels.nonEmpty && chunkDels.forall(_ == cid))
+    // surviving container intact
+    assert(s.getDocument(keep, "/k.txt").nonEmpty)
+  }
+
+  test("a store over a populated plain-parquet warehouse ADOPTS the data") {
+    val wh = java.nio.file.Files.createTempDirectory("graft-kstxad").toString
+    // a log-less warehouse written by the plain IndexBuild batch job
+    val cid = "adopt-me"
+    def raw(path: String, body: String) = graft.ingest.IndexBuild.RawDoc(
+      java.util.UUID.nameUUIDFromBytes(s"$cid:$path".getBytes("UTF-8")).toString,
+      cid, path, path.stripPrefix("/"), body)
+    graft.ingest.IndexBuild.build(spark, Seq(
+      raw("/a.txt", "alpha beta gamma delta epsilon zeta"),
+      raw("/b.txt", "one two three four five six seven")).toDS(), wh, cfg = smallChunks)
+    assert(!graft.store.TxLog.exists(spark, wh))
+    // opening a store must NOT hide the existing documents behind an
+    // empty initial commit — the files are adopted into it
+    val tx = new KnowledgeStore(spark, wh, cfg = smallChunks)
+    assert(graft.store.TxLog.exists(spark, wh))
+    assert(tx.listFiles(cid).map(_._2).sorted == Seq("/a.txt", "/b.txt"))
+    assert(tx.getDocument(cid, "/a.txt").nonEmpty)
+    assert(tx.containerStats(cid)("documents") == 2)
+    // and the adopted warehouse keeps working through the log: an upsert
+    // replaces the adopted rows
+    tx.uploadFile(cid, "/a.txt", "alpha beta gamma delta epsilon replaced")
+    assert(tx.getDocument(cid, "/a.txt").get.contains("replaced"))
+    assert(tx.containerStats(cid)("documents") == 2)
   }
 }
 
@@ -325,184 +501,5 @@ class ConnectorDeltaSpec extends AnyFunSuite {
     val snap2 = ConnectorDelta.listDirectory(spark, dir.toString)
     val events = ConnectorDelta.events(snap1, snap2).collect()
     assert(events.length == 1 && events.head.getString(1) == ConnectorDelta.Created)
-  }
-}
-
-/** The whole §2.12 suite again, on a TxLog-transactional warehouse: every
-  * API behavior must be storage-engine-independent, plus the guarantees
-  * only the log can give — one-commit upserts whose change feed reads as
-  * delete pre-images + insert post-images, and snapshot-isolated deletes.
-  */
-class KnowledgeStoreTxSpec extends KnowledgeStoreSpec {
-  import TestSpark.spark
-  import spark.implicits._
-
-  override protected def transactional: Boolean = true
-
-  test("tx: upsert is ONE commit; CDF shows pre-images and post-images at one version") {
-    val wh = java.nio.file.Files.createTempDirectory("graft-kstx").toString
-    val s = new KnowledgeStore(spark, wh,
-      cfg = graft.model.ChunkingConfig(maxChunkSize = 40, overlap = 5, minChunkSize = 5),
-      transactional = true)
-    val cid = s.createContainer("tx-docs")
-    s.uploadFile(cid, "/a.txt", "alpha beta gamma delta epsilon zeta")
-    val v1 = graft.store.TxLog.snapshot(spark, wh).version
-    // re-upload the same path: REPLACE must be one commit
-    s.uploadFile(cid, "/a.txt", "alpha beta gamma delta epsilon replaced")
-    val v2 = graft.store.TxLog.snapshot(spark, wh).version
-    assert(v2 == v1 + 1, s"upsert must claim exactly one version ($v1 -> $v2)")
-    // the ledger feed at the upsert version: old row out, new row in
-    val feed = graft.store.TxLog.readChanges(spark, wh, "ledger", fromVersion = v1)
-      .select("_change_type", "content_hash").as[(String, String)].collect().toSeq
-    assert(feed.count(_._1 == "delete") == 1, s"pre-image missing: $feed")
-    assert(feed.count(_._1 == "insert") == 1, s"post-image missing: $feed")
-    assert(feed.map(_._2).distinct.length == 2, "hashes must differ across the upsert")
-    // reads resolve the replacement exactly once
-    assert(s.getDocument(cid, "/a.txt").get.contains("replaced"))
-    assert(s.containerStats(cid)("documents") == 1)
-    // time travel: the pre-upsert snapshot still reads the old content
-    val oldLedger = graft.store.TxLog.read(spark, wh, "ledger", atVersion = v1)
-    assert(oldLedger.count() == 1)
-  }
-
-  test("tx: merge_on_read delete mode masks rows in one commit, zero rewrite; compact materializes") {
-    val wh = java.nio.file.Files.createTempDirectory("graft-kstxdv").toString
-    val s = new KnowledgeStore(spark, wh,
-      cfg = graft.model.ChunkingConfig(maxChunkSize = 40, overlap = 5, minChunkSize = 5),
-      transactional = true, deleteMode = "merge_on_read")
-    val cid = s.createContainer("tx-dv")
-    s.bulkUpload(cid, Seq(
-      ("/a.txt", "alpha beta gamma delta epsilon zeta"),
-      ("/b.txt", "one two three four five six seven")))
-    val T = graft.store.TxLog
-    val filesBefore = T.snapshot(spark, wh).files("chunks").map(_._1).toSet
-    val vBefore = T.snapshot(spark, wh).version
-    s.bulkDelete(cid, Seq("/a.txt"))
-    // one commit, NO data rewrite — all three tables' deletes are masks
-    assert(T.snapshot(spark, wh).version == vBefore + 1)
-    assert(T.snapshot(spark, wh).files("chunks").map(_._1).toSet == filesBefore)
-    assert(T.snapshot(spark, wh).dvsOf("chunks").nonEmpty)
-    assert(T.snapshot(spark, wh).dvsOf("ledger").nonEmpty)
-    // the API surface sees the delete everywhere
-    assert(s.getDocument(cid, "/a.txt").isEmpty)
-    assert(s.getDocument(cid, "/b.txt").nonEmpty)
-    assert(s.listFiles(cid).map(_._2) == Seq("/b.txt"))
-    assert(s.containerStats(cid)("documents") == 1)
-    // search never returns masked chunks
-    val hits = s.search(graft.model.SearchRequest("alpha beta", cid, topK = 5))
-    assert(!hits.exists(_.document_id == java.util.UUID.nameUUIDFromBytes(
-      s"$cid:/a.txt".getBytes("UTF-8")).toString))
-    // the compaction cadence materializes the masks
-    T.compact(spark, wh, "chunks", Seq("container_id"))
-    assert(T.snapshot(spark, wh).dvsOf("chunks").isEmpty)
-    assert(s.getDocument(cid, "/a.txt").isEmpty)
-    assert(s.getDocument(cid, "/b.txt").nonEmpty)
-  }
-
-  test("tx: maintain() compacts fragmented tables, materializes masks, checkpoints, vacuums") {
-    val wh = java.nio.file.Files.createTempDirectory("graft-kstxm").toString
-    val s = new KnowledgeStore(spark, wh,
-      cfg = graft.model.ChunkingConfig(maxChunkSize = 40, overlap = 5, minChunkSize = 5),
-      transactional = true, deleteMode = "merge_on_read")
-    val cid = s.createContainer("tx-maint")
-    // several upsert batches fragment the tables; a mask delete is pending
-    for (i <- 1 to 4)
-      s.uploadFile(cid, s"/d$i.txt", s"alpha beta gamma delta content number $i words")
-    s.bulkDelete(cid, Seq("/d4.txt"))
-    val T = graft.store.TxLog
-    assert(T.snapshot(spark, wh).dvsOf("chunks").nonEmpty)
-    val nFilesBefore = T.snapshot(spark, wh).files("chunks").size
-
-    val report = s.maintain(maxFilesPerTable = 2, vacuumRetentionMs = 0L)
-    // compaction materialized the masks and bounded the file count
-    assert(report.contains("compact_chunks"), report.toString)
-    assert(T.snapshot(spark, wh).dvsOf("chunks").isEmpty)
-    assert(T.snapshot(spark, wh).files("chunks").size < nFilesBefore)
-    // checkpoint + vacuum + postings all ran
-    assert(report.get("postings").contains("refreshed"))
-    assert(report.contains("checkpoint") && report.contains("vacuum"))
-    // the surface is intact: the deleted doc stays gone, the rest serve
-    assert(s.getDocument(cid, "/d4.txt").isEmpty)
-    assert(s.containerStats(cid)("documents") == 3)
-    assert(s.search(graft.model.SearchRequest("alpha beta", cid, topK = 5)).nonEmpty)
-    // a second maintenance pass on a healthy warehouse does no compaction
-    val report2 = s.maintain(maxFilesPerTable = 64)
-    assert(!report2.contains("compact_chunks"), report2.toString)
-  }
-
-  test("tx: bulk delete is a logged deleteWhere — pre-images feed, vacuum reclaims") {
-    val wh = java.nio.file.Files.createTempDirectory("graft-kstx2").toString
-    val s = new KnowledgeStore(spark, wh,
-      cfg = graft.model.ChunkingConfig(maxChunkSize = 40, overlap = 5, minChunkSize = 5),
-      transactional = true)
-    val cid = s.createContainer("tx-del")
-    s.bulkUpload(cid, Seq(
-      ("/a.txt", "alpha beta gamma delta epsilon zeta"),
-      ("/b.txt", "one two three four five six seven")))
-    val before = graft.store.TxLog.snapshot(spark, wh).version
-    s.bulkDelete(cid, Seq("/a.txt"))
-    // one commit covered all three tables
-    assert(graft.store.TxLog.snapshot(spark, wh).version == before + 1)
-    val dels = graft.store.TxLog.readChanges(spark, wh, "chunks", fromVersion = before)
-      .filter($"_change_type" === "delete")
-    assert(dels.count() > 0, "chunk pre-images must feed")
-    assert(s.listFiles(cid).map(_._2) == Seq("/b.txt"))
-    assert(s.getDocument(cid, "/a.txt").isEmpty)
-    // physical reclamation is vacuum's job, and live data survives it
-    graft.store.TxLog.vacuum(spark, wh, retentionMs = 0L)
-    assert(s.getDocument(cid, "/b.txt").nonEmpty)
-  }
-
-  test("tx: container deletion feeds delete pre-images — CDC consumers see it") {
-    val wh = java.nio.file.Files.createTempDirectory("graft-kstxcd").toString
-    val s = new KnowledgeStore(spark, wh,
-      cfg = graft.model.ChunkingConfig(maxChunkSize = 40, overlap = 5, minChunkSize = 5),
-      transactional = true)
-    val cid = s.createContainer("tx-cdel", connectorType = "Filesystem")
-    val keep = s.createContainer("tx-keep")
-    s.uploadFile(cid, "/a.txt", "alpha beta gamma delta epsilon zeta")
-    s.uploadFile(keep, "/k.txt", "kappa lambda mu nu xi omicron")
-    val v0 = graft.store.TxLog.snapshot(spark, wh).version
-    s.deleteContainer(cid)
-    // the remove-bearing commit carries a delete action: the feed
-    // replays the dropped container's rows as pre-images (an
-    // IncrementalView over the ledger stays exact through it)
-    val feed = graft.store.TxLog.readChanges(spark, wh, "ledger", fromVersion = v0)
-    val dels = feed.filter($"_change_type" === "delete")
-      .select("container_id").as[String].collect()
-    assert(dels.toSeq == Seq(cid), s"container delete must feed pre-images, got ${dels.toSeq}")
-    assert(feed.filter($"_change_type" === "insert").isEmpty)
-    // chunks feed too, and only for the deleted container
-    val chunkDels = graft.store.TxLog.readChanges(spark, wh, "chunks", fromVersion = v0)
-      .filter($"_change_type" === "delete").select("container_id").as[String].collect()
-    assert(chunkDels.nonEmpty && chunkDels.forall(_ == cid))
-    // surviving container intact
-    assert(s.getDocument(keep, "/k.txt").nonEmpty)
-  }
-
-  test("tx: transactional=true over a populated plain warehouse ADOPTS the data") {
-    val wh = java.nio.file.Files.createTempDirectory("graft-kstxad").toString
-    // a plain-parquet warehouse accumulates documents first
-    val plain = new KnowledgeStore(spark, wh,
-      cfg = graft.model.ChunkingConfig(maxChunkSize = 40, overlap = 5, minChunkSize = 5))
-    val cid = plain.createContainer("adopt-me")
-    plain.bulkUpload(cid, Seq(
-      ("/a.txt", "alpha beta gamma delta epsilon zeta"),
-      ("/b.txt", "one two three four five six seven")))
-    assert(!graft.store.TxLog.exists(spark, wh))
-    // flipping to transactional must NOT hide the existing documents
-    // behind an empty initial commit — the files are adopted into it
-    val tx = new KnowledgeStore(spark, wh,
-      cfg = graft.model.ChunkingConfig(maxChunkSize = 40, overlap = 5, minChunkSize = 5),
-      transactional = true)
-    assert(graft.store.TxLog.exists(spark, wh))
-    assert(tx.listFiles(cid).map(_._2).sorted == Seq("/a.txt", "/b.txt"))
-    assert(tx.getDocument(cid, "/a.txt").nonEmpty)
-    assert(tx.containerStats(cid)("documents") == 2)
-    // and the adopted warehouse keeps working transactionally: an upsert
-    // replaces through the log
-    tx.uploadFile(cid, "/a.txt", "alpha beta gamma delta epsilon replaced")
-    assert(tx.getDocument(cid, "/a.txt").get.contains("replaced"))
-    assert(tx.containerStats(cid)("documents") == 2)
   }
 }

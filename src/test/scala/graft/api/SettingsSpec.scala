@@ -25,7 +25,7 @@ class SettingsSpec extends AnyFunSuite {
 
   private def stampOf(cid: String, path: String): Map[String, String] = {
     import org.apache.spark.sql.functions.col
-    spark.read.parquet(s"$wh/ledger")
+    graft.store.TxLog.read(spark, wh, "ledger")
       .filter(col("container_id") === cid && col("path") === path)
       .select("indexed_with")
       .collect().head.getMap[String, String](0).toMap
@@ -33,7 +33,7 @@ class SettingsSpec extends AnyFunSuite {
 
   private def maxTokens(cid: String, path: String): Int = {
     import org.apache.spark.sql.functions.col
-    spark.read.parquet(s"$wh/chunks")
+    graft.store.TxLog.read(spark, wh, "chunks")
       .filter(col("container_id") === cid && col("path") === path)
       .select("token_count")
       .collect().map(_.getInt(0)).max
@@ -100,7 +100,7 @@ class SettingsSpec extends AnyFunSuite {
     assert(counts.getOrElse("Unchanged", 0L) == 2L, counts.toString)
     // generation bumped by the upsert path
     import org.apache.spark.sql.functions.col
-    val gen = spark.read.parquet(s"$wh/ledger")
+    val gen = graft.store.TxLog.read(spark, wh, "ledger")
       .filter(col("container_id") === cidA && col("path") === "/docs/before.txt")
       .select("generation").collect().head.getInt(0)
     assert(gen == 2)
@@ -115,7 +115,7 @@ class SettingsSpec extends AnyFunSuite {
     assert(counts.getOrElse("SettingsChanged", 0L) == 2L, counts.toString)
     assert(store.reindexStale(cidA) == 2)
     import org.apache.spark.sql.functions.col
-    val dims = spark.read.parquet(s"$wh/vectors")
+    val dims = graft.store.TxLog.read(spark, wh, "vectors")
       .filter(col("container_id") === cidA)
       .groupBy("model_id").count()
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
