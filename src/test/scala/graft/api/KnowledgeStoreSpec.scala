@@ -24,18 +24,17 @@ class PathUtilSpec extends AnyFunSuite {
 }
 
 /** §2.12: the 11-tool query surface end-to-end over a temp warehouse on
-  * the TxLog commit log (the store's only storage engine), plus the
-  * guarantees only the log can give — one-commit upserts whose change
-  * feed reads as delete pre-images + insert post-images, snapshot-isolated
-  * deletes, adoption of a plain-parquet warehouse. */
-class KnowledgeStoreSpec extends AnyFunSuite {
+  * the TxLog commit log (the store's only storage engine). Runs twice:
+  * one long-lived store in [[KnowledgeStoreSpec]], and a store reopened
+  * over the same warehouse before every test in [[KnowledgeStoreTxSpec]] —
+  * every behavior must hold when the state comes back from the log alone. */
+abstract class KnowledgeStoreApiSuite extends AnyFunSuite {
   import TestSpark.spark
-  import spark.implicits._
 
-  private val smallChunks =
+  protected val smallChunks =
     graft.model.ChunkingConfig(maxChunkSize = 40, overlap = 5, minChunkSize = 5)
-  private val wh = java.nio.file.Files.createTempDirectory("graft-ks").toString
-  private lazy val store = new KnowledgeStore(spark, wh, cfg = smallChunks)
+  protected val wh = java.nio.file.Files.createTempDirectory("graft-ks").toString
+  protected def store: KnowledgeStore
 
   test("container create/list enforces unique names") {
     val id = store.createContainer("docs")
@@ -292,6 +291,17 @@ class KnowledgeStoreSpec extends AnyFunSuite {
     assert(graft.ingest.CountingEmbedder.calls.get() == 0,
       "second upload should hit the embed cache")
   }
+}
+
+/** The API suite on one long-lived store, plus the guarantees only the
+  * log can give — one-commit upserts whose change feed reads as delete
+  * pre-images + insert post-images, snapshot-isolated deletes, adoption of
+  * a plain-parquet warehouse. */
+class KnowledgeStoreSpec extends KnowledgeStoreApiSuite {
+  import TestSpark.spark
+  import spark.implicits._
+
+  protected lazy val store = new KnowledgeStore(spark, wh, cfg = smallChunks)
 
   test("transactional = false is rejected: the log is the only storage engine") {
     val dir = java.nio.file.Files.createTempDirectory("graft-ksplain").toString
@@ -473,6 +483,23 @@ class KnowledgeStoreSpec extends AnyFunSuite {
     tx.uploadFile(cid, "/a.txt", "alpha beta gamma delta epsilon replaced")
     assert(tx.getDocument(cid, "/a.txt").get.contains("replaced"))
     assert(tx.containerStats(cid)("documents") == 2)
+  }
+}
+
+/** The API suite again, with a NEW store opened over the warehouse before
+  * every test: containers, documents, folders and the change made by the
+  * previous test must all be recovered from the commit log and the
+  * registry tables, not from an instance's in-memory state (settings
+  * cache, serving index). */
+class KnowledgeStoreTxSpec extends KnowledgeStoreApiSuite {
+  import TestSpark.spark
+
+  @volatile private var opened: KnowledgeStore = _
+  protected def store: KnowledgeStore = opened
+
+  override def withFixture(test: NoArgTest) = {
+    opened = new KnowledgeStore(spark, wh, cfg = smallChunks)
+    super.withFixture(test)
   }
 }
 
