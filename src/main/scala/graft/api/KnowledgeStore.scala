@@ -16,10 +16,15 @@ import org.apache.spark.sql.functions._
   * queries pay Spark job latency, not scan latency (BASELINE translation:
   * steady-state hybrid latency over cached index frames).
   *
-  * Storage is the partitioned parquet warehouse (IndexBuild layout) under
-  * the `store/TxLog` commit log: chunks/vectors/ledger change only by log
-  * commits. An UPSERT (replace + append across all three tables) is ONE
-  * atomic commit (the reference's Postgres transaction, ref
+  * Storage is a parquet warehouse under the `store/TxLog` commit log. Its
+  * root holds `_txlog`, the three logged tables chunks/vectors/ledger
+  * (partitioned by container_id; vectors also by model_id), the registry
+  * tables and the embed cache — nothing else: the keyword index is the
+  * serving cache built from chunks, not a stored table. This store's
+  * ingest (chunk → embed → ledger, [[graft.ingest.IndexBuild]]'s stages)
+  * is the engine's batch writer of the logged tables, and they change
+  * only by log commits. An UPSERT (replace + append across all three
+  * tables) is ONE atomic commit (the reference's Postgres transaction, ref
   * PgVectorStore.cs:144-184), deletes are stats-pruned copy-on-write
   * commits, and readers get snapshot isolation, the change feed and time
   * travel. Containers are partition values, so create/delete are
@@ -93,12 +98,14 @@ final class KnowledgeStore(
     try spark.read.parquet(path) catch { case _: Throwable => empty }
 
   /** Data-table reader at the log's current snapshot (staged or
-    * logically-removed files are invisible); a table with no live files
-    * reads as empty. */
-  private def managed(table: String): DataFrame =
-    try TxLog.read(spark, warehouse, table)
-    // only "no live files" reads as empty; real failures propagate
-    catch { case _: org.apache.spark.sql.AnalysisException => spark.emptyDataFrame }
+    * logically-removed files are invisible). Only a table with no live
+    * files reads as empty; a logged file missing on disk throws, so a
+    * damaged table never passes for an empty container. */
+  private def managed(table: String): DataFrame = {
+    val snap = TxLog.snapshot(spark, warehouse)
+    if (snap.files(table).isEmpty) spark.emptyDataFrame
+    else TxLog.readAt(spark, warehouse, table, snap)
+  }
 
   private def chunksDf: DataFrame = managed("chunks")
   private def vectorsDf: DataFrame = managed("vectors")
@@ -192,10 +199,11 @@ final class KnowledgeStore(
   /** Document count per container in ONE grouped job — the listing
     * surface's companion (per-container [[containerStats]] calls from a
     * listing are an N+1: K containers = K ledger scans). */
-  def documentCounts(): Map[String, Long] =
-    try ledgerDf.groupBy("container_id").count()
-      .as[(String, Long)].collect().toMap
-    catch { case _: org.apache.spark.sql.AnalysisException => Map.empty }
+  def documentCounts(): Map[String, Long] = {
+    val led = ledgerDf
+    if (!led.columns.contains("container_id")) Map.empty
+    else led.groupBy("container_id").count().as[(String, Long)].collect().toMap
+  }
 
   /** Write-permission check (ref ContainerWriteGuard.cs:12-30). */
   def isWritable(containerId: String): Boolean =
@@ -209,8 +217,7 @@ final class KnowledgeStore(
   /** container_delete (ref :64): removes the container's chunk/vector/
     * ledger files from the log in ONE commit whose change feed carries
     * the rows as delete pre-images (the bytes stay for time travel until
-    * [[maintain]]'s vacuum), drops the derived postings/term_stats
-    * partitions, and drops its folder rows (container ids are
+    * [[maintain]]'s vacuum), and drops its folder rows (container ids are
     * name-derived UUIDs, so a recreated same-named container would
     * otherwise inherit ghost folders). */
   def deleteContainer(containerId: String): Unit = {
@@ -247,13 +254,6 @@ final class KnowledgeStore(
     if (removes.nonEmpty)
       commit(Nil, removes, deletes = removes.map(_.table).distinct
         .map(_ -> s"(container_id = '$containerId')").toMap)
-    // the derived postings/term_stats are unlogged: dropped physically
-    Seq("postings", "term_stats").foreach { t =>
-      val p = s"$warehouse/$t/container_id=$containerId"
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI(p), spark.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(p), true)
-    }
     // registry + folders rewrite as Spark jobs (temp dir + swap): these
     // tables are metadata-sized, but rows never funnel through the
     // driver, so a deployment that accretes millions of folders pays a
@@ -761,12 +761,12 @@ final class KnowledgeStore(
     job.emit("chunked", job.total, s"chunks=${newChunks.count()}")
     job.emit("embedded", job.total, s"vectors=${vectors.count()}")
     // write-back: fresh embeddings join the shared content-hash cache so
-    // re-uploading identical content skips the embedder (IndexBuild.build
-    // refreshes the cache wholesale; the API path appends increments —
-    // the cache reader dropDuplicates on content_hash). The cache is an
-    // optimization table: plain parquet, outside the log. A bounded
-    // batch's increment coalesces: the dropDuplicates shuffle otherwise
-    // fans it into shuffle-partition-many tiny files per upload.
+    // re-uploading identical content skips the embedder (each ingest
+    // appends its increment; the cache reader dropDuplicates on
+    // content_hash). The cache is an optimization table: plain parquet,
+    // outside the log. A bounded batch's increment coalesces: the
+    // dropDuplicates shuffle otherwise fans it into shuffle-partition-many
+    // tiny files per upload.
     val cache = vectors.select("content_hash", "model_id", "dimensions", "embedding")
       .dropDuplicates("content_hash")
     writeParts.fold(cache)(n => cache.coalesce(n))
@@ -962,8 +962,9 @@ final class KnowledgeStore(
     // a fully-emptied warehouse has no ledger table at all (the last
     // delete removes the only partition): that is an EMPTY listing, not
     // an analysis error
-    if (!ledgerDf.columns.contains("path")) return Seq.empty
-    var df = ledgerDf.filter(col("container_id") === containerId)
+    val led = ledgerDf
+    if (!led.columns.contains("path")) return Seq.empty
+    var df = led.filter(col("container_id") === containerId)
     pathPrefix.foreach(p => df = df.filter(col("path").startsWith(p)))
     df.select($"document_id", $"path", $"chunk_count")
       .orderBy("path")
@@ -1052,8 +1053,9 @@ final class KnowledgeStore(
   /** get_document (ref :546): reconstruct extracted text from chunks. */
   def getDocument(containerId: String, path: String): Option[String] = {
     val norm = graft.ingest.PathUtil.normalize(path)
-    if (!chunksDf.columns.contains("path")) return None // emptied warehouse
-    val rows = chunksDf
+    val chunks = chunksDf
+    if (!chunks.columns.contains("path")) return None // emptied warehouse
+    val rows = chunks
       .filter(col("container_id") === containerId && col("path") === norm)
       .select("chunk_index", "start_offset", "end_offset", "content")
       .as[(Int, Int, Int, String)].collect()
@@ -1064,9 +1066,10 @@ final class KnowledgeStore(
 
   /** container_stats (ref :670, A1): counts by status, chunk/byte sums. */
   def containerStats(containerId: String): Map[String, Long] = {
-    if (!ledgerDf.columns.contains("container_id")) // emptied warehouse
+    val all = ledgerDf
+    if (!all.columns.contains("container_id")) // emptied warehouse
       return Map("documents" -> 0L, "chunks" -> 0L, "bytes" -> 0L)
-    val led = ledgerDf.filter(col("container_id") === containerId)
+    val led = all.filter(col("container_id") === containerId)
     if (led.isEmpty) return Map("documents" -> 0L, "chunks" -> 0L, "bytes" -> 0L)
     val row = led.agg(
       count(lit(1)).as("documents"),
@@ -1263,18 +1266,18 @@ final class KnowledgeStore(
   // ---- maintenance ------------------------------------------------------
 
   /** The warehouse's NIGHTLY JOB in one call (the reference runs these as
-    * periodic background services — compaction-style cleanup, index
-    * refresh; ref IngestionPipeline periodic rescan). Per table: compact
-    * when fragmented past `maxFilesPerTable` OR when deletion-vector
-    * masks are pending (compaction materializes them; the store's own
+    * periodic background services — compaction-style cleanup; ref
+    * IngestionPipeline periodic rescan). Per table: compact when
+    * fragmented past `maxFilesPerTable` OR when deletion-vector masks are
+    * pending (compaction materializes them; the store's own
     * deletes are copy-on-write, but other log writers such as
     * `TxLogSink.mergeDV` or `TxLog.deleteWhereDV` leave masks); then
-    * refresh the derived postings/term_stats from the live chunk set,
     * CHECKPOINT the log (snapshot fold stays O(recent)), vacuum data
     * files past `vacuumRetentionMs`, and optionally expire the
     * checkpoint-covered log history. Returns an action report for the
-    * operator's log line. Serving caches invalidate at the end — the next
-    * query rebuilds over the compacted layout. */
+    * operator's log line. The serving cache (the store's only keyword
+    * index) invalidates at the end — the next query rebuilds it over the
+    * compacted layout. */
   def maintain(
       maxFilesPerTable: Int = 64,
       vacuumRetentionMs: Long = 7L * 24 * 3600 * 1000,
@@ -1288,18 +1291,6 @@ final class KnowledgeStore(
           view = _.repartition(pb.map(col): _*))
         report += s"compact_$t" -> s"v$v"
       }
-    }
-    // derived-index refresh (PostingsIndex.refresh handles generation
-    // resolution); ONLY the empty/missing-table read skips quietly — a
-    // genuine refresh failure (corrupt table, schema drift) lands in the
-    // report so the nightly job never claims success over a stale index
-    try {
-      graft.search.PostingsIndex.refresh(spark, warehouse)
-      report += "postings" -> "refreshed"
-    } catch {
-      case _: org.apache.spark.sql.AnalysisException => () // no chunks yet
-      case e: Exception =>
-        report += "postings" -> s"failed: ${e.getMessage}"
     }
     // the INCREMENTAL writer (previous checkpoint + delta as a Spark
     // job): driver memory ∝ commits-since-last-checkpoint, never live

@@ -4,16 +4,15 @@ import graft.chunk.{Chunker, Chunkers}
 import graft.embed.Embedder
 import graft.model._
 import graft.text.{PorterStemmer, Stopwords, Tokenizer}
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
-/** Index-build batch job — the Spark form of the reference's ingestion
-  * pipeline (SURVEY §3.2): scan -> parse -> chunk -> embedding-cache join
-  * (J4) -> embed misses -> write chunks + vectors + ledger, partitioned by
-  * container_id for partition pruning (§4.1). Idempotent per
-  * (container_id, document_id): rewriting a document's partition replaces
-  * its chunks, which is the upsert/generation story without a database
-  * (SURVEY §7.4).
+/** The stages of the ingest pipeline — the Spark form of the reference's
+  * ingestion pipeline (SURVEY §3.2): parse -> chunk -> embedding-cache
+  * join (J4) -> embed misses -> ledger rows. Writing is the callers' part:
+  * `KnowledgeStore`'s ingest and `StreamingIngest.upsertBatch` commit
+  * these frames through `store/TxLog`, partitioned by container_id for
+  * partition pruning (§4.1).
   */
 object IndexBuild {
 
@@ -135,8 +134,8 @@ object IndexBuild {
     val all =
       if (cache.isDefined) withPre.unionByName(cached).unionByName(embedded)
       else withPre.unionByName(embedded)
-    // LSH bucket columns ride with every vector row (written by ALL
-    // producers — batch build, API appends, streaming — so the ANN rewrite
+    // LSH bucket columns ride with every vector row (written by every
+    // producer — the store's ingest and streaming — so the ANN rewrite
     // rule can prefilter any vector scan)
     graft.functions.AnnTopKRewrite.withBucketColumns(
       all
@@ -145,74 +144,8 @@ object IndexBuild {
       embedder.dimensions)
   }
 
-  /** Full build: writes `chunks/`, `vectors/`, `embed_cache/`, `ledger/`
-    * under the warehouse dir, all partitioned by container_id (vectors
-    * additionally by model_id for P4 pruning).
-    */
-  def build(
-      spark: SparkSession,
-      docs: Dataset[RawDoc],
-      warehouse: String,
-      chunkerName: String = "recursive",
-      cfg: ChunkingConfig = ChunkingConfig(),
-      embedder: Embedder = graft.embed.HashEmbedder()): Unit = {
-    val chunker = Chunkers.forName(chunkerName, embedder)
-    val chunks = chunkDocs(docs, chunker, cfg).persist()
-
-    val cachePath = s"$warehouse/embed_cache"
-    val cache =
-      try Some(spark.read.parquet(cachePath)) catch { case _: Throwable => None }
-    val vectors = embedChunks(chunks, cache, embedder)
-
-    // a full rebuild of a TxLog-managed warehouse must truncate THROUGH
-    // the log (one commit: remove every live file, add the rebuild's) or
-    // log-aware readers would keep resolving the stale snapshot; log-less
-    // warehouses keep the plain overwrite
-    if (graft.store.TxLog.exists(spark, warehouse)) {
-      val snap = graft.store.TxLog.snapshot(spark, warehouse)
-      val adds =
-        graft.store.TxLog.stageWrite(chunks.drop("precomputed").toDF(),
-          warehouse, "chunks", Seq("container_id"), snap.version + 1) ++
-        graft.store.TxLog.stageWrite(vectors.toDF(),
-          warehouse, "vectors", Seq("container_id", "model_id"), snap.version + 1)
-      val removes = Seq("chunks", "vectors").flatMap(t =>
-        snap.files(t).map { case (rel, _) => graft.store.TxLog.Remove(t, rel) })
-      graft.store.TxLog.commit(spark, warehouse, adds, removes)
-      graft.store.TxLog.vacuum(spark, warehouse, retentionMs = 0L)
-    } else {
-      chunks.drop("precomputed")
-        .write.mode(SaveMode.Overwrite)
-        .partitionBy("container_id")
-        .parquet(s"$warehouse/chunks")
-      vectors.write.mode(SaveMode.Overwrite)
-        .partitionBy("container_id", "model_id")
-        .parquet(s"$warehouse/vectors")
-    }
-
-    // inverted postings + term stats (the GIN analog, SURVEY §4.3)
-    graft.search.PostingsIndex.write(
-      graft.store.TxLog.read(spark, warehouse, "chunks"), warehouse)
-
-    // refresh the embedding cache (memoization table, §4.1)
-    spark.read.parquet(s"$warehouse/vectors")
-      .select("content_hash", "model_id", "dimensions", "embedding")
-      .dropDuplicates("content_hash", "model_id", "dimensions")
-      .write.mode(SaveMode.Overwrite).parquet(cachePath)
-
-    // document ledger: status + chunk_count + settings stamp (T5/T6)
-    val stamp = Map(
-      "IndexedWith:Chunker" -> chunkerName,
-      "IndexedWith:MaxChunkSize" -> cfg.maxChunkSize.toString,
-      "IndexedWith:Overlap" -> cfg.overlap.toString,
-      "IndexedWith:Model" -> embedder.modelId)
-    ledgerRows(chunks, docs, stamp, lit(1)).write.mode(SaveMode.Overwrite)
-      .partitionBy("container_id")
-      .parquet(s"$warehouse/ledger")
-    chunks.unpersist()
-  }
-
   /** The document ledger of freshly chunked documents — the one recipe
-    * every producer writes (this build, the API upsert, the first crawl):
+    * the store's ingest writes (uploads, reindexes, first crawls):
     * one row per document with its chunk count, the sha-256 and byte
     * length of its parsed content, status "Ready", the settings `stamp`
     * (IndexedWith:*, what Reindex.classify compares against) and
@@ -229,73 +162,4 @@ object IndexBuild {
       .withColumn("status", lit("Ready"))
       .withColumn("generation", generation.cast("int"))
       .withColumn("indexed_with", typedLit(stamp))
-
-  /** Load the warehouse as a search index (vectors hydrated with path for
-    * P3 scoping; postings attached when present). */
-  def loadIndex(spark: SparkSession, warehouse: String): graft.search.HybridSearch.Index = {
-    val chunks = graft.store.TxLog.read(spark, warehouse, "chunks")
-    val vectors = graft.store.TxLog.read(spark, warehouse, "vectors")
-    val postings =
-      try Some(spark.read.parquet(s"$warehouse/postings"))
-      catch { case _: Throwable => None }
-    val termStats =
-      try Some(spark.read.parquet(s"$warehouse/term_stats"))
-      catch { case _: Throwable => None }
-    graft.search.HybridSearch.Index(
-      chunks,
-      vectors.join(chunks.select("chunk_id", "path"), Seq("chunk_id")),
-      postings,
-      termStats)
-  }
-
-  /** Co-bucketed physical layout for index-wide equi-joins: chunks and
-    * vectors bucketed AND sorted on chunk_id into catalog tables (`bucketBy`
-    * requires `saveAsTable`; `path` keeps the data at the warehouse dir).
-    *
-    * With matching bucket count + column on both sides, a join on chunk_id
-    * plans as a SortMergeJoin with NO Exchange and NO Sort on either side
-    * (BucketedJoinSpec pins this). The path-partitioned layout `build`
-    * writes is right for container-pruned queries, where the probe side is
-    * a tiny top-k and broadcasts; this layout is for the index-wide joins —
-    * J1 hydration of every vector, the embed-cache refresh, postings
-    * rebuilds — where at 100 TB both sides would otherwise shuffle the
-    * whole corpus every run.
-    *
-    * To also elide the per-bucket Sort under the merge join, readers set
-    * `spark.sql.legacy.bucketedTableScan.outputOrdering=true`: Spark stopped
-    * trusting bucket sort order by default because multi-file buckets only
-    * sort within files — this writer guarantees ONE file per bucket (the
-    * repartition below), which is exactly the case the flag is safe for.
-    */
-  def writeBucketed(
-      chunks: DataFrame,
-      vectors: DataFrame,
-      path: String,
-      prefix: String,
-      nBuckets: Int = 64): Unit = {
-    def save(df: DataFrame, name: String): Unit =
-      // repartition on the bucket column first: the writer's bucket hash is
-      // the same murmur3 as the shuffle's, so each task holds exactly one
-      // bucket → one file per bucket. That keeps file count = nBuckets (not
-      // nTasks × nBuckets) and lets the scan trust sortBy order, which is
-      // what eliminates the Sort under the merge join.
-      df.repartition(nBuckets, col("chunk_id"))
-        .write.mode(SaveMode.Overwrite)
-        .bucketBy(nBuckets, "chunk_id").sortBy("chunk_id")
-        .option("path", s"$path/$name")
-        .format("parquet")
-        .saveAsTable(s"${prefix}_$name")
-    save(chunks, "chunks")
-    save(vectors, "vectors")
-  }
-
-  /** Load the bucketed layout as a search index; the hydration join is
-    * shuffle-free by construction. */
-  def loadBucketedIndex(spark: SparkSession, prefix: String): graft.search.HybridSearch.Index = {
-    val chunks = spark.table(s"${prefix}_chunks")
-    val vectors = spark.table(s"${prefix}_vectors")
-    graft.search.HybridSearch.Index(
-      chunks,
-      vectors.join(chunks.select("chunk_id", "path"), Seq("chunk_id")))
-  }
 }

@@ -1,19 +1,16 @@
 package graft.search
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Inverted postings index — the at-scale physical design for the keyword
-  * leg (SURVEY §4.3; the GIN-index analog). The scan leg touches every
-  * chunk's token arrays per query; the postings leg turns a keyword query
-  * into an equi-join against a term-keyed table, so work scales with the
-  * posting lists of the queried terms, not the corpus.
+/** Inverted postings as a batch operator (SURVEY §4.3; the GIN-index
+  * analog): the keyword leg as an equi-join against a term-keyed frame,
+  * so work scales with the posting lists of the queried terms, not the
+  * corpus. q61 builds postings over its documents and answers through
+  * [[leg]]; the product's keyword index is the serving cache
+  * (`HybridSearch.servingIndex`), and nothing stores postings.
   *
-  * Layout: `postings/` rows (container_id, config, term, chunk_id,
-  * positions array<int>) partitioned by container_id and repartitioned on
-  * term within each write (term-locality for the join); `term_stats/`
-  * (container_id, config, term, df) supports query planning (rare-term
-  * first) and IDF-style ranking extensions.
+  * Rows: (container_id, config, term, chunk_id, positions array<int>).
   */
 object PostingsIndex {
 
@@ -43,39 +40,6 @@ object PostingsIndex {
       .groupBy("container_id", "config", "term", "chunk_id")
       .agg(sort_array(collect_list("pos")).as("positions"))
 
-  def termStats(postings: DataFrame): DataFrame =
-    postings.groupBy("container_id", "config", "term")
-      .agg(count(lit(1)).as("df"))
-
-  /** Write both tables under the warehouse. */
-  def write(chunks: DataFrame, warehouse: String): Unit = {
-    val p = build(chunks)
-      // term-locality inside each container partition: co-locates a term's
-      // posting list in few files (the bucketing stand-in)
-      .repartition(col("container_id"), col("term"))
-    p.write.mode(SaveMode.Overwrite).partitionBy("container_id")
-      .parquet(s"$warehouse/postings")
-    termStats(p).write.mode(SaveMode.Overwrite).partitionBy("container_id")
-      .parquet(s"$warehouse/term_stats")
-  }
-
-  /** Rebuild postings + term_stats from the LIVE chunk set. Postings are a
-    * derived index: streaming upserts append chunks without touching them
-    * (the ingest hot path stays write-only), so a streamed warehouse's
-    * postings go stale until this compaction-style job runs — the same
-    * offline cadence as `StreamingIngest.compact`. Until refreshed, the
-    * scan leg (which reads chunks directly) stays exact; serving stacks
-    * that load postings should refresh alongside compaction. */
-  def refresh(spark: org.apache.spark.sql.SparkSession, warehouse: String): Unit = {
-    val chunks = graft.store.TxLog.read(spark, warehouse, "chunks")
-    val live =
-      if (chunks.columns.contains("generation"))
-        graft.streaming.StreamingIngest.latest(chunks)
-          .drop("generation")
-      else chunks
-    write(live, warehouse)
-  }
-
   /** Keyword leg over postings: single-term atoms, OR-groups, negation,
     * AND phrase atoms — adjacency is computed FROM the stored position
     * lists (phrase start positions = positions(w1) ∩ (positions(w2)−1)
@@ -88,27 +52,15 @@ object PostingsIndex {
     * broadcast equi-join into postings → per-(chunk, group) position union
     * → AND check (all groups present) → cover-density rank → top-k.
     *
-    * Two plan-level prunings:
-    *  - an explicit `term IN (...)` filter on the postings side. A
-    *    broadcast join alone cannot prune the probe scan; the literal IN
-    *    reaches parquet `PushedFilters` (dictionary/row-group skipping) on
-    *    a warehouse postings table, and pushes beneath the build
-    *    aggregation when postings are composed lazily in-plan.
-    *  - rare-term-first planning over [[termStats]] (when supplied): the
-    *    AND-group with the smallest total df bounds the candidate set, and
-    *    the other groups' postings semi-join on those chunk ids BEFORE the
-    *    position aggregation — the classic probe-the-rarest-list-first
-    *    inverted-index plan. Output is identical (chunks lacking the
-    *    rarest group could never satisfy `matched == nGroups`); only the
-    *    aggregated volume shrinks. AQE broadcasts the candidate set when
-    *    it is small, which df-of-the-rarest-term guarantees.
+    * An explicit `term IN (...)` filter on the postings side prunes the
+    * probe: a broadcast join alone cannot, and the literal IN pushes
+    * beneath the build aggregation when postings are composed in-plan.
     */
   def leg(
       postings: DataFrame,
       chunks: DataFrame,
       query: WebsearchParser.ParsedQuery,
       k: Int,
-      termStats: Option[DataFrame] = None,
       rankFn: String = "cover_density"): DataFrame = {
     val spark = postings.sparkSession
     import spark.implicits._
@@ -178,33 +130,14 @@ object PostingsIndex {
 
     val lookupDf = broadcast(lookups.toDF("term", "config", "gi"))
     val base = scoped.join(lookupDf, Seq("term", "config"))
-    val pruned = termStats match {
-      case Some(stats) if nGroups > 1 && lookups.nonEmpty =>
-        // df per query term (tiny collect: <= #query terms rows after the
-        // pushed-down IN), summed per OR-group; absent terms df=0.
-        // Rarest-first pruning only considers groups with TERM lookups —
-        // a phrase-only group's candidates come from the phrase rows and
-        // must not masquerade as an (empty) rarest term group.
-        val dfs = stats.filter(col("term").isin(lookups.map(_._1).distinct: _*))
-          .groupBy("term").agg(sum("df").as("df"))
-          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-        val termGis = lookups.map(_._3).distinct
-        val rarestGi = termGis.minBy { gi =>
-          lookups.filter(_._3 == gi).map(l => dfs.getOrElse(l._1, 0L)).sum
-        }
-        val candIds = base.filter(col("gi") === rarestGi)
-          .select("chunk_id").distinct()
-        base.join(candIds, Seq("chunk_id"), "left_semi")
-      case _ => base
-    }
     // phrase groups join the same per-(chunk, group) position union: a
     // phrase's START positions behave exactly like a term's positions
     val groupRows = phraseRows match {
       case Some(pr) =>
-        pruned.select(col("chunk_id"), col("gi"), col("positions"))
+        base.select(col("chunk_id"), col("gi"), col("positions"))
           .unionByName(pr.filter(col("gi") >= 0)
             .select(col("chunk_id"), col("gi"), col("pos").as("positions")))
-      case None => pruned.select(col("chunk_id"), col("gi"), col("positions"))
+      case None => base.select(col("chunk_id"), col("gi"), col("positions"))
     }
     val candidates = groupRows
       .groupBy("chunk_id", "gi")
@@ -255,9 +188,4 @@ object PostingsIndex {
       .limit(k)
       .join(chunks.select("chunk_id", "document_id", "content", "metadata"), Seq("chunk_id"))
   }
-
-  /** Postings serve every websearch query shape — phrase adjacency is
-    * reconstructed from the stored position lists (round 7; previously
-    * phrases routed to the scan leg). */
-  def supports(query: WebsearchParser.ParsedQuery): Boolean = true
 }

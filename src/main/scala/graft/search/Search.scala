@@ -358,16 +358,12 @@ object HybridSearch {
 
   /** Index handles: chunk + vector DataFrames (pre-filtered caches are the
     * caller's choice; filters here prune partitions by container/model).
-    * When a postings table is present, phrase-free keyword queries use the
-    * inverted-index leg instead of scanning token arrays (SURVEY §4.3).
     * `serving`, when present, routes interactive queries to the
     * planning-free RDD legs ([[ServingCache]]).
     */
   final case class Index(
       chunks: DataFrame,
       vectors: DataFrame,
-      postings: Option[DataFrame] = None,
-      termStats: Option[DataFrame] = None,
       serving: Option[ServingCache] = None)
 
   /** Build the interactive serving index from warehouse frames: chunks
@@ -632,19 +628,7 @@ object HybridSearch {
         case Some(c) if req.rankFn == "cover_density" =>
           Future { keywordLegRdd(c, req, fetchK) }
         case _ => Future {
-          val parsed = WebsearchParser.parse(req.query)
-          // postings carry (container_id, term) only — doc/path-scoped
-          // requests and phrase queries route to the scan leg
-          val raw = index.postings match {
-            case Some(p) if PostingsIndex.supports(parsed) &&
-                req.documentId.isEmpty && req.pathPrefix.isEmpty =>
-              PostingsIndex.leg(p.filter(col("container_id") === req.containerId),
-                chunks, parsed, fetchK,
-                index.termStats.map(_.filter(col("container_id") === req.containerId)),
-                rankFn = req.rankFn)
-            case _ => KeywordSearch.leg(chunks, req.query, fetchK, rankFn = req.rankFn)
-          }
-          collectLeg(raw, "raw_k")
+          collectLeg(KeywordSearch.leg(chunks, req.query, fetchK, rankFn = req.rankFn), "raw_k")
         }
       }
     val vHits = Await.result(vectorF, Duration.Inf)

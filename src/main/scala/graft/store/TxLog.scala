@@ -903,7 +903,15 @@ object TxLog {
       atVersion: Long = Long.MaxValue): DataFrame = {
     if (!exists(spark, warehouse))
       return spark.read.parquet(s"$warehouse/$table")
-    val snap = snapshot(spark, warehouse, atVersion)
+    readAt(spark, warehouse, table, snapshot(spark, warehouse, atVersion))
+  }
+
+  /** Read one table at an already-folded snapshot: a caller that decides
+    * emptiness from `snap.files(table)` reads the same file set without a
+    * second fold. A table with no live files throws `PATH_NOT_FOUND`, as
+    * does a logged file that is missing on disk. */
+  def readAt(spark: SparkSession, warehouse: String, table: String,
+      snap: Snapshot): DataFrame = {
     val rels = snap.files(table).map(_._1)
     if (rels.isEmpty)
       throw new org.apache.spark.sql.AnalysisException(

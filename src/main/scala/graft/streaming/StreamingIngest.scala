@@ -328,43 +328,32 @@ object StreamingIngest {
     latest(df.filter(col("generation") <= generation))
 
   /** Compaction: rewrite the append-only table down to its latest
-    * generations. With a commit log this is the managed path: one atomic
-    * commit swaps old files for rewritten ones (readers racing it see the
-    * pre- or post-compaction snapshot, never a missing table), then
-    * vacuum physically deletes the unreferenced history. `retentionMs`
-    * is the grace window for in-flight readers; the default 0 keeps the
-    * offline-compaction contract (never concurrent with queries). Legacy
-    * log-less tables keep the old whole-directory rewrite.
+    * generations in one atomic log commit that swaps old files for
+    * rewritten ones (readers racing it see the pre- or post-compaction
+    * snapshot, never a missing table), then vacuum physically deletes the
+    * unreferenced history. `retentionMs` is the grace window for
+    * in-flight readers; the default 0 keeps the offline-compaction
+    * contract (never concurrent with queries). Every streamed table
+    * commits through [[upsertBatch]], so the warehouse has a log.
     */
   def compact(spark: SparkSession, path: String, partCols: Seq[String],
       retentionMs: Long = 0L): Unit = {
     val slash = path.lastIndexOf('/')
     val (warehouse, tableName) = (path.take(slash), path.drop(slash + 1))
-    if (graft.store.TxLog.exists(spark, warehouse)) {
-      // compaction is the right moment to harvest skipping structures
-      // (the bloom pass re-reads its column — free-ish here, never on
-      // the hot append path): document_id gets range stats + a Bloom
-      // sketch, so post-compaction point lookups (reindex delta checks,
-      // CRUD reads) prune to the owning files
-      val skipCols =
-        if (spark.read.parquet(path).columns.contains("document_id"))
-          Seq("document_id")
-        else Nil
-      graft.store.TxLog.compact(spark, warehouse, tableName, partCols, latest,
-        statsCols = skipCols, bloomCols = skipCols)
-      graft.store.TxLog.vacuum(spark, warehouse, retentionMs)
-      ()
-    } else {
-      val tmp = path + "_compact"
-      latest(spark.read.parquet(path))
-        .write.mode("overwrite").partitionBy(partCols: _*).parquet(tmp)
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI(tmp), spark.sparkContext.hadoopConfiguration)
-      val dst = new org.apache.hadoop.fs.Path(path)
-      fs.delete(dst, true)
-      fs.rename(new org.apache.hadoop.fs.Path(tmp), dst)
-      spark.catalog.refreshByPath(path)
-      org.apache.spark.sql.graftbridge.Bridge.invalidateFileStatusCache()
-    }
+    require(graft.store.TxLog.exists(spark, warehouse),
+      s"compact: $warehouse has no commit log")
+    // compaction is the right moment to harvest skipping structures
+    // (the bloom pass re-reads its column — free-ish here, never on
+    // the hot append path): document_id gets range stats + a Bloom
+    // sketch, so post-compaction point lookups (reindex delta checks,
+    // CRUD reads) prune to the owning files
+    val skipCols =
+      if (spark.read.parquet(path).columns.contains("document_id"))
+        Seq("document_id")
+      else Nil
+    graft.store.TxLog.compact(spark, warehouse, tableName, partCols, latest,
+      statsCols = skipCols, bloomCols = skipCols)
+    graft.store.TxLog.vacuum(spark, warehouse, retentionMs)
+    ()
   }
 }

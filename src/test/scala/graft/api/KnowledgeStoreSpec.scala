@@ -140,7 +140,7 @@ abstract class KnowledgeStoreApiSuite extends AnyFunSuite {
       .select("generation").collect()
     assert(rows.length == 1, s"expected 1 ledger row, got ${rows.length}")
     assert(rows.head.getInt(0) == 2)
-    // API-written ledger carries the same schema as IndexBuild.build
+    // the ledger carries the generation and the settings stamp
     assert(led.columns.contains("generation") && led.columns.contains("indexed_with"))
   }
 
@@ -402,8 +402,8 @@ class KnowledgeStoreSpec extends KnowledgeStoreApiSuite {
     assert(T.snapshot(spark, wh).dvsOf("chunks").isEmpty)
     assert(T.snapshot(spark, wh).dvsOf("ledger").isEmpty)
     assert(T.snapshot(spark, wh).files("chunks").size < nFilesBefore)
-    // checkpoint + vacuum + postings all ran
-    assert(report.get("postings").contains("refreshed"))
+    // checkpoint + vacuum ran; there is no stored keyword index to refresh
+    assert(!report.contains("postings"), report.toString)
     assert(report.contains("checkpoint") && report.contains("vacuum"))
     // the surface is intact: the deleted doc stays gone, the rest serve
     assert(s.getDocument(cid, "/d4.txt").isEmpty)
@@ -462,14 +462,28 @@ class KnowledgeStoreSpec extends KnowledgeStoreApiSuite {
 
   test("a store over a populated plain-parquet warehouse ADOPTS the data") {
     val wh = java.nio.file.Files.createTempDirectory("graft-kstxad").toString
-    // a log-less warehouse written by the plain IndexBuild batch job
+    // a log-less warehouse: the three tables written as plain parquet
+    // from the ingest stages, in the store's partition layout
     val cid = "adopt-me"
     def raw(path: String, body: String) = graft.ingest.IndexBuild.RawDoc(
       java.util.UUID.nameUUIDFromBytes(s"$cid:$path".getBytes("UTF-8")).toString,
       cid, path, path.stripPrefix("/"), body)
-    graft.ingest.IndexBuild.build(spark, Seq(
+    val docs = Seq(
       raw("/a.txt", "alpha beta gamma delta epsilon zeta"),
-      raw("/b.txt", "one two three four five six seven")).toDS(), wh, cfg = smallChunks)
+      raw("/b.txt", "one two three four five six seven")).toDS()
+    val embedder = graft.embed.HashEmbedder()
+    val chunks = graft.ingest.IndexBuild.chunkDocs(docs,
+      graft.chunk.Chunkers.forName("recursive", embedder), smallChunks)
+    chunks.drop("precomputed").write.partitionBy("container_id").parquet(s"$wh/chunks")
+    graft.ingest.IndexBuild.embedChunks(chunks, None, embedder)
+      .write.partitionBy("container_id", "model_id").parquet(s"$wh/vectors")
+    graft.ingest.IndexBuild.ledgerRows(chunks, docs,
+        Map("IndexedWith:Chunker" -> "recursive",
+          "IndexedWith:MaxChunkSize" -> smallChunks.maxChunkSize.toString,
+          "IndexedWith:Overlap" -> smallChunks.overlap.toString,
+          "IndexedWith:Model" -> embedder.modelId),
+        org.apache.spark.sql.functions.lit(1))
+      .write.partitionBy("container_id").parquet(s"$wh/ledger")
     assert(!graft.store.TxLog.exists(spark, wh))
     // opening a store must NOT hide the existing documents behind an
     // empty initial commit — the files are adopted into it
@@ -483,6 +497,39 @@ class KnowledgeStoreSpec extends KnowledgeStoreApiSuite {
     tx.uploadFile(cid, "/a.txt", "alpha beta gamma delta epsilon replaced")
     assert(tx.getDocument(cid, "/a.txt").get.contains("replaced"))
     assert(tx.containerStats(cid)("documents") == 2)
+  }
+
+  test("a logged ledger file missing on disk fails the readers, never reads as empty") {
+    val wh = java.nio.file.Files.createTempDirectory("graft-ksdmg").toString
+    val s = new KnowledgeStore(spark, wh, cfg = smallChunks)
+    val cid = s.createContainer("damaged")
+    s.uploadFile(cid, "/a.txt", "alpha beta gamma delta epsilon zeta")
+    assert(s.listFiles(cid).map(_._2) == Seq("/a.txt"))
+    val (rel, _) = graft.store.TxLog.snapshot(spark, wh).files("ledger").head
+    assert(new java.io.File(s"$wh/ledger/$rel").delete())
+    val name = rel.substring(rel.lastIndexOf('/') + 1)
+    Seq[() => Any](() => s.listFiles(cid), () => s.containerStats(cid),
+        () => s.documentCounts()).foreach { read =>
+      val e = intercept[org.apache.spark.sql.AnalysisException](read())
+      assert(e.getMessage.contains(name), e.getMessage)
+    }
+  }
+
+  test("the warehouse holds only the log, the logged tables, the registries and the embed cache") {
+    val wh = java.nio.file.Files.createTempDirectory("graft-kslayout").toString
+    val s = new KnowledgeStore(spark, wh, cfg = smallChunks)
+    val cid = s.createContainer("layout", connectorType = "Filesystem")
+    s.uploadFile(cid, "/a.txt", "alpha beta gamma delta epsilon zeta")
+    s.createFolder(cid, "/empty")
+    val report = s.maintain(vacuumRetentionMs = 0L)
+    assert(!report.contains("postings"), report.toString)
+    assert(report.contains("checkpoint") && report.contains("vacuum"), report.toString)
+    s.deleteContainer(cid)
+    // dot-prefixed entries are hidden working dirs, invisible to Spark
+    val root = new java.io.File(wh).list().filterNot(_.startsWith(".")).toSet
+    assert(Set("_txlog", "chunks", "vectors", "ledger", "embed_cache").subsetOf(root), root)
+    assert(root.subsetOf(Set("_txlog", "chunks", "vectors", "ledger",
+      "containers", "folders", "settings", "embed_cache")), root)
   }
 }
 

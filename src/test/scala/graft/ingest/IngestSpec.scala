@@ -42,21 +42,20 @@ class IndexBuildSpec extends AnyFunSuite {
     val docs = Seq(
       IndexBuild.RawDoc("d1", "cA", "/a/x.txt", "x.txt", "alpha beta gamma. " * 30),
       IndexBuild.RawDoc("d2", "cB", "/b/y.txt", "y.txt", "delta epsilon zeta. " * 30))
-      .toDS()
-    IndexBuild.build(spark, docs, wh,
+    graft.TestWarehouse.build(wh, docs,
       cfg = ChunkingConfig(maxChunkSize = 30, overlap = 5, minChunkSize = 5))
 
-    val chunks = spark.read.parquet(s"$wh/chunks")
+    val chunks = graft.store.TxLog.read(spark, wh, "chunks")
     assert(chunks.count() > 0)
     assert(chunks.select("container_id").distinct().as[String].collect().toSet == Set("cA", "cB"))
     // physical layout: container partitions exist on disk (partition pruning)
     assert(new java.io.File(s"$wh/chunks/container_id=cA").exists())
 
-    val vectors = spark.read.parquet(s"$wh/vectors")
+    val vectors = graft.store.TxLog.read(spark, wh, "vectors")
     assert(vectors.count() == chunks.count())
     assert(vectors.select("dimensions").distinct().as[Int].collect().toSeq == Seq(64))
 
-    val ledger = spark.read.parquet(s"$wh/ledger")
+    val ledger = graft.store.TxLog.read(spark, wh, "ledger")
     val led = ledger.orderBy("document_id").collect()
     assert(led.length == 2)
     assert(led.forall(_.getAs[String]("status") == "Ready"))
@@ -68,17 +67,18 @@ class IndexBuildSpec extends AnyFunSuite {
     val wh = java.nio.file.Files.createTempDirectory("graft-cache").toString
     val docs = Seq(
       IndexBuild.RawDoc("d1", "c", "/x.txt", "x.txt", "identical content here. " * 20))
-      .toDS()
-    IndexBuild.build(spark, docs, wh)
+    graft.TestWarehouse.build(wh, docs)
     val cache1 = spark.read.parquet(s"$wh/embed_cache").count()
     assert(cache1 > 0)
-    // rebuild: all embeddings must come from cache (counting via a tracking
+    // rebuild: the same content crawled into a second container must take
+    // all its embeddings from the cache (counting via a tracking
     // embedder). The counter is GLOBAL — reset it here, or whatever count a
     // previously-run suite left behind fails this assert (observed: the
     // streaming rename spec's final pass leaves its embed count)
     val counting = new CountingEmbedder
     CountingEmbedder.calls.set(0)
-    IndexBuild.build(spark, docs, wh, embedder = counting)
+    graft.TestWarehouse.build(wh, docs.map(_.copy(container_id = "c2")),
+      embedder = counting)
     assert(CountingEmbedder.calls.get() == 0, "rebuild should hit the embedding cache")
   }
 
@@ -87,9 +87,8 @@ class IndexBuildSpec extends AnyFunSuite {
     val docs = Seq(
       IndexBuild.RawDoc("d1", "c", "/dup_a.txt", "dup_a.txt", "same words every time."),
       IndexBuild.RawDoc("d2", "c", "/dup_b.txt", "dup_b.txt", "same words every time."))
-      .toDS()
-    IndexBuild.build(spark, docs, wh)
-    val vecs = spark.read.parquet(s"$wh/vectors")
+    graft.TestWarehouse.build(wh, docs)
+    val vecs = graft.store.TxLog.read(spark, wh, "vectors")
     assert(vecs.count() == 2) // one per chunk
     assert(vecs.select("content_hash").distinct().count() == 1)
     assert(spark.read.parquet(s"$wh/embed_cache").count() == 1)

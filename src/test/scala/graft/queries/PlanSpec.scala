@@ -70,15 +70,13 @@ class PlanSpec extends AnyFunSuite {
   // CosineSimilaritySpec over a join, where whole-stage codegen engages)
 
   test("container filter prunes warehouse partitions at plan time (P1)") {
-    import spark.implicits._
     val wh = java.nio.file.Files.createTempDirectory("graft-prune").toString
     val docs = Seq(
       graft.ingest.IndexBuild.RawDoc("d1", "cA", "/a/x.txt", "x.txt", "alpha beta gamma. " * 30),
       graft.ingest.IndexBuild.RawDoc("d2", "cB", "/b/y.txt", "y.txt", "delta epsilon zeta. " * 30))
-      .toDS()
-    graft.ingest.IndexBuild.build(spark, docs, wh,
+    graft.TestWarehouse.build(wh, docs,
       cfg = graft.model.ChunkingConfig(maxChunkSize = 30, overlap = 5, minChunkSize = 5))
-    val scoped = spark.read.parquet(s"$wh/chunks")
+    val scoped = graft.store.TxLog.read(spark, wh, "chunks")
       .filter(org.apache.spark.sql.functions.col("container_id") === "cA")
     val scan = scoped.queryExecution.executedPlan.collectFirst {
       case f: org.apache.spark.sql.execution.FileSourceScanExec => f

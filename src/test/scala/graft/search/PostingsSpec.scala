@@ -3,7 +3,6 @@ package graft.search
 import graft.TestSpark
 import graft.ingest.IndexBuild
 import graft.model.ChunkingConfig
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 class PostingsSpec extends AnyFunSuite {
@@ -20,9 +19,10 @@ class PostingsSpec extends AnyFunSuite {
         "nothing relevant in this one at all."),
       IndexBuild.RawDoc("d4", "c2", "/d.txt", "d.txt",
         "spark shuffle in another container."))
-      .toDS()
-    IndexBuild.chunkDocs(docs, graft.chunk.RecursiveChunker,
-      ChunkingConfig(maxChunkSize = 50, overlap = 0, minChunkSize = 2)).toDF()
+    val wh = java.nio.file.Files.createTempDirectory("graft-post").toString
+    graft.TestWarehouse.build(wh, docs,
+      cfg = ChunkingConfig(maxChunkSize = 50, overlap = 0, minChunkSize = 2))
+    graft.store.TxLog.read(spark, wh, "chunks")
   }
   private lazy val postings = PostingsIndex.build(chunks)
 
@@ -36,19 +36,10 @@ class PostingsSpec extends AnyFunSuite {
     assert(postings.filter($"config" === "english" && $"term" === "the").count() == 0)
   }
 
-  test("term stats count document frequency") {
-    // stats are per container: c1 has two chunks with "shuffle", c2 one
-    val stats = PostingsIndex.termStats(postings)
-      .filter($"term" === "shuffle" && $"config" === "simple")
-      .select("container_id", "df").as[(String, Long)].collect().toMap
-    assert(stats == Map("c1" -> 2L, "c2" -> 1L))
-  }
-
   test("postings leg agrees with the scan leg on non-phrase queries") {
     Seq("spark shuffle", "shuffle", "running", "spark -partitions",
       "spark OR running", "spark absentterm").foreach { q =>
       val parsed = WebsearchParser.parse(q)
-      assert(PostingsIndex.supports(parsed), q)
       val viaPostings = PostingsIndex.leg(postings, chunks, parsed, 10)
         .select("chunk_id", "raw_k").as[(String, Double)].collect().toMap
       val viaScan = KeywordSearch.leg(chunks, q, 10)
@@ -82,27 +73,7 @@ class PostingsSpec extends AnyFunSuite {
     }
   }
 
-  test("rare-term-first planning via term_stats changes nothing but the plan") {
-    val stats = PostingsIndex.termStats(postings)
-    Seq("spark shuffle", "spark shuffle -partitions", "spark OR running shuffle",
-      "spark absentterm").foreach { q =>
-      val parsed = WebsearchParser.parse(q)
-      val without = PostingsIndex.leg(postings, chunks, parsed, 10)
-        .select("chunk_id", "raw_k").as[(String, Double)].collect().toMap
-      val withStats = PostingsIndex.leg(postings, chunks, parsed, 10, Some(stats))
-        .select("chunk_id", "raw_k").as[(String, Double)].collect().toMap
-      assert(withStats == without, s"query '$q'")
-    }
-    // the planned leg carries the candidate semi-join
-    val plan = PostingsIndex.leg(postings, chunks,
-      WebsearchParser.parse("spark shuffle"), 10, Some(stats))
-      .queryExecution.optimizedPlan.toString
-    assert(plan.contains("LeftSemi"), plan.take(1200))
-  }
-
   test("phrase queries run on postings and agree with the scan leg (round 7)") {
-    assert(PostingsIndex.supports(WebsearchParser.parse("\"spark shuffle\"")))
-    val stats = PostingsIndex.termStats(postings)
     Seq(
       "\"spark shuffle\"",          // matching phrase
       "\"shuffle spark\"",          // reversed: adjacency must fail
@@ -113,15 +84,12 @@ class PostingsSpec extends AnyFunSuite {
       val parsed = WebsearchParser.parse(q)
       val viaPostings = PostingsIndex.leg(postings, chunks, parsed, 10)
         .select("chunk_id", "raw_k").as[(String, Double)].collect().toMap
-      val viaStats = PostingsIndex.leg(postings, chunks, parsed, 10, Some(stats))
-        .select("chunk_id", "raw_k").as[(String, Double)].collect().toMap
       val viaScan = KeywordSearch.leg(chunks, q, 10)
         .select("chunk_id", "raw_k").as[(String, Double)].collect().toMap
       assert(viaPostings.keySet == viaScan.keySet, s"query '$q'")
       viaPostings.foreach { case (id, r) =>
         assert(math.abs(r - viaScan(id)) < 1e-12, s"query '$q' chunk $id")
       }
-      assert(viaStats == viaPostings, s"rare-term planning changed results for '$q'")
     }
     // sanity on the fixture: the matching phrase finds d1, the reversal none
     assert(PostingsIndex.leg(postings, chunks,
@@ -138,45 +106,5 @@ class PostingsSpec extends AnyFunSuite {
       .select("chunk_id").as[String].collect()
     assert(hits.nonEmpty)
     assert(hits.forall(_.startsWith("d1")))
-  }
-
-  test("refresh rebuilds postings from the live generation set (streamed warehouse)") {
-    val wh = java.nio.file.Files.createTempDirectory("graft-post-refresh").toString
-    val cfg = ChunkingConfig(maxChunkSize = 50, overlap = 0, minChunkSize = 2)
-    val emb = graft.embed.HashEmbedder(16)
-    // generation 0: a doc that will be replaced; generation 1: its rewrite
-    graft.streaming.StreamingIngest.upsertBatch(spark,
-      Seq(IndexBuild.RawDoc("dS", "cs", "/s.txt", "s.txt",
-        "obsolete zeppelin words here")).toDS(), wh, "recursive", cfg, emb, generation = 0)
-    graft.streaming.StreamingIngest.upsertBatch(spark,
-      Seq(IndexBuild.RawDoc("dS", "cs", "/s.txt", "s.txt",
-        "fresh quasar terminology instead")).toDS(), wh, "recursive", cfg, emb, generation = 1)
-    PostingsIndex.refresh(spark, wh)
-    val postings = spark.read.parquet(s"$wh/postings")
-    // only the live generation's terms survive the rebuild
-    assert(postings.filter($"term" === "quasar").count() > 0)
-    assert(postings.filter($"term" === "zeppelin").count() == 0)
-    // and the postings leg retrieves the live content
-    val live = graft.streaming.StreamingIngest.latest(
-      spark.read.parquet(s"$wh/chunks"))
-    val hits = PostingsIndex.leg(postings, live,
-      WebsearchParser.parse("quasar"), 5)
-      .select("chunk_id").as[String].collect()
-    assert(hits.nonEmpty)
-  }
-
-  test("end-to-end: built warehouse uses the postings leg") {
-    val wh = java.nio.file.Files.createTempDirectory("graft-post").toString
-    val docs = Seq(
-      IndexBuild.RawDoc("dA", "cc", "/x.txt", "x.txt",
-        "keyword retrieval over inverted postings works fine."))
-      .toDS()
-    IndexBuild.build(spark, docs, wh)
-    val index = IndexBuild.loadIndex(spark, wh)
-    assert(index.postings.isDefined)
-    val hits = HybridSearch.search(index,
-      graft.model.SearchRequest("inverted postings", "cc", mode = "keyword", topK = 5),
-      graft.embed.HashEmbedder())
-    assert(hits.nonEmpty && hits.head.document_id == "dA")
   }
 }

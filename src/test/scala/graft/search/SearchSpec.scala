@@ -162,11 +162,10 @@ class HybridSearchE2ESpec extends AnyFunSuite {
           "Results are running through normalization first."),
       IndexBuild.RawDoc("doc-other", "c2", "/other/readme.txt", "readme.txt",
         "Chunk overlap appears here too but in another container entirely."))
-      .toDS()
-    IndexBuild.build(spark, docs, warehouse,
+    graft.TestWarehouse.build(warehouse, docs,
       cfg = ChunkingConfig(maxChunkSize = 40, overlap = 5, minChunkSize = 5),
       embedder = embedder)
-    IndexBuild.loadIndex(spark, warehouse)
+    graft.TestWarehouse.index(warehouse)
   }
 
   test("servingIndex returns identical hits across the request shapes") {
@@ -345,11 +344,10 @@ class HybridSearchE2ESpec extends AnyFunSuite {
       IndexBuild.RawDoc("d-dup2", "c1", "/m/b.txt", "b.txt", dupText),
       IndexBuild.RawDoc("d-other", "c1", "/m/c.txt", "c.txt",
         "alpha beta gamma discussed from an entirely different angle with new words"))
-      .toDS()
-    IndexBuild.build(spark, docs, wh,
+    graft.TestWarehouse.build(wh, docs,
       cfg = ChunkingConfig(maxChunkSize = 40, overlap = 5, minChunkSize = 5),
       embedder = embedder)
-    val idx = IndexBuild.loadIndex(spark, wh)
+    val idx = graft.TestWarehouse.index(wh)
     val req = SearchRequest("alpha beta gamma", "c1", topK = 3)
     val plain = HybridSearch.search(idx, req, embedder)
     // the two verbatim duplicates crowd the top without diversification
@@ -520,8 +518,7 @@ class HybridSearchE2ESpec extends AnyFunSuite {
     val mixed = HybridSearch.Index(
       index.chunks,
       index.vectors.select("chunk_id", "document_id", "container_id", "path",
-        "embedding", "model_id", "dimensions").unionByName(otherVecs),
-      index.postings)
+        "embedding", "model_id", "dimensions").unionByName(otherVecs))
     // searching with the 32-dim embedder must not throw and must rank as
     // before (16-dim rows excluded by the model filter)
     val hits = HybridSearch.search(mixed,
